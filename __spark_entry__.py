@@ -689,15 +689,6 @@ def q_most_frequent_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("var", "most_frequent")
 
 
-def q_most_frequent_fused_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as most_frequent_customer but through the FUSED
-    single-scan path (all columns' top-k in one explode→window pass) —
-    oracled by the identical SQL, so the two strategies are pinned equal."""
-    cust = _t(spark, sf_dir, "customer")
-    d = dv.describe(cust.select("c_nationkey", "c_mktsegment"), top_n=3, fused_topk=True)
-    return d.select("var", "most_frequent")
-
-
 def q_lsh_jaccard_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash→LSH candidate pairs verified by exact 3-gram Jaccard ≥ 0.7 —
     the scale path (band-bucket equi-join, hot-bucket cap), oracled against
@@ -1609,9 +1600,10 @@ def q_ledger_resume_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash_match driver row in CORRECTNESS_r04/r05.json and (b) surviving
 # coverage — a sibling gate exercising the same code path and/or dedicated
 # pytest tests.  The oracle SQL for each stays in oracle_sql()'s source for
-# the record; q_* functions remain importable for tests.
+# the record; q_* functions remain importable for tests unless the variant
+# they drove no longer exists.
 RETIRED_GATES: dict[str, str] = {
-    "most_frequent_fused_customer": "fused single-scan variant of most_frequent_customer; path kept green by tests/test_describe.py",
+    "most_frequent_fused_customer": "fused single-scan variant of most_frequent_customer; describe has since had one top-k (that single all-columns pass), so the variant no longer exists and its q_* function is gone; covered by describe_by_most_frequent and tests/test_describe.py",
     "near_dup_pairs_embeddings_udf": "dim-768 broadcast-numpy arm of near_dup_pairs_embeddings; adaptive-path equality pinned in tests/test_operators.py",
     "check_by_event_type": "same grouped fused-agg path as check_by_returnflag (different table only)",
     "suggest_rules_events": "induction path covered by suggest_rules_customer + suggest_rules_embeddings",

@@ -2,11 +2,13 @@
 
 One row per column: ``var, type, n, n_distinct, n_na, most_frequent, min,
 mean, median, max, sd``.  Follows the reference's own batched-collectibles
-strategy (R/describe.R:329-422): ALL columns' statistics are computed in a
-single ``df.agg`` with ``stat__col``-aliased outputs, then unpivoted on the
-driver — one scan regardless of column count.  ``most_frequent`` needs a
-per-column top-k groupBy (K small jobs, as in R/describe.R:498-532), skipped
-under ``fast=True`` or ``top_n=0``.
+strategy (R/describe.R:329-422): every column's statistics come from one
+aggregate with ``stat__col``-aliased outputs, unpivoted in-plan by an
+explode of per-column structs.  ``describe`` is the key-less case of
+``describe_by``: both run :func:`_profile`, and ``most_frequent`` comes from
+one top-k pass over all columns at once (:func:`_most_frequent_by`), so the
+job count does not grow with the column count.  The top-k is skipped under
+``fast=True`` or ``top_n=0``.
 
 Semantics pinned to the reference:
 - non-numeric columns profile the LENGTH of their string form
@@ -18,13 +20,11 @@ Semantics pinned to the reference:
 - ``sd`` is the SAMPLE standard deviation (R/describe.R:128);
 - ``fast=True`` leaves n_distinct/median/most_frequent NULL
   (R/describe.R:604-607) — at 10^12 rows use ``approx=True`` instead, which
-  swaps in HyperLogLog ``approx_count_distinct`` and ``percentile_approx``
-  (shuffle-free sketches) while still filling every column.
+  swaps in HyperLogLog distinct counts and a KLL median (shuffle-free
+  sketches) while still filling every column.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -87,314 +87,101 @@ def _value_expr(name: str, dt: T.DataType) -> Column:
     return F.length(c.cast("string")).cast("double")
 
 
-def _stat_aggs(fields: list[T.StructField], fast: bool, approx: bool) -> list[Column]:
-    """The fused per-column statistics aggregates shared by :func:`describe`
-    and :func:`describe_by` — ONE source of truth for the R-parity semantics
-    (NA counts as a distinct value via the anynull flag, sample sd, string-
-    length value view) and the approx sketch choices."""
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n__")]
-    for f in fields:
-        c, name = F.col(f.name), f.name
-        val = _value_expr(name, f.dataType)
-        aggs.append(F.sum(c.isNull().cast("long")).alias(f"na__{name}"))
-        if not fast:
-            if approx:
-                # r6: DataSketches HLL where the type allows (int/long/
-                # string/binary) — measured 1.8× faster AND tighter than
-                # approx_count_distinct rsd .05 (0.47 s vs 0.83 s for 16
-                # columns × 10M rows, −2.2% vs −7.4% bias at 1M distinct);
-                # unsupported types (double/bool/timestamp) keep HLL++
-                if isinstance(f.dataType, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
-                    nd = F.hll_sketch_estimate(F.hll_sketch_agg(c))
-                elif isinstance(f.dataType, (T.ShortType, T.ByteType)):
-                    # integral widening is distinctness-preserving
-                    nd = F.hll_sketch_estimate(F.hll_sketch_agg(c.cast("int")))
-                else:
-                    nd = F.approx_count_distinct(c)
-                aggs.append(nd.alias(f"nd__{name}"))
-            else:
-                aggs.append(F.count_distinct(c).alias(f"nd__{name}"))
-            aggs.append(F.max(c.isNull().cast("long")).alias(f"anynull__{name}"))
-            if approx:
-                # r6: KLL quantile sketch (DataSketches, built into Spark 4)
-                # replaces percentile_approx(0.5, acc=100) — measured 3.2×
-                # faster on 16 double columns × 10M rows (1.96 s vs 6.35 s,
-                # BENCH.md r6) at comparable ~1% rank error, bringing the
-                # median down to roughly the cost of min/mean/max/sd.  The
-                # guard counts NON-NaN values: the KLL sketch silently
-                # ignores NaN updates, so an all-NaN column (not just
-                # all-NULL) leaves an EMPTY buffer and get_quantile raises
-                # KLL_INVALID_INPUT_SKETCH_BUFFER — count(val)>0 alone lets
-                # that through.  percentile_approx's default accuracy
-                # (10000) had measured 14× the cost of the entire rest of
-                # the profile combined.
-                aggs.append(
-                    F.when(
-                        F.count(F.when(~F.isnan(val), val)) > 0,
-                        F.kll_sketch_get_quantile_double(
-                            F.kll_sketch_agg_double(val), F.lit(0.5)
-                        ),
-                    ).alias(f"med__{name}")
-                )
-            else:
-                aggs.append(F.expr(f"percentile(`__val_{name}`, 0.5)").alias(f"med__{name}"))
-        aggs.append(F.min(val).alias(f"min__{name}"))
-        aggs.append(F.mean(val).alias(f"mean__{name}"))
-        aggs.append(F.max(val).alias(f"max__{name}"))
-        aggs.append(F.stddev_samp(val).alias(f"sd__{name}"))
-    return aggs
+def _approx_distinct(f: T.StructField) -> Column:
+    # r6: DataSketches HLL where the type allows (int/long/string/binary) —
+    # measured 1.8× faster AND tighter than approx_count_distinct rsd .05
+    # (0.47 s vs 0.83 s for 16 columns × 10M rows, −2.2% vs −7.4% bias at 1M
+    # distinct); unsupported types (double/bool/timestamp) keep HLL++
+    c = F.col(f.name)
+    if isinstance(f.dataType, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
+        return F.hll_sketch_estimate(F.hll_sketch_agg(c))
+    if isinstance(f.dataType, (T.ShortType, T.ByteType)):
+        # integral widening is distinctness-preserving
+        return F.hll_sketch_estimate(F.hll_sketch_agg(c.cast("int")))
+    return F.approx_count_distinct(c)
 
 
-def _approx_agg_split(fields: list[T.StructField]) -> tuple[list[Column], list[Column]]:
-    """The approx profile's aggregates split into (declarative, sketch)
-    lists — same expressions and aliases as :func:`_stat_aggs` with
-    ``approx=True``, minus the ``anynull__`` aggregate (derived from
-    ``na__ > 0`` by the callers instead of paying a 17th per-column agg).
+def _profile(
+    df: DataFrame,
+    by_cols: list[str],
+    fields: list[T.StructField],
+    fast: bool,
+    approx: bool,
+    top_n: int,
+    digits: int,
+    skip_ones: bool,
+) -> DataFrame:
+    """The one profile pipeline behind :func:`describe` (``by_cols=[]``) and
+    :func:`describe_by`: ``by... + var, type, n, n_distinct, n_na, min,
+    mean, median, max, sd`` per (group, column), plus ``most_frequent``
+    after ``n_na`` when ``top_n > 0`` and not ``fast``.
 
-    Why the split (r7, guide §1.2 "per-task work"): a single agg mixing KLL/
-    HLL sketches with min/mean/max/sd forces EVERYTHING through one
-    ObjectHashAggregate — TypedImperativeAggregate buffers disable whole-
-    stage codegen for the whole operator, so ~8 interpreted buffer updates
-    per column per row.  Split, the declarative half (count/sum/min/max/
-    stddev) runs as a codegen HashAggregate while the sketch half keeps a
-    buffer of just 2 typed slots per column; the two subtrees are
-    independent stages of ONE job (joined single-row/per-group results), so
-    the scheduler runs them concurrently.  Measured on the bench profile
-    shape (16 columns × 9.6M cached rows): 3.78 s → see OPTIMIZATION_r07.md.
+    Aggregates, one builder for every mode:
+    - declarative (count/sum/min/mean/max/stddev) in every mode;
+    - exact adds ``count_distinct`` + exact ``percentile`` to that same
+      aggregate — Spark plans the distinct aggregates through an Expand
+      that replicates each scanned row once per distinct aggregate;
+    - approx adds a second, sketch-only aggregate (HLL + raw KLL), joined
+      back on the null-safe group key (a 1×1 cross join without keys).
+      r7: a single aggregate mixing sketches with min/mean/max/sd forces
+      everything through one ObjectHashAggregate — TypedImperativeAggregate
+      buffers disable whole-stage codegen for the whole operator.  Split,
+      the declarative half stays a codegen HashAggregate, the sketch half
+      keeps 2 typed buffer slots per column, and the scheduler runs the two
+      subtrees as independent stages of one job (OPTIMIZATION_r07.md).
+
+    ``anynull`` (NA counted as a distinct value) derives from ``na__ > 0``.
     """
     decl: list[Column] = [F.count(F.lit(1)).alias("n__")]
     sketch: list[Column] = []
     for f in fields:
         c, name = F.col(f.name), f.name
         val = _value_expr(name, f.dataType)
-        decl.append(F.sum(c.isNull().cast("long")).alias(f"na__{name}"))
-        decl.append(F.min(val).alias(f"min__{name}"))
-        decl.append(F.mean(val).alias(f"mean__{name}"))
-        decl.append(F.max(val).alias(f"max__{name}"))
-        decl.append(F.stddev_samp(val).alias(f"sd__{name}"))
-        # the KLL all-NaN guard count lives HERE (codegen, ~free) instead of
-        # inside the sketch aggregate, where the same interpreted
-        # count(when(~isnan)) measured 37% of the whole KLL agg (1.22 s vs
-        # 0.76 s bare on the bench profile shape) — the guard is applied by
-        # _approx_median_exprs AFTER the join, once per output row
-        decl.append(F.count(F.when(~F.isnan(val), val)).alias(f"nnan__{name}"))
-        # sketch choices identical to _stat_aggs(approx=True) — see the
-        # r6 notes there (DataSketches HLL where typed, KLL median with the
-        # all-NaN guard); the KLL sketch is returned RAW (binary) and the
-        # quantile extracted post-join
-        if isinstance(f.dataType, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
-            nd = F.hll_sketch_estimate(F.hll_sketch_agg(c))
-        elif isinstance(f.dataType, (T.ShortType, T.ByteType)):
-            nd = F.hll_sketch_estimate(F.hll_sketch_agg(c.cast("int")))
-        else:
-            nd = F.approx_count_distinct(c)
-        sketch.append(nd.alias(f"nd__{name}"))
-        sketch.append(F.kll_sketch_agg_double(val).alias(f"kllraw__{name}"))
-    return decl, sketch
-
-
-def _approx_median_exprs(fields: list[T.StructField]) -> list[Column]:
-    """Post-join median projections for the approx split: guard on the
-    declarative job's non-NaN count (an empty KLL buffer — all-NULL or
-    all-NaN input — makes get_quantile raise), extract the 0.5 quantile from
-    the raw sketch binary.  Evaluated once per OUTPUT row (1 per group), so
-    the guard and the quantile walk cost nothing per data row."""
-    return [
-        F.when(
-            F.col(f"nnan__{f.name}") > 0,
-            F.kll_sketch_get_quantile_double(F.col(f"kllraw__{f.name}"), F.lit(0.5)),
-        ).alias(f"med__{f.name}")
-        for f in fields
-    ]
-
-
-def _with_exact_vals(df: DataFrame, fields: list[T.StructField]) -> DataFrame:
-    """Exact percentile needs NAMED numeric-view columns — materialize them."""
-    return df.select(
-        *df.columns,
-        *[_value_expr(f.name, f.dataType).alias(f"__val_{f.name}") for f in fields],
-    )
-
-
-def _fmt_value(v, digits: int) -> str:
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        r = round(v, digits)
-        if math.isfinite(r) and r == int(r):
-            return str(int(r))
-        return f"{r:g}"
-    return str(v)
-
-
-def describe(
-    df: DataFrame,
-    skip_ones: bool = True,
-    digits: int = 4,
-    top_n: int = 3,
-    fast: bool = False,
-    approx: bool = False,
-    fused_topk: bool | None = None,
-) -> DataFrame:
-    """Profile every column of ``df`` in one fused aggregation scan.
-
-    ``fused_topk=True`` computes ALL columns' most_frequent in a single
-    explode→groupBy→window pass instead of one groupBy scan per column — the
-    wide-table scale path (K columns: 1 scan instead of K).  Tie-break is by
-    the value's string form there (the per-column default breaks ties on the
-    typed value); counts and formatting are otherwise identical.
-    ``fused_topk=None`` (default) resolves to ``approx``: the at-scale
-    profile runs exactly TWO jobs total — the sketch aggregate plus the one
-    fused top-k pass — regardless of column count, while the exact
-    reference-parity path keeps the per-column top-k (typed tie-break).
-
-    COST WARNING — exact mode (``approx=False``, the default) packs K
-    ``count_distinct`` + K exact ``percentile`` aggregates into one job:
-    Spark plans multiple distinct aggregates through an Expand node that
-    REPLICATES every scanned row once per distinct aggregate (scan rows × K),
-    and exact percentile buffers each column's values.  That is the
-    small-scale reference-parity path only — for profiles beyond ~10⁷ rows
-    use ``approx=True`` (HyperLogLog ``approx_count_distinct`` +
-    ``percentile_approx``), which plans a single no-Expand aggregate and is
-    the 100 TB path.
-    """
-    spark = df.sparkSession
-    fields = list(df.schema.fields)
-    if fused_topk is None:
-        fused_topk = approx
-
-    if approx and not fast:
-        # r7: declarative half (codegen HashAggregate) and sketch half
-        # (narrow ObjectHashAggregate) as two independent subtrees of ONE
-        # job — a 1×1 cross join of the single-row results; the DAG
-        # scheduler runs both aggregate stages concurrently.  anynull is
-        # derived from na__ below instead of a 17th per-column aggregate.
-        decl_aggs, sketch_aggs = _approx_agg_split(fields)
-        joined = df.agg(*decl_aggs).crossJoin(df.agg(*sketch_aggs))
-        row = joined.select("*", *_approx_median_exprs(fields)).collect()[0].asDict()
-        for f in fields:
-            row[f"anynull__{f.name}"] = 1 if int(row[f"na__{f.name}"] or 0) > 0 else 0
-    elif fast:
-        row = df.agg(*_stat_aggs(fields, fast, approx)).collect()[0].asDict()
-    else:
-        aggs = _stat_aggs(fields, fast, approx)
-        row = _with_exact_vals(df, fields).agg(*aggs).collect()[0].asDict()
-    n = int(row["n__"])
-
-    fused_mf: dict[str, str] = {}
-    if fused_topk and not fast and top_n > 0:
-        fused_mf = _most_frequent_fused(df, fields, top_n, digits, skip_ones)
-
-    out_rows: list[tuple] = []
-    for f in fields:
-        name = f.name
-        n_na = int(row[f"na__{name}"] or 0)
+        decl += [
+            # a zero-row global aggregate sums to NULL; n_na stays 0
+            F.coalesce(F.sum(c.isNull().cast("long")), F.lit(0)).alias(f"na__{name}"),
+            F.min(val).alias(f"min__{name}"),
+            F.mean(val).alias(f"mean__{name}"),
+            F.max(val).alias(f"max__{name}"),
+            F.stddev_samp(val).alias(f"sd__{name}"),
+        ]
         if fast:
-            n_distinct = None
-            median = None
+            continue
+        if approx:
+            # r6: KLL quantile sketch (DataSketches, built into Spark 4)
+            # replaced percentile_approx — 3.2× faster on 16 double columns
+            # × 10M rows at ~1% rank error.  KLL ignores NaN updates, so an
+            # all-NULL or all-NaN input leaves an EMPTY buffer that
+            # get_quantile raises on: the non-NaN count guarding it lives in
+            # the codegen aggregate (r7: 37% of the KLL agg when interpreted
+            # inside it) and the quantile is read once per output row.
+            decl.append(F.count(F.when(~F.isnan(val), val)).alias(f"nnan__{name}"))
+            sketch += [
+                _approx_distinct(f).alias(f"nd__{name}"),
+                F.kll_sketch_agg_double(val).alias(f"kll__{name}"),
+            ]
         else:
-            # R n_distinct counts NA as one distinct value (R/describe.R:112)
-            n_distinct = int(row[f"nd__{name}"] or 0) + int(row[f"anynull__{name}"] or 0)
-            med = row[f"med__{name}"]
-            median = float(med) if med is not None else None
-
-        # parity (R/describe.R:75-93): suppressed/empty ⇒ "", fast ⇒ NULL
-        if fast:
-            most_frequent = None
-        elif top_n > 0 and (n_distinct or 0) > 1:
-            if fused_topk:
-                most_frequent = fused_mf.get(name, "")
-            else:
-                most_frequent = _most_frequent(df, f, top_n, digits, skip_ones)
-        else:
-            most_frequent = ""
-        out_rows.append(
-            (
-                name,
-                _friendly_type(f.dataType),
-                n,
-                n_distinct,
-                n_na,
-                most_frequent,
-                _f(row[f"min__{name}"]),
-                _f(row[f"mean__{name}"]),
-                median,
-                _f(row[f"max__{name}"]),
-                _f(row[f"sd__{name}"]),
-            )
-        )
-    # one-slice local frame: createDataFrame(list) parallelizes over
-    # defaultParallelism slices, making every profile collect a 32-task job
-    # (~0.3 s of scheduling for a 16-row result; see check._local_result_df)
-    from .check import _local_result_df
-
-    return _local_result_df(spark, out_rows, DESCRIBE_SCHEMA)
-
-
-def describe_by(
-    df: DataFrame,
-    by: str | list[str],
-    approx: bool = False,
-    fast: bool = False,
-    top_n: int = 0,
-    digits: int = 4,
-    skip_ones: bool = True,
-) -> DataFrame:
-    """Per-group ``describe`` — the north_rule per-partition shape applied to
-    profiling (the check analog is ``check_data_by``).  ONE
-    ``groupBy(by).agg(*fused stats)`` job computes every non-key column's
-    statistics for every group, then an in-plan explode unpivots to one row
-    per (group, column) — fully distributed, no driver-side loop over groups,
-    so a 10^6-partition profile is still a single shuffle.
-
-    Columns: ``by...`` + ``var, type, n, n_distinct, n_na, min, mean,
-    median, max, sd``.  With ``top_n > 0`` (and not ``fast``), a
-    ``most_frequent`` column is added after ``n_na`` — computed by ONE keyed
-    top-k pass (:func:`_most_frequent_by`: explode → groupBy(by, var, v) →
-    window → Catalyst string assembly) joined back on (by, var); the default
-    ``top_n=0`` keeps the original single-aggregate plan and schema.  Slices
-    with ≤1 distinct value are suppressed to ``""`` exactly like
-    :func:`describe` (R/describe.R:75-93 applied per slice).  Value
-    semantics (string-length profiling, NA-counts-as-distinct, sample sd,
-    approx sketches) are identical to :func:`describe`.
-    """
-    by_cols = [by] if isinstance(by, str) else list(by)
-    for c in by_cols:
-        if c not in df.columns:
-            raise ValueError(f"by column {c!r} not in DataFrame")
-    fields = [f for f in df.schema.fields if f.name not in by_cols]
-
-    if approx and not fast:
-        # r7: same declarative/sketch split as describe() per group — two
-        # grouped aggregates (codegen + narrow-sketch) joined 1:1 on the
-        # null-safe group key; both subtrees are independent stages of the
-        # one collected job.  anynull derives from na__ > 0 in-plan.
-        decl_aggs, sketch_aggs = _approx_agg_split(fields)
-        decl_g = df.groupBy(*by_cols).agg(*decl_aggs)
+            decl += [
+                F.count_distinct(c).alias(f"nd__{name}"),
+                F.percentile(val, 0.5).alias(f"med__{name}"),
+            ]
+    stats = df.groupBy(*by_cols).agg(*decl)
+    if sketch:
         sk_keys = []
         for c in by_cols:  # collision-proof internal join-key aliases
             k = f"__k_{c}"
             while k in df.columns:
                 k = "_" + k
             sk_keys.append(k)
-        sk_g = (
+        sk = (
             df.select(*[F.col(c).alias(k) for c, k in zip(by_cols, sk_keys)], *df.columns)
             .groupBy(*sk_keys)
-            .agg(*sketch_aggs)
+            .agg(*sketch)
         )
         cond = F.lit(True)
         for c, k in zip(by_cols, sk_keys):
-            cond = cond & decl_g[c].eqNullSafe(sk_g[k])
-        grouped = (
-            decl_g.join(sk_g, cond, "inner")
-            .drop(*sk_keys)
-            .select("*", *_approx_median_exprs(fields))
-        )
-    elif fast:
-        grouped = df.groupBy(*by_cols).agg(*_stat_aggs(fields, fast, approx))
-    else:
-        aggs = _stat_aggs(fields, fast, approx)
-        grouped = _with_exact_vals(df, fields).groupBy(*by_cols).agg(*aggs)
+            cond = cond & stats[c].eqNullSafe(sk[k])
+        stats = stats.join(sk, cond, "inner").drop(*sk_keys)
 
     structs: list[Column] = []
     for f in fields:
@@ -404,13 +191,14 @@ def describe_by(
             med = F.lit(None).cast("double")
         else:
             # R n_distinct counts NA as one distinct value (R/describe.R:112)
-            anynull = (
-                (F.col(f"na__{name}") > 0).cast("long")
-                if approx
-                else F.col(f"anynull__{name}")
-            )
-            nd = (F.col(f"nd__{name}") + anynull).cast("long")
-            med = F.col(f"med__{name}").cast("double")
+            nd = (F.col(f"nd__{name}") + (F.col(f"na__{name}") > 0).cast("long")).cast("long")
+            if approx:
+                med = F.when(
+                    F.col(f"nnan__{name}") > 0,
+                    F.kll_sketch_get_quantile_double(F.col(f"kll__{name}"), F.lit(0.5)),
+                )
+            else:
+                med = F.col(f"med__{name}").cast("double")
         structs.append(
             F.struct(
                 F.lit(name).alias("var"),
@@ -425,7 +213,7 @@ def describe_by(
                 F.col(f"sd__{name}").cast("double").alias("sd"),
             )
         )
-    out = grouped.select(
+    out = stats.select(
         *[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("__s")
     ).select(*by_cols, "__s.*")
     if top_n > 0 and not fast:
@@ -440,44 +228,91 @@ def describe_by(
         mf_col = F.when(
             F.col("n_distinct") <= 1, F.lit("")  # per-slice suppression
         ).otherwise(F.coalesce(F.col("most_frequent"), F.lit("")))
-        joined = (
-            joined.withColumn("__mf", mf_col)
-            .drop("most_frequent")
-            .withColumnRenamed("__mf", "most_frequent")
-        )
-        order = by_cols + ["var", "type", "n", "n_distinct", "n_na", "most_frequent",
-                           "min", "mean", "median", "max", "sd"]
-        out = joined.select(*order)
+        out = joined.withColumn("most_frequent", mf_col).select(*by_cols, *DESCRIBE_SCHEMA.names)
     return out
 
 
-def _f(v) -> float | None:
-    return None if v is None else float(v)
+def describe(
+    df: DataFrame,
+    skip_ones: bool = True,
+    digits: int = 4,
+    top_n: int = 3,
+    fast: bool = False,
+    approx: bool = False,
+) -> DataFrame:
+    """Profile every column of ``df``: the key-less :func:`describe_by`,
+    collected in column order into a local result frame.
+
+    The profile aggregate, the unpivot and the one all-columns top-k pass
+    run as a single collected plan, so the number of Spark jobs is the same
+    for 2 columns as for 200 (tests/test_describe.py pins this budget in
+    exact and approx mode).  ``most_frequent`` is ``"v (c), v2 (c2)"``
+    (R/describe.R:75-93): top ``top_n`` by count, ties broken on the typed
+    value (numeric columns numerically), NA last; numbers rounded to
+    ``digits`` and integral values shown bare; ``skip_ones`` then drops
+    count==1 entries.  It is NULL under ``fast`` and ``""`` for ``top_n=0``
+    or a column with ≤1 distinct value.
+
+    COST WARNING — exact mode (``approx=False``, the default) packs K
+    ``count_distinct`` + K exact ``percentile`` aggregates into one
+    aggregate: Spark plans multiple distinct aggregates through an Expand
+    node that REPLICATES every scanned row once per distinct aggregate
+    (scan rows × K), and exact percentile buffers each column's values.
+    That is the small-scale reference-parity path only — for profiles
+    beyond ~10⁷ rows use ``approx=True`` (HLL distinct + KLL median), whose
+    aggregates plan with no Expand and which is the 100 TB path.
+    """
+    fields = list(df.schema.fields)
+    got = {}
+    if fields:
+        prof = _profile(df, [], fields, fast, approx, top_n, digits, skip_ones)
+        got = {r["var"]: r.asDict() for r in prof.collect()}
+    rows = []
+    for f in fields:
+        r = got[f.name]
+        # parity (R/describe.R:75-93): fast ⇒ NULL, top_n=0 ⇒ ""
+        r["most_frequent"] = None if fast else r.get("most_frequent", "")
+        rows.append(tuple(r[c] for c in DESCRIBE_SCHEMA.names))
+    # one-slice local frame: createDataFrame(list) parallelizes over
+    # defaultParallelism slices, making every profile collect a 32-task job
+    # (~0.3 s of scheduling for a 16-row result; see check._local_result_df)
+    from .check import _local_result_df
+
+    return _local_result_df(df.sparkSession, rows, DESCRIBE_SCHEMA)
 
 
-def _most_frequent(
-    df: DataFrame, field: T.StructField, top_n: int, digits: int, skip_ones: bool
-) -> str | None:
-    """Top-k formatter (R/describe.R:75-93): ``"v (c), v2 (c2)"``, numeric
-    values rounded to ``digits``; ``skip_ones`` drops count==1 entries."""
-    """R semantics (R/describe.R:87-93 then :75-85): take the top-n BY COUNT
-    first, then drop count==1 entries — no backfill.  R's tie order is input
-    appearance order, which has no distributed analog; ties break by value
-    ascending here (deterministic)."""
-    counts = (
-        df.groupBy(F.col(field.name).alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc_nulls_last("v"))
-        .limit(top_n)
-        .collect()
-    )
-    parts = []
-    for r in counts:
-        if skip_ones and r["c"] <= 1:
-            continue
-        v = "NA" if r["v"] is None else _fmt_value(r["v"], digits)
-        parts.append(f"{v} ({r['c']})")
-    return ", ".join(parts)  # empty after skip_ones ⇒ "" (R/describe.R:82)
+def describe_by(
+    df: DataFrame,
+    by: str | list[str],
+    approx: bool = False,
+    fast: bool = False,
+    top_n: int = 0,
+    digits: int = 4,
+    skip_ones: bool = True,
+) -> DataFrame:
+    """Per-group ``describe`` — the north_rule per-partition shape applied to
+    profiling (the check analog is ``check_data_by``).  ONE
+    ``groupBy(by).agg(*fused stats)`` computes every non-key column's
+    statistics for every group, then an in-plan explode unpivots to one row
+    per (group, column) — fully distributed, no driver-side loop over groups,
+    so a 10^6-partition profile is still a single shuffle.
+
+    Columns: ``by...`` + ``var, type, n, n_distinct, n_na, min, mean,
+    median, max, sd``.  With ``top_n > 0`` (and not ``fast``), a
+    ``most_frequent`` column is added after ``n_na`` — computed by ONE keyed
+    top-k pass (:func:`_most_frequent_by`) joined back on (by, var); the
+    default ``top_n=0`` keeps the single-aggregate plan and schema.  Slices
+    with ≤1 distinct value are suppressed to ``""`` exactly like
+    :func:`describe` (R/describe.R:75-93 applied per slice).  Value
+    semantics are those of :func:`describe`, which is this function with no
+    keys (both run :func:`_profile`).
+    """
+    by_cols = [by] if isinstance(by, str) else list(by)
+    for c in by_cols:
+        if c not in df.columns:
+            raise ValueError(f"by column {c!r} not in DataFrame")
+    fields = [f for f in df.schema.fields if f.name not in by_cols]
+    return _profile(df, by_cols, fields, fast, approx, top_n, digits, skip_ones)
 
 
 def _most_frequent_by(
@@ -488,21 +323,20 @@ def _most_frequent_by(
     digits: int,
     skip_ones: bool,
 ) -> DataFrame:
-    """Keyed most_frequent — the per-group analog of
-    :func:`_most_frequent_fused`, but fully IN-PLAN (no collect): ONE
-    explode → ``groupBy(by, var, v)`` count → window top-n per (group, var) →
+    """The one top-k, fully IN-PLAN (no collect): ONE explode → ``groupBy(by,
+    var, v)`` count → window top-n per (group, var) →
     ``collect_list``/``array_sort``/``filter``/``transform`` assembles the
     ``"v (c), v2 (c2)"`` string per slice with pure Catalyst expressions.
     Returns ``(by..., var, most_frequent)`` — one row per (group, column)
     whose slice had at least one row; a 10^6-group profile is still one
-    shuffle on (by, var, v) plus one on (by, var).
+    shuffle on (by, var, v) plus one on (by, var).  With ``by_cols=[]`` it
+    is every column's top-k in one pass.
 
-    Formatting parity note: numeric display uses Catalyst round + %.0f for
-    integral values, which matches the driver-side ``_fmt_value`` for
-    integers and short decimals (the profiling case); Python's ``%g``
-    scientific cutover for |v| ≥ 1e6 or NaN strings is not replicated.
-    Tie-break matches the fused path: count desc, typed value asc (numeric
-    columns numerically), NULL (displayed NA) last.
+    Formatting: booleans render ``TRUE``/``FALSE`` and NULL ``NA``;
+    numeric values are rounded to ``digits``, integral results render bare
+    via ``%.0f`` (``5`` for a decimal ``5.00``) and the rest via Spark's
+    double→string cast (``123.4567``, ``NaN``).  Tie-break: count desc,
+    typed value asc (numeric columns numerically), NULL (NA) last.
     """
     from pyspark.sql.window import Window
 
@@ -520,8 +354,6 @@ def _most_frequent_by(
     w = Window.partitionBy(*by_cols, "var").orderBy(
         F.desc("c"), F.asc_nulls_last(num_key), F.asc_nulls_last("v")
     )
-    # Catalyst analog of _fmt_value: round to `digits`, integral values
-    # render bare ("15" not "15.0"), everything else via double→string
     d = F.round(F.col("v").try_cast("double"), digits)
     disp_num = F.when(d % 1 == 0, F.format_string("%.0f", d)).otherwise(d.cast("string"))
     disp = F.when(F.col("v").isNull(), F.lit("NA")).otherwise(
@@ -558,53 +390,6 @@ def _mf_value_str(f: T.StructField) -> Column:
             c, F.lit("TRUE")
         ).otherwise(F.lit("FALSE"))
     return c.cast("string")
-
-
-def _most_frequent_fused(
-    df: DataFrame, fields: list[T.StructField], top_n: int, digits: int, skip_ones: bool
-) -> dict[str, str]:
-    """All columns' top-k in ONE pass: explode (var, value-string) pairs →
-    one groupBy(var, v) count → per-var window top-n.  Shuffle carries one
-    row per distinct (column, value) — K full scans collapse to one."""
-    from pyspark.sql.window import Window
-
-    structs = [
-        F.struct(F.lit(f.name).alias("var"), _mf_value_str(f).alias("v"))
-        for f in fields
-    ]
-    pairs = df.select(F.explode(F.array(*structs)).alias("p")).select("p.var", "p.v")
-    counts = pairs.groupBy("var", "v").agg(F.count(F.lit(1)).alias("c"))
-    # booleans are pre-rendered TRUE/FALSE by _mf_value_str (float('true')
-    # crashed here pre-r5) and sort correctly as strings (FALSE < TRUE)
-    numeric_vars = {f.name for f in fields if isinstance(f.dataType, _NUMERIC)}
-    # tie-break on the TYPED value like the per-column path: NUMERIC columns
-    # order count ties numerically, everything else lexicographically, NAs
-    # last — matching R's sort (a "11"<"7" string tie-break diverged here)
-    num_key = F.when(
-        F.col("var").isin(sorted(numeric_vars)), F.col("v").try_cast("double")
-    )
-    w = Window.partitionBy("var").orderBy(
-        F.desc("c"), F.asc_nulls_last(num_key), F.asc_nulls_last("v")
-    )
-    top = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .orderBy("var", "rn")
-        .collect()
-    )
-    out: dict[str, list[str]] = {}
-    for r in top:
-        if skip_ones and r["c"] <= 1:
-            continue
-        v = r["v"]
-        if v is None:
-            disp = "NA"
-        elif r["var"] in numeric_vars:
-            disp = _fmt_value(float(v), digits)
-        else:
-            disp = v
-        out.setdefault(r["var"], []).append(f"{disp} ({r['c']})")
-    return {var: ", ".join(parts) for var, parts in out.items()}
 
 
 def describe_by_file(

@@ -20,14 +20,17 @@ from pyspark.sql import SparkSession
 __all__ = ["build_spark"]
 
 
-_MEM_UNITS = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
+_MEM_UNITS = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
 
 
 def _mem_to_bytes(mem: str) -> int | None:
-    """Spark heap string ("48g", "512m", bare bytes) → bytes; None if it
+    """Spark memory string → bytes: "48g", "512m", "2gb", "1024b"; a bare
+    number is MiB, as Spark reads ``spark.driver.memory``.  None if it
     doesn't parse (then the caller skips the -Xms injection entirely)."""
-    s = mem.strip().lower().removesuffix("b")
-    unit = 1
+    s = mem.strip().lower()
+    if len(s) > 1 and s[-1] == "b" and s[-2] in _MEM_UNITS:
+        s = s[:-1]  # "2gb" → "2g"
+    unit = _MEM_UNITS["m"]
     if s and s[-1] in _MEM_UNITS:
         unit = _MEM_UNITS[s[-1]]
         s = s[:-1]
@@ -39,26 +42,53 @@ def _mem_to_bytes(mem: str) -> int | None:
 
 def _pretouch_fits_ram(driver_mem: str, max_fraction: float = 0.75) -> bool:
     """An -Xms heap is COMMITTED and touched at startup: requesting more
-    than physical RAM would OOM a JVM that plain -Xmx would let boot.  Only
-    inject when the request parses and fits comfortably; if /proc/meminfo
-    is unavailable (non-Linux), trust the caller's sizing."""
+    than the host's available memory would OOM a JVM that plain -Xmx would
+    let boot.  Only inject when the request parses and fits comfortably in
+    MemAvailable; if /proc/meminfo is unavailable (non-Linux), trust the
+    caller's sizing.  Requests under 1 MiB (no valid ``-Xms<N>m``) are
+    refused too."""
     req = _mem_to_bytes(driver_mem)
-    if req is None:
+    if req is None or req < 1024**2:
         return False
     try:
         with open("/proc/meminfo") as f:
-            total_kb = int(f.readline().split()[1])
-    except (OSError, ValueError, IndexError):
+            avail_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, ValueError, IndexError, StopIteration):
         return True
-    return req <= total_kb * 1024 * max_fraction
+    return req <= avail_kb * 1024 * max_fraction
 
 
 def _driver_java_options(driver_mem: str, caller_opts: str = "") -> str:
-    """Heap pre-touch options for a sized driver heap, with any
-    caller-supplied options appended AFTER so their -Xms/-XX flags win
-    (the JVM honors the last occurrence of a repeated flag)."""
-    pretouch = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    """Heap pre-touch options for a sized driver heap, normalized to
+    ``-Xms<N>m``, with any caller-supplied options appended AFTER so their
+    -Xms/-XX flags win (the JVM honors the last occurrence of a repeated
+    flag)."""
+    pretouch = f"-Xms{_mem_to_bytes(driver_mem) // 1024**2}m -XX:+AlwaysPreTouch"
     return f"{pretouch} {caller_opts}".strip()
+
+
+def _spark_confs(extra_confs: dict[str, str]) -> dict[str, str]:
+    """``build_spark``'s keyword confs as Spark keys (``_`` → ``.``), with the
+    heap pre-touch options injected when the driver heap is sized.
+
+    Large-heap sessions commit and pre-touch the whole heap at JVM start
+    (-Xms = -Xmx, -XX:+AlwaysPreTouch — the standard large-heap JVM
+    practice).  Without it G1 uncommits heap between queries and every query
+    re-faults gigabytes of anonymous memory; on hosts with lazily backed /
+    free-page-hinted memory (common under virtualization) fault service can
+    collapse to ~0.1 GB/s under 32-way concurrency, turning a 1 s scan into
+    8-24 s (measured, r7).  Pre-touching moves that cost to session startup
+    once and the steady state never faults.  A caller-supplied
+    spark.driver.extraJavaOptions is appended after, so its -Xms wins.
+    Cluster deployments should mirror this on executors
+    (spark.executor.extraJavaOptions)."""
+    confs = {k.replace("_", "."): v for k, v in extra_confs.items()}
+    driver_mem = confs.get("spark.driver.memory")
+    if driver_mem and _pretouch_fits_ram(driver_mem):
+        confs["spark.driver.extraJavaOptions"] = _driver_java_options(
+            driver_mem, confs.get("spark.driver.extraJavaOptions", "")
+        )
+    return confs
 
 
 def build_spark(
@@ -78,23 +108,6 @@ def build_spark(
     )
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Large-heap sessions: commit and pre-touch the whole heap at JVM start
-    # (-Xms = -Xmx, -XX:+AlwaysPreTouch — the standard large-heap JVM
-    # practice).  Without it G1 uncommits heap between queries and every
-    # query re-faults gigabytes of anonymous memory; on hosts with lazily
-    # backed / free-page-hinted memory (common under virtualization) fault
-    # service can collapse to ~0.1 GB/s under 32-way concurrency, turning a
-    # 1 s scan into 8-24 s (measured, r7).  Pre-touching moves that cost to
-    # session startup once and the steady state never faults.  Applied only
-    # when the caller sizes the driver heap; a caller-supplied
-    # spark.driver.extraJavaOptions is appended after, so its -Xms wins.
-    # Cluster deployments should mirror this on executors
-    # (spark.executor.extraJavaOptions).
-    driver_mem = extra_confs.get("spark_driver_memory")
-    if driver_mem and _pretouch_fits_ram(driver_mem):
-        extra_confs["spark_driver_extraJavaOptions"] = _driver_java_options(
-            driver_mem, extra_confs.pop("spark_driver_extraJavaOptions", "")
-        )
-    for k, v in extra_confs.items():
-        b = b.config(k.replace("_", "."), v)
+    for k, v in _spark_confs(extra_confs).items():
+        b = b.config(k, v)
     return b.getOrCreate()

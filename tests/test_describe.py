@@ -3,8 +3,11 @@ pinned divergences: min/mean/median/max/sd are doubles; timestamps profile as
 epoch seconds)."""
 
 import datetime as dt
+import uuid
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from dataverifyr_spark import describe
 
@@ -106,28 +109,81 @@ def _one_col(spark):
     return spark.createDataFrame([(1,), (1,), (1,)], "v int")
 
 
-class TestFusedTopK:
-    def test_fused_matches_per_column(self, spark, df):
-        a = {r["var"]: r["most_frequent"] for r in describe(df, top_n=2).collect()}
-        b = {r["var"]: r["most_frequent"] for r in describe(df, top_n=2, fused_topk=True).collect()}
-        assert a == b
+class TestTopKFormatter:
+    """describe and describe_by(top_n>0) share one in-plan formatter; these
+    pin its rendering on both surfaces."""
 
-    def test_approx_defaults_to_fused(self, spark, df, monkeypatch):
-        """describe(approx=True) must NOT fall back to the K per-column
-        top-k jobs — the at-scale path is sketch agg + ONE fused pass."""
-        import importlib
+    @pytest.mark.parametrize("surface", ["describe", "describe_by"])
+    @pytest.mark.parametrize(
+        "ddl,values,expected",
+        [
+            # NULL stays NA, never FALSE
+            ("v boolean", [True, True, False, False, False, None, None], "FALSE (3), TRUE (2), NA (2)"),
+            ("v string", ["a", "a", None, None, None], "NA (3), a (2)"),
+            ("v double", [float("nan")] * 3 + [1.0, 1.0], "NaN (3), 1 (2)"),
+            ("v double", [123.4567, 123.4567, 1.5], "123.4567 (2)"),
+            ("v decimal(5,2)", [Decimal("5.00")] * 2 + [Decimal("1.25")], "5 (2)"),
+        ],
+        ids=["boolean", "null", "nan", "digits", "decimal"],
+    )
+    def test_rendering(self, spark, surface, ddl, values, expected):
+        from dataverifyr_spark import describe_by
 
-        d = importlib.import_module("dataverifyr_spark.describe")
+        df = spark.createDataFrame([(v,) for v in values], ddl)
+        if surface == "describe":
+            out = describe(df, top_n=3, digits=4).collect()
+        else:
+            keyed = df.withColumn("k", F.lit(1))
+            out = describe_by(keyed, by="k", top_n=3, digits=4).collect()
+        assert [r["most_frequent"] for r in out] == [expected]
 
-        def boom(*a, **k):
-            raise AssertionError("per-column top-k ran under approx=True")
 
-        monkeypatch.setattr(d, "_most_frequent", boom)
-        res = {r["var"]: r["most_frequent"] for r in d.describe(df, approx=True).collect()}
-        assert res["s"]  # populated through the fused pass
-        # explicit override still honored
-        with pytest.raises(Exception, match="per-column top-k"):
-            d.describe(df, approx=True, fused_topk=False).collect()
+class TestJobBudget:
+    """describe runs one collected plan: its job count must not grow with
+    the number of columns (a per-column top-k would add a job per column)."""
+
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        sc = spark.sparkContext
+        group = f"describe-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "describe job budget")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    @pytest.mark.parametrize("approx", [False, True])
+    def test_jobs_constant_in_column_count(self, spark, approx):
+        def frame(k):
+            return spark.range(0, 300).select(
+                *[
+                    (F.col("id") % (i + 3)).cast("double" if i % 2 else "string").alias(f"c{i}")
+                    for i in range(k)
+                ]
+            )
+
+        two = self._jobs(spark, lambda: describe(frame(2), top_n=3, approx=approx))
+        eight = self._jobs(spark, lambda: describe(frame(8), top_n=3, approx=approx))
+        assert two > 0
+        assert two == eight
+
+
+def test_fast_approx_builds_no_sketch_aggregate(spark, df):
+    """fast leaves every sketch statistic NULL, so fast+approx must plan the
+    declarative aggregate alone — no empty sketch aggregate, no join."""
+    import contextlib
+    import io
+
+    from dataverifyr_spark import describe_by
+
+    got = [r.asDict() for r in describe(df, fast=True, approx=True).collect()]
+    assert got == [r.asDict() for r in describe(df, fast=True).collect()]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        describe_by(df, by="g", fast=True, approx=True).explain(True)
+    phys = buf.getvalue().split("== Physical Plan ==")[-1]
+    assert "Join" not in phys and "sketch" not in phys, phys
 
 
 class TestReferenceDescribeGoldens:
@@ -265,14 +321,6 @@ class TestDescribeBy:
         got = {r["k"]: r["most_frequent"] for r in describe_by(d, by="k", top_n=2).collect()}
         assert got[None] == "a (2)"
         assert got["g"] == ""  # 1-distinct slice suppressed
-
-    def test_fused_boolean_column_no_crash(self, spark):
-        """r5 bugfix: fused top-k crashed on booleans (float('true')); both
-        strategies must now render R's TRUE/FALSE format."""
-        d = spark.createDataFrame([(True,), (True,), (False,), (None,)], "b boolean")
-        fused = describe(d, fused_topk=True).collect()[0]["most_frequent"]
-        percol = describe(d, fused_topk=False).collect()[0]["most_frequent"]
-        assert fused == percol == "TRUE (2)"
 
     def test_fast_and_missing_by_col(self, spark, df):
         from dataverifyr_spark import describe_by
