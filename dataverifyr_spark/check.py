@@ -464,14 +464,26 @@ def _eval_reference(
 
 
 def _local_result_df(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """Tiny driver-built summary frame as ONE partition.
+    """Tiny driver-built result frame: a JVM ``LocalRelation`` with ONE
+    partition and no Python worker.
 
-    ``spark.createDataFrame(list)`` parallelizes local rows over
-    ``defaultParallelism`` slices, so collecting a 5-row summary runs a
-    32-task job — measured ~0.3 s of pure scheduling per call (r7, guide
-    §1.2: per-task work includes task COUNT).  A single-slice RDD makes the
-    collect a one-task job with identical values and schema enforcement."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    Each row is verified against ``schema`` as
+    ``createDataFrame(verifySchema=True)`` does (a wrong type, or ``None`` in
+    a non-nullable field, raises).  The rows then travel as one Arrow table,
+    which Spark plans as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold``, so collecting or
+    writing the frame runs JVM code only and starts no Python worker.
+    ``coalesce(1)`` keeps it one partition, so a write emits one file."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    verify = T._make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _upgrade(x, spark: SparkSession | None):

@@ -273,9 +273,8 @@ def describe(
         # parity (R/describe.R:75-93): fast ⇒ NULL, top_n=0 ⇒ ""
         r["most_frequent"] = None if fast else r.get("most_frequent", "")
         rows.append(tuple(r[c] for c in DESCRIBE_SCHEMA.names))
-    # one-slice local frame: createDataFrame(list) parallelizes over
-    # defaultParallelism slices, making every profile collect a 32-task job
-    # (~0.3 s of scheduling for a 16-row result; see check._local_result_df)
+    # one-partition LocalRelation: collecting or writing the profile starts
+    # no Python worker (see check._local_result_df)
     from .check import _local_result_df
 
     return _local_result_df(df.sparkSession, rows, DESCRIBE_SCHEMA)

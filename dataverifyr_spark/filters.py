@@ -19,13 +19,21 @@ has the same property (its equality tests only use single-column rules);
 filter_fails is therefore a SUPERSET of counted fails in that corner — see
 tests/test_invariants.py.
 
-Scale design: the combined (non-per-rule) mode is a SINGLE scan — per-rule
-fail flags are assembled into an array of rule tags, NULL-filtered and
+Scale design: the combined (non-per-rule) mode is a SINGLE scan.  Rows are
+first filtered on the OR of the per-rule fail predicates — one codegen'd
+predicate that short-circuits, and a row survives exactly when at least one
+predicate is TRUE (FALSE and NULL drop).  Only the surviving rows get their
+rule tags: per-rule fail flags assembled into an array, NULL-filtered and
 exploded, reproducing the reference's rbind-with-duplicates multiset
-(R/filters.R:89) in one pass instead of one scan per rule.
+(R/filters.R:89) in one pass instead of one scan per rule.  The tag array's
+NULL filter is an interpreted higher-order function; filtering first keeps
+it off every passing row.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,13 +130,11 @@ def filter_fails(
     if not usable:
         return x.limit(0).withColumn("failed_rule", F.lit("")) if tag else x.limit(0)
 
-    # single-scan combined mode: array of failing-rule tags → explode
+    # single-scan combined mode: filter on the OR of the fail predicates
+    # first, then tag only the survivors (array of failing-rule tags → explode)
     flags = [F.when(pred, F.lit(r.expr)) for r, pred in usable]
-    tagged = (
-        x.withColumn("__fails", F.filter(F.array(*flags), lambda v: v.isNotNull()))
-        .filter(F.size("__fails") > 0)
-        .withColumn("failed_rule", F.explode("__fails"))
-        .drop("__fails")
+    tagged = x.filter(reduce(or_, [pred for _, pred in usable])).withColumn(
+        "failed_rule", F.explode(F.filter(F.array(*flags), lambda v: v.isNotNull()))
     )
     return tagged if tag else tagged.drop("failed_rule")
 

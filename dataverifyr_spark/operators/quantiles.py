@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..check import _local_result_df
+
 __all__ = ["column_quantiles", "column_quantiles_by", "QUANTILE_SCHEMA"]
 
 QUANTILE_SCHEMA = T.StructType(
@@ -107,7 +109,7 @@ def column_quantiles(
         for i, p in enumerate(probs):
             v = None if vals is None else vals[i]
             out.append((c, float(p), float(v) if v is not None else None))
-    return df.sparkSession.createDataFrame(out, QUANTILE_SCHEMA)
+    return _local_result_df(df.sparkSession, out, QUANTILE_SCHEMA)
 
 
 def column_quantiles_by(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..check import _local_result_df
+
 __all__ = ["snapshot_schema", "schema_diff", "check_schema_drift"]
 
 _SNAPSHOT_SCHEMA = T.StructType(
@@ -47,9 +49,9 @@ def _schema_rows(df: DataFrame) -> list[tuple]:
 
 def snapshot_schema(df: DataFrame, path: str) -> None:
     """Persist the schema contract (one row per column; tiny)."""
-    df.sparkSession.createDataFrame(_schema_rows(df), _SNAPSHOT_SCHEMA).coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
+    _local_result_df(df.sparkSession, _schema_rows(df), _SNAPSHOT_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def schema_diff(df: DataFrame, baseline) -> DataFrame:
@@ -79,7 +81,7 @@ def schema_diff(df: DataFrame, baseline) -> DataFrame:
     for name, r in old.items():
         if name not in new:
             rows.append((name, "removed", r["type"], None))
-    return spark.createDataFrame(rows, _DIFF_SCHEMA)
+    return _local_result_df(spark, rows, _DIFF_SCHEMA)
 
 
 def check_schema_drift(df: DataFrame, baseline, fail_on: tuple[str, ...] = ("removed", "type_changed")) -> DataFrame:
@@ -94,7 +96,8 @@ def check_schema_drift(df: DataFrame, baseline, fail_on: tuple[str, ...] = ("rem
     tests = len(df.schema.fields) + n_removed
     failing = [d for d in diffs if d["status"] in fail_on]
     detail = "; ".join(f"{d['column']}:{d['status']}" for d in diffs)
-    return df.sparkSession.createDataFrame(
+    return _local_result_df(
+        df.sparkSession,
         [
             (
                 "schema_drift",
@@ -105,5 +108,7 @@ def check_schema_drift(df: DataFrame, baseline, fail_on: tuple[str, ...] = ("rem
                 detail,
             )
         ],
-        "check_type string, name string, tests bigint, pass bigint, fail bigint, detail string",
+        T.StructType.fromDDL(
+            "check_type string, name string, tests bigint, pass bigint, fail bigint, detail string"
+        ),
     )

@@ -545,3 +545,56 @@ class TestCheckDataByFile:
         shuffled = spark.read.parquet(parts_dir).repartition(3)
         with pytest.raises(Exception, match="freshly-read"):
             check_data_by_file(shuffled, ruleset(rule("v < 5", name="r"))).collect()
+
+
+class TestLocalResultFrame:
+    """check._local_result_df: every driver-built result frame is a JVM
+    LocalRelation with one partition, verified against its schema."""
+
+    @staticmethod
+    def _optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_summary_and_describe_are_one_partition_local_relations(
+        self, spark, cars_df, contract_rules
+    ):
+        from dataverifyr_spark import describe
+
+        for res in (check_data(cars_df, contract_rules), describe(cars_df)):
+            plan = self._optimized(res)
+            assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+            assert res.rdd.getNumPartitions() == 1
+
+    def test_write_summary_writes_one_file(self, spark, cars_df, contract_rules, tmp_path):
+        from dataverifyr_spark.sources import write_summary
+
+        out = str(tmp_path / "summary")
+        write_summary(check_data(cars_df, contract_rules), out, run_id="r1")
+        assert len(list((tmp_path / "summary").glob("*.parquet"))) == 1
+        assert spark.read.parquet(out).count() == 5
+
+    def test_invalid_rows_raise(self, spark):
+        from pyspark.sql import types as T
+
+        from dataverifyr_spark.check import _local_result_df
+
+        schema = T.StructType(
+            [T.StructField("k", T.StringType(), False), T.StructField("n", T.LongType(), False)]
+        )
+        assert _local_result_df(spark, [("a", 1)], schema).collect()[0]["n"] == 1
+        with pytest.raises(Exception, match="not nullable"):
+            _local_result_df(spark, [("a", None)], schema)
+        with pytest.raises(Exception, match="LongType"):
+            _local_result_df(spark, [("a", "1")], schema)
+
+    def test_zero_rows_keep_schema(self, spark):
+        from pyspark.sql import types as T
+
+        from dataverifyr_spark import describe
+        from dataverifyr_spark.check import RESULT_SCHEMA, _local_result_df
+        from dataverifyr_spark.describe import DESCRIBE_SCHEMA
+
+        empty = _local_result_df(spark, [], RESULT_SCHEMA)
+        assert empty.schema == RESULT_SCHEMA and empty.count() == 0
+        no_cols = describe(spark.createDataFrame([], T.StructType([])))
+        assert no_cols.schema == DESCRIBE_SCHEMA and no_cols.count() == 0

@@ -94,6 +94,84 @@ class TestFilterFails:
         assert rr2.columns == data.columns
 
 
+@pytest.fixture(scope="module")
+def corner_data(spark):
+    # NULLs in every rule column, a string that coerces to NULL ("abc"), a
+    # row that fails several rules, and a row no rule fails
+    return spark.createDataFrame(
+        [
+            (1, 5, 2.0, "7"),
+            (2, None, 1.0, "abc"),
+            (3, 0, None, "0"),
+            (4, 3, 9.0, None),
+            (5, -1, 5.0, "abc"),
+            (6, 2, 3.0, "2"),
+        ],
+        "id int, a int, b double, s string",
+    ).cache()
+
+
+@pytest.fixture(scope="module")
+def corner_rules():
+    return ruleset(
+        rule("a > 1"),
+        rule("b < 4", allow_na=True),
+        rule("a > 0 & b < 4"),
+        rule("a == 3", negate=True),
+        rule("as.numeric(s) > 1"),
+    )
+
+
+class TestFilterFirstPlan:
+    """Combined mode filters on the OR of the fail predicates, then tags
+    only the surviving rows."""
+
+    def test_tagged_multiset_equals_per_rule_union(self, spark, corner_data, corner_rules):
+        from collections import Counter
+
+        tagged = filter_fails(corner_rules, corner_data, tag=True)
+        got = Counter((r["id"], r["failed_rule"]) for r in tagged.collect())
+        per = filter_fails(corner_rules, corner_data, per_rule=True)
+        want = Counter(
+            (r["id"], expr) for expr, df in per.items() for r in df.collect()
+        )
+        assert got == want
+        # the fixture exercises duplicates and a row that fails nothing
+        assert max(Counter(i for i, _ in got.elements()).values()) > 1
+        assert 6 not in {i for i, _ in got}
+        untagged = filter_fails(corner_rules, corner_data)
+        assert untagged.columns == corner_data.columns
+        assert Counter(r["id"] for r in untagged.collect()) == Counter(
+            i for i, _ in got.elements()
+        )
+
+    def test_filter_condition_has_no_higher_order_function(self, spark, corner_data, corner_rules):
+        plan = (
+            filter_fails(corner_rules, corner_data, tag=True)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        filters = [ln for ln in plan.splitlines() if ln.lstrip("+-: ").startswith("Filter ")]
+        assert filters, plan
+        for ln in filters:
+            assert "lambda" not in ln and "filter(" not in ln, ln
+
+    def test_user_fails_column_kept(self, spark):
+        df = spark.createDataFrame(
+            [(1, 10.0, "keep-1"), (2, 1.0, "keep-2"), (3, 20.0, "keep-3")],
+            "id int, v double, __fails string",
+        )
+        rs = ruleset(rule("v < 5"))
+        for tag in (True, False):
+            out = filter_fails(rs, df, tag=tag)
+            assert "__fails" in out.columns
+            assert sorted((r["id"], r["__fails"]) for r in out.collect()) == [
+                (1, "keep-1"),
+                (3, "keep-3"),
+            ]
+
+
 class TestViolationExamples:
     def test_k_examples_per_rule_deterministic(self, spark):
         import dataverifyr_spark as dv

@@ -31,7 +31,7 @@ sections = []
 sections.append(("Fused 3-rule check (one scan, pruned ReadSchema, partial aggregation)", cap(li.agg(*aggs))))
 
 viol = dv.filter_fails(rules, li, tag=True)
-sections.append(("Tagged violations (single scan, array+explode, no per-rule scans)", cap(viol)))
+sections.append(("Tagged violations (single scan, codegen'd OR-of-fail-predicates filter, array+explode on violating rows only)", cap(viol)))
 
 ref_vals = cust.select(F.col("c_custkey").alias("__ref_val")).distinct()
 local = ords.select("o_custkey")
