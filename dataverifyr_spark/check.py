@@ -21,11 +21,16 @@ Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
   EXPLAIN.md); an explicit pre-agg select measured strictly slower on cached
   inputs and was removed.
 * Reference rules evaluate as distinct-ref LEFT joins (AQE picks
-  broadcast-hash when the distinct ref side is small; see ``_eval_reference``)
-  — never a collected ``isin`` list, which would cap ref size at driver memory.
-* ``by=[cols]`` returns a distributed per-group summary (one row per
-  group × rule) via the same fused aggregation under ``groupBy`` — the
-  north_rule's "per-partition pass/fail rows" — without collecting.
+  broadcast-hash when the distinct ref side is small; see
+  ``_reference_counts``) — never a collected ``isin`` list, which would cap
+  ref size at driver memory.  Uniqueness rules evaluate as one key-only
+  groupBy count (``_uniqueness_counts``).
+* ``check_data_by(by=[cols])`` returns a distributed per-group summary (one
+  row per group × rule) via the same fused aggregation under ``groupBy`` —
+  the north_rule's "per-partition pass/fail rows" — without collecting.
+  Each rule kind has one evaluator taking the group keys: ``check_data``
+  calls it with none and collects, ``check_data_by`` with the user's keys
+  and unions the results.
 """
 
 from __future__ import annotations
@@ -33,11 +38,13 @@ from __future__ import annotations
 import re
 import time as _time
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
-from operator import or_
+from operator import and_, or_
 from typing import Any, Mapping, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,62 +112,96 @@ def compile_rule_predicate(r: Rule) -> CompileResult:
     return CompileResult(column=pred, symbols=res.symbols, coercion_watchers=res.coercion_watchers)
 
 
-def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
-    # Probe rules against an EMPTY LocalRelation with the same schema, not
-    # against df itself: analysis cost is proportional to the logical-plan
-    # size, and df may carry an arbitrarily deep plan (unions, joins) that
-    # would be re-analyzed once per rule.  The empty frame has identical
-    # resolution semantics (missing column / type errors) at O(schema) cost.
-    #
-    # r7: the happy path probes ALL compilable rules in ONE select —
-    # aliased probe columns are analyzed independently, so the combined
-    # analysis succeeds iff each per-rule analysis would, and a ruleset of N
-    # valid rules costs one driver analysis roundtrip instead of N (~20 ms
-    # each; the dominant fixed cost of check_data on small/cached inputs).
-    # Only when the batch fails does the per-rule loop run to attribute the
-    # error rows (R/check_data.R:301-315 contract unchanged).
+def _analysis_errors(df: DataFrame, cols: Sequence[Column]) -> list[Exception | None]:
+    """Resolve each Column against ``df``'s schema without running a job;
+    return its analysis error, or None when it resolves.
+
+    Probe against an EMPTY LocalRelation with the same schema, not against
+    df itself: analysis cost is proportional to the logical-plan size, and
+    df may carry an arbitrarily deep plan (unions, joins) that would be
+    re-analyzed once per column.  The empty frame has identical resolution
+    semantics (missing column / type errors) at O(schema) cost.
+
+    r7: the happy path probes ALL columns in ONE select — aliased probe
+    columns are analyzed independently, so the combined analysis succeeds
+    iff each per-column analysis would, and N valid rules cost one driver
+    analysis roundtrip instead of N (~20 ms each; the dominant fixed cost of
+    check_data on small/cached inputs).  Only when the batch fails does the
+    per-column loop run to attribute the errors (R/check_data.R:301-315
+    contract unchanged)."""
+    if not cols:
+        return []
     probe_df = df.sparkSession.createDataFrame([], df.schema)
+    try:
+        probe_df.select(*[c.alias(f"__probe{i}") for i, c in enumerate(cols)])
+        return [None] * len(cols)
+    except Exception:
+        pass  # fall through to per-column attribution
+    errors: list[Exception | None] = []
+    for c in cols:
+        try:
+            probe_df.select(c.alias("__probe"))
+            errors.append(None)
+        except Exception as exc:  # AnalysisException, ...
+            errors.append(exc)
+    return errors
+
+
+def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
+    """Compile and analyze every rule now, so a bad rule (unparsable
+    expression, missing column) becomes an error row rather than a failed
+    fused job (R/check_data.R:301-315)."""
     staged: list[tuple[Rule, Exception | CompileResult]] = []
     for r in rules:
         try:
             staged.append((r, compile_rule_predicate(r)))
         except Exception as exc:  # ExprError and friends — compile-time
             staged.append((r, exc))
-
-    compilable = [(i, res) for i, (_, res) in enumerate(staged) if isinstance(res, CompileResult)]
-    batch_ok = False
-    if compilable:
-        try:
-            probe_df.select(
-                *[res.column.alias(f"__probe{i}") for i, res in compilable]
-            )
-            batch_ok = True
-        except Exception:
-            batch_ok = False  # fall through to per-rule attribution
-
+    analysis = iter(
+        _analysis_errors(df, [res.column for _, res in staged if isinstance(res, CompileResult)])
+    )
     out: list[_Compiled] = []
-    for i, (r, res) in enumerate(staged):
-        if not isinstance(res, CompileResult):
-            out.append(_Compiled(r, None, [], _strip_error(res)))
-            continue
-        if batch_ok:
+    for r, res in staged:
+        err = next(analysis) if isinstance(res, CompileResult) else res
+        if err is None:
             out.append(_Compiled(r, res.column, res.coercion_watchers, ""))
-            continue
-        try:
-            # force analysis now so missing columns become error rows,
-            # not a failed fused job (R/check_data.R:301-315)
-            probe_df.select(res.column.alias("__probe"))
-            out.append(_Compiled(r, res.column, res.coercion_watchers, ""))
-        except Exception as exc:  # AnalysisException, ...
-            out.append(_Compiled(r, None, [], _strip_error(exc)))
+        else:
+            out.append(_Compiled(r, None, [], _strip_error(err)))
     return out
 
 
+def _pass_sums(preds: Sequence[Column]) -> list[Column]:
+    """The fused conditional-sum aggregate: ``__tests`` (the row count) plus
+    one ``__p{i}`` sum of rows passing each predicate."""
+    return [F.count(F.lit(1)).alias("__tests")] + [
+        F.sum(F.when(p, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}")
+        for i, p in enumerate(preds)
+    ]
+
+
+def _long_summary(grouped: DataFrame, keys: list, rules: list[Rule]) -> DataFrame:
+    """Unpivot a ``_pass_sums`` aggregate to long form, one row per
+    (group × rule): ``keys…, name, expr, tests, pass, fail``.  An inline
+    array-of-structs — pure Catalyst, no Python in the row path."""
+    structs = [
+        F.struct(
+            F.lit(r.name).alias("name"),
+            F.lit(r.expr).alias("expr"),
+            F.col("__tests").alias("tests"),
+            F.col(f"__p{i}").alias("pass"),
+            (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
+        )
+        for i, r in enumerate(rules)
+    ]
+    return grouped.select(*keys, F.inline(F.array(*structs)))
+
+
 def _safe_alias(columns: Sequence[str], base: str) -> str:
-    """Internal-alias name guaranteed not to shadow a user column (the
-    same prefixing scheme as ``__dvfy_ref_val`` in _reference_ok_column:
-    a dataset with a column literally named ``__cnt`` must not turn a
-    valid uniqueness rule into an AMBIGUOUS_REFERENCE error)."""
+    """Internal-alias name guaranteed not to shadow a user column: a
+    dataset with a column literally named ``__dvfy_ref_val`` or ``__cnt``
+    must not turn a valid reference or uniqueness rule into an
+    AMBIGUOUS_REFERENCE error (used by ``_reference_counts`` and
+    ``_uniqueness_counts``)."""
     out = base
     while out in columns:
         out = "_" + out
@@ -306,16 +347,34 @@ def _schema_rows(
 
 
 # ---------------------------------------------------------------------------
-# Reference (FK membership) rules — distinct-ref join, AQE-broadcastable
+# Counted rules — reference (FK membership) and uniqueness.  Each rule kind
+# has ONE evaluator taking ``by_cols``: check_data calls it with no keys and
+# collects, check_data_by with the user's keys and unions
 # (R/data_column.R:332-379)
 # ---------------------------------------------------------------------------
 
 
-def _reference_ok_column(
-    df: DataFrame, r: ReferenceRule, datasets: Mapping[str, DataFrame]
-) -> tuple[DataFrame, Column, str]:
-    """Return (per-distinct-local-value counts joined with hit marker,
-    ok Column, count alias) for one reference rule.
+def _null_key(cols: Sequence[str]) -> Column:
+    """TRUE when any of ``cols`` is NULL."""
+    return reduce(or_, [F.col(c).isNull() for c in cols])
+
+
+def _sum_counts(counted: DataFrame, by_cols: list[str], ok: Column, cnt: str) -> DataFrame:
+    """``by…, tests, pass`` from a frame of pre-aggregated ``cnt`` counts:
+    tests = Σ cnt, pass = Σ cnt where ``ok``, per group of ``by_cols`` (one
+    global row when there are none)."""
+    return counted.groupBy(*by_cols).agg(
+        F.sum(F.col(cnt)).alias("tests"),
+        F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
+    )
+
+
+def _reference_counts(
+    df: DataFrame, r: ReferenceRule, datasets: Mapping[str, DataFrame], by_cols: list[str]
+) -> DataFrame:
+    """``by…, tests, pass`` for one reference rule: a distinct-ref LEFT join
+    (AQE picks broadcast-hash when the distinct ref side is small) — never a
+    collected ``isin`` list, which would cap ref size at driver memory.
 
     R ``%in%`` never yields NA: NULL local ⇒ FALSE (R/data_column.R:352), so
     ``hit IS NOT NULL`` reproduces it exactly.  Rewrite order is the OPPOSITE
@@ -324,72 +383,91 @@ def _reference_ok_column(
     NULL local value is rescued to ok=TRUE and then negated to a FAIL.
 
     r7 (guide §2.3 "aggregate before you shuffle"): the local side is
-    pre-aggregated to ``(value, count)`` BEFORE the membership join.  Every
-    row's verdict depends only on its value, so the join needs one row per
-    DISTINCT local value, not one per data row; partial aggregation combines
-    duplicates (including a hyper-hot FK value) map-side, the shuffle and
-    join carry |distinct| rows, and skew vanishes without AQE's help — the
-    10^12-row orders-table check joins ~|customers| rows.  A NULL local
-    value groups like any other value (count preserved) and still reads as
-    a non-hit.
+    projected to the key columns (by columns + the FK column, deduped — the
+    FK may itself be a by column) and pre-aggregated to
+    ``(group, value, count)`` BEFORE the membership join.  Every row's
+    verdict depends only on its value, so the join needs one row per
+    DISTINCT (group × local value), not one per data row; partial
+    aggregation combines duplicates (including a hyper-hot FK value)
+    map-side, the shuffle and join carry |distinct| rows, and skew vanishes
+    without AQE's help — the 10^12-row orders-table check joins
+    ~|customers| rows and the payload never joins.  A NULL local value
+    groups like any other value (count preserved) and still reads as a
+    non-hit.
     """
+    if r.ref_dataset not in datasets:
+        raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
     ref = datasets[r.ref_dataset]
     if r.ref_col not in ref.columns:
         raise ValueError(f"reference column '{r.ref_col}' not in dataset '{r.ref_dataset}'")
-    # collision-proof alias: a local column literally named __ref_val must not
-    # shadow the hit marker (same scheme as the check_data_by path below)
-    ref_alias = "__dvfy_ref_val"
-    while ref_alias in df.columns:
-        ref_alias = "_" + ref_alias
+    ref_alias = _safe_alias(df.columns, "__dvfy_ref_val")
     cnt = _safe_alias(df.columns, "__cnt")
     ref_vals = ref.select(F.col(r.ref_col).alias(ref_alias)).distinct()
-    # project df to the local column ONLY, then count per distinct value:
-    # membership counting needs nothing else, and at 10^12 rows neither the
-    # payload nor the data rows themselves may enter the join
-    local = df.select(F.col(r.local_col)).groupBy(r.local_col).agg(
-        F.count(F.lit(1)).alias(cnt)
-    )
+    proj = list(dict.fromkeys([*by_cols, r.local_col]))
+    local = df.select(*proj).groupBy(*proj).agg(F.count(F.lit(1)).alias(cnt))
     joined = local.join(ref_vals, local[r.local_col] == F.col(ref_alias), "left")
     ok = F.col(ref_alias).isNotNull()
     if r.allow_na:
         ok = ok | F.col(r.local_col).isNull()
     if r.negate:
         ok = ~ok
-    return joined, ok, cnt
+    return _sum_counts(joined, by_cols, ok, cnt)
 
 
-def _eval_uniqueness(df: DataFrame, r: "UniquenessRule", tests: int) -> dict[str, Any]:
-    """One key-only groupBy job: tests = Σ group counts, pass = rows in
-    singleton groups.  The projection ships ONLY the key columns into the
-    shuffle (at 10^12 rows the audio payload never moves); partial
-    aggregation combines duplicate keys map-side, and the second agg is a
-    single-row reduce.  allow_na rescues NULL-key rows FIRST, negate LAST
-    (the reference-rule flag order)."""
+def _uniqueness_counts(df: DataFrame, r: UniquenessRule, by_cols: list[str]) -> DataFrame:
+    """``by…, tests, pass`` for one uniqueness rule: ONE key-only
+    ``groupBy(by + keys)`` count, re-aggregated per group — tests = Σ group
+    counts, pass = rows in singleton groups, so uniqueness is judged WITHIN
+    each group.  The projection ships ONLY the key columns into the shuffle
+    (at 10^12 rows the audio payload never moves); partial aggregation
+    combines duplicate keys map-side.  NULL keys group together (SQL), and
+    a group's keys are its rows' keys, so the NULL-key test reads the group
+    columns.  With no keys the second aggregate is a single-row reduce.
+    allow_na rescues NULL-key rows FIRST, negate LAST (the reference-rule
+    flag order)."""
+    missing = [c for c in r.unique_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
+    cnt = _safe_alias(df.columns, "__cnt")
+    keys = list(dict.fromkeys([*by_cols, *r.unique_cols]))
+    grouped = df.select(*keys).groupBy(*keys).agg(F.count(F.lit(1)).alias(cnt))
+    ok = F.col(cnt) == 1
+    if r.allow_na:
+        ok = ok | _null_key(r.unique_cols)
+    if r.negate:
+        ok = ~ok
+    return _sum_counts(grouped, by_cols, ok, cnt)
+
+
+def _split_rules(rules: Ruleset) -> tuple[list[Rule], list[Rule]]:
+    """(expression rules, counted rules) — counted rules are the reference
+    rules then the uniqueness rules, each in ruleset order: the order of
+    their summary rows."""
+    expr_rules = [r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))]
+    counted = [r for r in rules if isinstance(r, ReferenceRule)]
+    counted += [r for r in rules if isinstance(r, UniquenessRule)]
+    return expr_rules, counted
+
+
+def _rule_counts(
+    df: DataFrame, r: Rule, datasets: Mapping[str, DataFrame], by_cols: list[str]
+) -> DataFrame:
+    if isinstance(r, ReferenceRule):
+        return _reference_counts(df, r, datasets, by_cols)
+    return _uniqueness_counts(df, r, by_cols)
+
+
+def _eval_counted(
+    df: DataFrame, r: Rule, datasets: Mapping[str, DataFrame], tests: int
+) -> dict[str, Any]:
+    """check_data's result row for one reference or uniqueness rule.
+    ``tests`` is the fused scan's row count; any failure (missing dataset or
+    column, analysis error) becomes an error row, never an exception
+    (R/check_data.R:301-315 applies to these rules too)."""
     t0 = _time.perf_counter()
     try:
-        missing = [c for c in r.unique_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"column(s) {missing} not in dataset")
-        keys = [F.col(c) for c in r.unique_cols]
-        cnt = _safe_alias(df.columns, "__cnt")
-        isn = _safe_alias(df.columns, "__isnull")
-        null_key = None
-        for c in r.unique_cols:
-            cond = F.col(c).isNull()
-            null_key = cond if null_key is None else (null_key | cond)
-        grouped = df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias(cnt),
-            F.max(null_key.cast("int")).alias(isn),
-        )
-        ok = F.col(cnt) == 1
-        if r.allow_na:
-            ok = ok | (F.col(isn) == 1)
-        if r.negate:
-            ok = ~ok
-        row = grouped.agg(
-            F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("p")
-        ).collect()[0]
-        return _result_row(r, tests, int(row["p"] or 0), elapsed=_time.perf_counter() - t0)
+        passed = _rule_counts(df, r, datasets, []).collect()[0]["pass"]
+        return _result_row(r, tests, int(passed or 0), elapsed=_time.perf_counter() - t0)
     except Exception as exc:
         return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
 
@@ -399,14 +477,8 @@ def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
     complement (filter_fails itself skips aggregation rules the way the
     reference skips reference rules, R/filters.R:42-47).  A left-semi join
     against the duplicated key set; only keys shuffle."""
-    from functools import reduce as _reduce
-    from operator import and_ as _and
-
     keys = list(r.unique_cols)
-    null_key = None
-    for c in keys:
-        cond = F.col(c).isNull()
-        null_key = cond if null_key is None else (null_key | cond)
+    null_key = _null_key(keys)
     # allow_na rescues NULL-key rows FIRST: they leave the candidate pool
     # (and re-enter wholesale as violators under negation, flag order per
     # R/data_column.R:353-358)
@@ -427,35 +499,11 @@ def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
     # null-SAFE semi join: without allow_na a duplicated NULL-key group must
     # still surface (SQL GROUP BY groups NULLs together; a plain equi-join
     # would silently drop them)
-    join_cond = _reduce(_and, [base[c].eqNullSafe(bad_keys[f"{bk}_{c}"]) for c in keys])
+    join_cond = reduce(and_, [base[c].eqNullSafe(bad_keys[f"{bk}_{c}"]) for c in keys])
     out = base.join(bad_keys, join_cond, "left_semi")
     if r.allow_na and r.negate:
         out = out.unionByName(df.filter(null_key))
     return out
-
-
-def _eval_reference(
-    df: DataFrame, r: ReferenceRule, datasets: Mapping[str, DataFrame], tests: int
-) -> dict[str, Any]:
-    t0 = _time.perf_counter()
-    if r.ref_dataset not in datasets:
-        return _result_row(
-            r,
-            tests,
-            0,
-            error=f"reference dataset '{r.ref_dataset}' not provided",
-            elapsed=_time.perf_counter() - t0,
-        )
-    try:
-        joined, ok, cnt = _reference_ok_column(df, r, datasets)
-        passed = joined.agg(
-            F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("p")
-        ).collect()[0]["p"]
-        return _result_row(r, tests, int(passed or 0), elapsed=_time.perf_counter() - t0)
-    except Exception as exc:
-        # missing local column, analysis errors, etc. — error row, never throw
-        # (R/check_data.R:301-315 contract applies to reference rules too)
-        return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
 
 
 # ---------------------------------------------------------------------------
@@ -574,9 +622,7 @@ def check_data(
         for msg in schema_warns:
             warnings.warn(msg, stacklevel=2)
 
-    expr_rules = [r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))]
-    ref_rules = [r for r in rules if isinstance(r, ReferenceRule)]
-    uniq_rules = [r for r in rules if isinstance(r, UniquenessRule)]
+    expr_rules, counted_rules = _split_rules(rules)
 
     compiled = _compile_all(df, expr_rules)
     good = [c for c in compiled if c.pred is not None]
@@ -586,19 +632,14 @@ def check_data(
     # its own, and an extra select only adds an analysis pass (measured 1.7x
     # slower — on CACHED inputs, where analysis overhead dominates; on cold
     # parquet the select is merely redundant, Catalyst prunes either way)
-    scan_df = df
-
     t0 = _time.perf_counter()
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-    for i, c in enumerate(good):
-        aggs.append(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}"))
-        for j, w in enumerate(c.watchers):
-            aggs.append(F.sum(F.when(w, F.lit(1)).otherwise(F.lit(0))).alias(f"__w{i}_{j}"))
+    aggs = _pass_sums([c.pred for c in good]) + [
+        F.sum(F.when(w, F.lit(1)).otherwise(F.lit(0))).alias(f"__w{i}_{j}")
+        for i, c in enumerate(good)
+        for j, w in enumerate(c.watchers)
+    ]
     warn_before = udf_warnings.snapshot()
-    if good or expr_rules or ref_rules:
-        agg_row = scan_df.agg(*aggs).collect()[0].asDict()
-    else:
-        agg_row = {"__tests": df.count()}
+    agg_row = df.agg(*aggs).collect()[0].asDict()
     tests = int(agg_row["__tests"])
     scan_elapsed = _time.perf_counter() - t0
     per_rule_time = scan_elapsed / max(len(good), 1)
@@ -607,7 +648,7 @@ def check_data(
     if timing == "per_rule":
         for i, c in enumerate(good):
             t1 = _time.perf_counter()
-            scan_df.agg(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0)))).collect()
+            df.agg(*_pass_sums([c.pred])).collect()
             rule_times[i] = _time.perf_counter() - t1
 
     # executor-side warnings raised inside UDF batches during THIS job,
@@ -651,32 +692,26 @@ def check_data(
             )
             gi += 1
 
-    # reference rules are independent join+agg jobs — submit them concurrently
-    # (Spark's scheduler interleaves jobs from multiple driver threads); order
-    # of the result rows still follows ruleset order
-    if len(ref_rules) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    # reference and uniqueness rules are independent join/groupBy jobs —
+    # submit them concurrently from one pool (Spark's scheduler interleaves
+    # jobs from multiple driver threads); result rows keep _split_rules' order.
+    # The pool target inherits the caller's local properties and session
+    # tags: pinned pool threads would otherwise start without the caller's
+    # job group and tags, so cancelling by group or tag would miss them.
+    def evaluate(r: Rule) -> dict[str, Any]:
+        return _eval_counted(df, r, datasets, tests)
 
-        with ThreadPoolExecutor(max_workers=min(4, len(ref_rules))) as pool:
-            ref_results = list(
-                pool.map(lambda r: _eval_reference(df, r, datasets, tests), ref_rules)
-            )
+    if len(counted_rules) > 1:
+        with ThreadPoolExecutor(max_workers=min(4, len(counted_rules))) as pool:
+            # returns the session itself when pinned-thread mode is off,
+            # where there is nothing to inherit
+            inherit = inheritable_thread_target(df.sparkSession)
+            target = inherit(evaluate) if callable(inherit) else evaluate
+            counted_rows = list(pool.map(target, counted_rules))
     else:
-        ref_results = [_eval_reference(df, r, datasets, tests) for r in ref_rules]
+        counted_rows = [evaluate(r) for r in counted_rules]
 
-    # uniqueness rules are independent groupBy jobs — same concurrent driver
-    # submission as reference rules (scheduler interleaves; row order kept)
-    if len(uniq_rules) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(uniq_rules))) as pool:
-            uniq_results = list(
-                pool.map(lambda r: _eval_uniqueness(df, r, tests), uniq_rules)
-            )
-    else:
-        uniq_results = [_eval_uniqueness(df, r, tests) for r in uniq_rules]
-
-    all_rows = schema_rows + row_results + ref_results + uniq_results
+    all_rows = schema_rows + row_results + counted_rows
     result = _local_result_df(
         spark,
         [tuple(r[f.name] for f in RESULT_SCHEMA.fields) for r in all_rows],
@@ -741,11 +776,14 @@ def check_data_by(
 ) -> DataFrame:
     """Per-group pass/fail summary — stays distributed (no collect).
 
+    Every rule kind is evaluated by the same function as in ``check_data``,
+    here with ``by`` as the group keys (``check_data`` is the no-key case).
     Reference (FK) rules are supported when ``datasets`` supplies the lookup
     tables: each becomes ONE key-only projection → distinct-ref left join →
     the same groupBy aggregation (payload bytes never join), and its rows
-    union after the expression-rule rows.  Without ``datasets`` a ruleset
-    containing reference rules raises instead of silently dropping them.
+    union after the expression-rule rows, followed by the uniqueness rules'
+    rows.  Without ``datasets`` a ruleset containing reference rules raises
+    instead of silently dropping them.
 
     One ``groupBy(by).agg`` computes every rule's conditional sum per group in
     a single shuffle; results are unpivoted to long form
@@ -765,81 +803,26 @@ def check_data_by(
         rules = ruleset(rules)
     by_cols = [by] if isinstance(by, str) else list(by)
 
-    ref_rules = [r for r in rules if isinstance(r, ReferenceRule)]
-    if ref_rules and datasets is None:
+    expr_rules, counted_rules = _split_rules(rules)
+    if datasets is None and any(isinstance(r, ReferenceRule) for r in counted_rules):
         raise ValueError(
             "ruleset contains reference rules; pass datasets={'name': ref_df, ...} "
             "to check_data_by (they would otherwise be silently dropped)"
         )
-    uniq_rules = [r for r in rules if isinstance(r, UniquenessRule)]
-    expr_rules = [
-        r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))
-    ]
 
-    out: DataFrame | None = None
+    parts: list[DataFrame] = []
     if expr_rules:
-        compiled = _compile_all(df, expr_rules)
-        good = [c for c in compiled if c.pred is not None]
+        good = [c for c in _compile_all(df, expr_rules) if c.pred is not None]
         if not good:
             raise ValueError("no compilable rules for check_data_by")
+        grouped = df.groupBy(*by_cols).agg(*_pass_sums([c.pred for c in good]))
+        parts.append(_long_summary(grouped, by_cols, [c.rule for c in good]))
 
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-        for i, c in enumerate(good):
-            aggs.append(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}"))
-        grouped = df.groupBy(*[F.col(c) for c in by_cols]).agg(*aggs)
-
-        structs = [
-            F.struct(
-                F.lit(c.rule.name).alias("name"),
-                F.lit(c.rule.expr).alias("expr"),
-                F.col("__tests").alias("tests"),
-                F.col(f"__p{i}").alias("pass"),
-                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-            )
-            for i, c in enumerate(good)
-        ]
-        out = (
-            grouped.select(*by_cols, F.explode(F.array(*structs)).alias("__r"))
-            .select(*by_cols, "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail")
-        )
-
-    for r in ref_rules:
-        if r.ref_dataset not in datasets:
-            raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
-        # collision-proof alias: never shadowed by a user column of the same
-        # name, and unique even when the FK column is itself a by column
-        ref_alias = "__dvfy_ref_val"
-        while ref_alias in df.columns:
-            ref_alias = "_" + ref_alias
-        ref_vals = (
-            datasets[r.ref_dataset].select(F.col(r.ref_col).alias(ref_alias)).distinct()
-        )
-        # key-only projection: by columns + the FK column (deduped — the FK
-        # may itself be a by column); payload never joins.  r7: pre-aggregate
-        # to (group, value, count) BEFORE the membership join (guide §2.3) —
-        # the join carries one row per distinct (group × FK value), partial
-        # aggregation absorbs hot keys map-side, and the per-group sums
-        # reconstruct exact tests/pass from the counts.
-        proj = list(by_cols) + ([r.local_col] if r.local_col not in by_cols else [])
-        cnt = _safe_alias(df.columns, "__cnt")
-        local = (
-            df.select(*[F.col(c) for c in proj])
-            .groupBy(*proj)
-            .agg(F.count(F.lit(1)).alias(cnt))
-        )
-        joined = local.join(ref_vals, local[r.local_col] == F.col(ref_alias), "left")
-        ok = F.col(ref_alias).isNotNull()
-        if r.allow_na:  # rescue FIRST, negate LAST (R/data_column.R:353-358)
-            ok = ok | F.col(r.local_col).isNull()
-        if r.negate:
-            ok = ~ok
-        rows = (
-            joined.groupBy(*[F.col(c) for c in by_cols])
-            .agg(
-                F.sum(F.col(cnt)).alias("tests"),
-                F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
-            )
-            .select(
+    # counted rules raise on a missing dataset or column: the _by contract
+    # has no error-row channel
+    for r in counted_rules:
+        parts.append(
+            _rule_counts(df, r, datasets or {}, by_cols).select(
                 *by_cols,
                 F.lit(r.name).alias("name"),
                 F.lit(r.expr).alias("expr"),
@@ -848,55 +831,10 @@ def check_data_by(
                 (F.col("tests") - F.col("pass")).alias("fail"),
             )
         )
-        out = rows if out is None else out.unionByName(rows)
 
-    for r in uniq_rules:
-        # per-group uniqueness: ONE groupBy(by + keys) count, re-aggregated
-        # per group — keys-only projection, payload never shuffles.  Missing
-        # key columns raise (the _by contract has no error-row channel).
-        missing = [c for c in r.unique_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
-        key_cols = [c for c in r.unique_cols if c not in by_cols]
-        cnt = _safe_alias(df.columns, "__cnt")
-        isn = _safe_alias(df.columns, "__isnull")
-        null_key = None
-        for c in r.unique_cols:
-            cond = F.col(c).isNull()
-            null_key = cond if null_key is None else (null_key | cond)
-        grouped = (
-            df.select(*[F.col(c) for c in by_cols + key_cols])
-            .groupBy(*[F.col(c) for c in by_cols + list(r.unique_cols)])
-            .agg(
-                F.count(F.lit(1)).alias(cnt),
-                F.max(null_key.cast("int")).alias(isn),
-            )
-        )
-        ok = F.col(cnt) == 1
-        if r.allow_na:
-            ok = ok | (F.col(isn) == 1)
-        if r.negate:
-            ok = ~ok
-        rows = (
-            grouped.groupBy(*[F.col(c) for c in by_cols])
-            .agg(
-                F.sum(F.col(cnt)).alias("tests"),
-                F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
-            )
-            .select(
-                *by_cols,
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                "tests",
-                "pass",
-                (F.col("tests") - F.col("pass")).alias("fail"),
-            )
-        )
-        out = rows if out is None else out.unionByName(rows)
-
-    if out is None:
+    if not parts:
         raise ValueError("no compilable rules for check_data_by")
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def check_data_by_file(
@@ -971,20 +909,6 @@ def stamp_file_col(df: DataFrame, file_col: str, basename: bool, caller: str) ->
     if basename:
         src = F.regexp_extract(src, r"([^/]+)$", 1)
     return df.withColumn(file_col, src)
-
-
-def combined_fail_predicate(rules: Ruleset) -> Column:
-    """OR of all per-rule failure predicates — one scan finds every violator."""
-    from .filters import fail_predicate
-
-    preds = [
-        fail_predicate(r)
-        for r in rules
-        if not isinstance(r, (ReferenceRule, UniquenessRule))
-    ]
-    if not preds:
-        return F.lit(False)
-    return reduce(or_, preds)
 
 
 def reference_violations(

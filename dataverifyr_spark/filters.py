@@ -38,6 +38,7 @@ from operator import or_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .check import _analysis_errors, compile_rule_predicate
 from .expr import col_ref
 from .rules import ReferenceRule, Rule, Ruleset, UniquenessRule
 
@@ -45,17 +46,12 @@ __all__ = ["filter_fails", "fail_predicate", "violation_examples"]
 
 
 def fail_predicate(r: Rule) -> Column:
-    """Failure predicate for one rule (see module docstring)."""
-    from .expr import compile_expr
-
-    res = compile_expr(r.expr)
+    """Failure predicate for one rule (see module docstring): steps 1-2 are
+    ``check_data``'s pass predicate; without allow_na the anti-guard ANDs
+    on before the outer negation."""
+    res = compile_rule_predicate(r)
     pred = res.column
-    if r.negate:
-        pred = ~pred
-    if r.allow_na:
-        for s in res.symbols:
-            pred = pred | col_ref(s).isNull()
-    else:
+    if not r.allow_na:
         for s in res.symbols:
             pred = pred & col_ref(s).isNotNull()
     return ~pred
@@ -93,30 +89,16 @@ def filter_fails(
     column (scale extension: write straight to a violations table).
     """
     rules = _rules_from_result(res)
-    # schema-only probe frame: rule analysis cost must not scale with x's plan
-    probe_df = x.sparkSession.createDataFrame([], x.schema)
     staged: list[tuple[Rule, Column]] = []
     for r in rules:
         try:
             staged.append((r, fail_predicate(r)))
         except Exception:
             continue  # compile-time failure (ExprError)
-    # r7: one batched analysis for the happy path (aliased probe columns
-    # resolve independently — same contract, one driver roundtrip instead
-    # of N); fall back to per-rule attribution only when the batch fails
-    usable: list[tuple[Rule, Column]] = []
-    try:
-        probe_df.select(*[p.alias(f"__probe{i}") for i, (_, p) in enumerate(staged)])
-        usable = staged
-    except Exception:
-        for r, pred in staged:
-            try:
-                probe_df.select(pred.alias("__probe"))  # force analysis now
-                usable.append((r, pred))
-            except Exception:
-                # uncompilable rule (e.g. missing column) cannot identify
-                # violation rows; check_data already reported it as an error row
-                continue
+    # an unanalyzable rule (e.g. missing column) cannot identify violation
+    # rows; check_data already reported it as an error row
+    errors = _analysis_errors(x, [pred for _, pred in staged])
+    usable = [s for s, err in zip(staged, errors) if err is None]
 
     if per_rule:
         out: dict[str, DataFrame] = {}

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..check import compile_rule_predicate
+from ..check import _long_summary, _pass_sums, compile_rule_predicate
 from ..rules import ReferenceRule, Rule, Ruleset, UniquenessRule, ruleset
 
 __all__ = [
@@ -56,8 +56,9 @@ def _parse_duration_s(s: str) -> float:
 
 
 def _rule_aggs(rules: Ruleset) -> tuple[list[Column], list[Rule]]:
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-    good: list[Rule] = []
+    """The batch engine's fused ``_pass_sums`` aggregate over the rules'
+    compiled predicates, behind the rule-kind guard every streaming surface
+    goes through."""
     for r in rules:
         if isinstance(r, ReferenceRule):
             raise ValueError("reference rules need a static lookup side; use foreachBatch")
@@ -65,12 +66,15 @@ def _rule_aggs(rules: Ruleset) -> tuple[list[Column], list[Rule]]:
             raise ValueError(
                 "uniqueness rules are aggregation rules; not supported in streaming"
             )
-        pred = compile_rule_predicate(r).column
-        aggs.append(
-            F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{len(good)}")
-        )
-        good.append(r)
-    return aggs, good
+    good = list(rules)
+    return _pass_sums([compile_rule_predicate(r).column for r in good]), good
+
+
+def _window_bounds(window_col: str) -> list[Column]:
+    return [
+        F.col(f"{window_col}.start").alias("window_start"),
+        F.col(f"{window_col}.end").alias("window_end"),
+    ]
 
 
 def check_stream(
@@ -95,21 +99,7 @@ def check_stream(
         .groupBy(F.window(F.col(time_col), window).alias("window"))
         .agg(*aggs)
     )
-    structs = [
-        F.struct(
-            F.lit(r.name).alias("name"),
-            F.lit(r.expr).alias("expr"),
-            F.col("__tests").alias("tests"),
-            F.col(f"__p{i}").alias("pass"),
-            (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-        )
-        for i, r in enumerate(good)
-    ]
-    return grouped.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        F.explode(F.array(*structs)).alias("__r"),
-    ).select("window_start", "window_end", "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail")
+    return _long_summary(grouped, _window_bounds("window"), good)
 
 
 def validate_stream_to_ledger(
@@ -225,31 +215,13 @@ def validate_stream_windowed_to_sink(
         tagged = tagged.withColumn("__late", late_pred)
 
         ontime = tagged.filter(~F.col("__late")).groupBy("__w").agg(*aggs)
-        structs = [
-            F.struct(
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                F.col("__tests").alias("tests"),
-                F.col(f"__p{i}").alias("pass"),
-                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-            )
-            for i, r in enumerate(good)
-        ]
-        rule_rows = ontime.select(
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
-            F.explode(F.array(*structs)).alias("__r"),
-        ).select(
-            "window_start", "window_end",
-            "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail",
-        )
+        rule_rows = _long_summary(ontime, _window_bounds("__w"), good)
         late_rows = (
             tagged.filter(F.col("__late"))
             .groupBy("__w")
             .agg(F.count(F.lit(1)).alias("tests"))
             .select(
-                F.col("__w.start").alias("window_start"),
-                F.col("__w.end").alias("window_end"),
+                *_window_bounds("__w"),
                 F.lit("_dropped_by_watermark").alias("name"),
                 F.lit(f"late > {watermark}").alias("expr"),
                 F.col("tests"),
@@ -350,9 +322,7 @@ def check_stream_cumulative(
 
     if isinstance(rules, Rule):
         rules = ruleset(rules)
-    good = [r for r in rules if not isinstance(r, ReferenceRule)]
-    if len(good) != len(list(rules)):
-        raise ValueError("reference rules need a static lookup side; use foreachBatch")
+    _, good = _rule_aggs(rules)
     preds = [compile_rule_predicate(r).column for r in good]
     flags = sdf.select(
         F.col(by),

@@ -326,6 +326,21 @@ class TestCumulativeState:
                 sdf, ruleset(rule("value >= 0"), reference_rule("source", "t", "c")), by="source"
             )
 
+    def test_uniqueness_rule_rejected(self, spark, stream_input):
+        """Same rule-kind guard as check_stream: a uniqueness rule is an
+        aggregation rule, not an unknown expression function."""
+        from dataverifyr_spark import unique_rule
+        from dataverifyr_spark.streaming import check_stream_cumulative
+
+        sdf = (
+            spark.readStream.schema("ts timestamp, value double, source string")
+            .parquet(f"{stream_input}/f*")
+        )
+        with pytest.raises(ValueError, match="uniqueness rules are aggregation rules"):
+            check_stream_cumulative(
+                sdf, ruleset(rule("value >= 0"), unique_rule("source")), by="source"
+            )
+
 
 class TestLateDataAccounting:
     def test_dropped_by_watermark_counters(self, spark, tmp_path):

@@ -151,7 +151,6 @@ assert "WindowGroupLimit" in mfplan and "Expand" not in mfplan, mfplan
 sections.append(("describe_by keyed most_frequent (approx: no Expand; WindowGroupLimit pre-limits top-n before the shuffle; tiny mf side broadcast-joins)", mfplan))
 
 # uniqueness (PK) rule: key-only projection -> two-level hash aggregate
-from dataverifyr_spark.check import _eval_uniqueness  # plan shape via the same exprs
 uniq_grouped = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("__cnt"))
 uplan = cap(uniq_grouped.agg(F.sum(F.when(F.col("__cnt")==1, F.col("__cnt")).otherwise(0)).alias("p")))
 assert "ReadSchema: struct<l_orderkey" in uplan, uplan  # payload pruned to the key
