@@ -20,7 +20,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import dataverifyr_spark as dv
 from dataverifyr_spark.check import check_data_by
-from dataverifyr_spark.operators.similarity import cosine_similarity_col
 from dataverifyr_spark.operators.text import STOPWORDS
 from dataverifyr_spark.operators.uniqueness import distinct_count_salted
 
@@ -65,15 +64,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_check_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return dv.check_data(li, _LINEITEM_RULES).select(*_SUMMARY_COLS)
-
-
-def q_check_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    rules = dv.ruleset(
-        dv.rule("l_quantity > 0 & l_quantity <= 30", name="q1"),
-        dv.rule("l_discount >= 0 & l_discount <= 0.05", name="q2"),
-    )
-    return check_data_by(li, rules, by="l_returnflag")
 
 
 def q_check_by_file_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,20 +226,6 @@ def q_dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_token_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dataverifyr_spark.operators.text import token_stats
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    return token_stats(docs, bpe=True).select(
-        "doc_id",
-        "n_tokens",
-        F.col("n_chars").alias("n_chars_calc"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        "n_bpe_pieces",
-    )
-
-
 def q_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     text = F.col("text")
@@ -281,66 +257,6 @@ def q_lang_scores_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("lang_guess", F.when(best > 0, guess))
 
 
-def q_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    q = F.array(*[F.lit(v) for v in qvec])
-    sim = F.round(cosine_similarity_col(F.col("embedding"), q), 4)
-    return (
-        emb.filter(F.col("vec_id") > 0)
-        .select("vec_id", sim.alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def q_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN SEARCH path oracled end-to-end (operators/ivf.py): with FIXED
-    deterministic centroids (the vectors of vec_id 1..8 — no k-means
-    training, so DuckDB can replicate), assign every vector to its nearest
-    centroid (argmin squared distance, first-min tie-break), probe the 3
-    centroids nearest the query, and return the exact cosine top-10 within
-    the probed inverted lists.  The oracle recomputes assignment + probe +
-    ranking with window functions over the same fixed centroids."""
-    from dataverifyr_spark.operators.ivf import ivf_index, ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    rows = emb.filter(F.col("vec_id").between(1, 8)).orderBy("vec_id").collect()
-    centroids = [list(r["embedding"]) for r in rows]
-    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    indexed = ivf_index(emb.filter(F.col("vec_id") > 0), centroids)
-    top = ivf_topk(indexed, centroids, qvec, k=10, nprobe=3)
-    return top.select("vec_id", F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-def q_lsh_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH bucketed top-k (operators/similarity.py lsh_topk): the
-    query's 4-bit sign bucket restricts the exact cosine scan to one bucket.
-    The oracle re-derives every vector's bucket from the SAME deterministic
-    hyperplanes (hash-seeded, no RNG state — emitted into the SQL as
-    literals) and ranks within the query's bucket."""
-    from dataverifyr_spark.operators.similarity import lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    top = lsh_topk(emb.filter(F.col("vec_id") > 0), qvec, k=10, bits=4, seed=42)
-    return top.select("vec_id", F.round("cosine_sim", 4).alias("cosine_sim"))
-
-
-def q_drift_psi_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution drift: PSI of l_extendedprice (full table) vs a baseline
-    snapshot (returnflag='A' slice) over a 20-bin histogram."""
-    from dataverifyr_spark.operators.drift import drift_check, histogram
-
-    li = _t(spark, sf_dir, "lineitem")
-    baseline = histogram(li.filter("l_returnflag = 'A'"), "l_extendedprice", 0.0, 110000.0, 20)
-    return drift_check(li, "l_extendedprice", baseline, 0.0, 110000.0, bins=20, threshold=0.2)
-
-
 def q_pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC search (operators/pq.py) oracled end-to-end:
     FIXED codebooks (subspace slices of vec_id 1..16 — no k-means, so DuckDB
@@ -363,25 +279,6 @@ def q_pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = pq_encode(emb.filter(F.col("vec_id") > 16), books)
     top = pq_adc_topk(enc, books, qvec, k=10)
     return top.select("vec_id", F.round("adc_dist", 6).alias("adc_dist"))
-
-
-def q_chunk_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r5: passage-level dedup shape (operators/chunks.py) — every document
-    chunked into 8-token windows by a pure-Catalyst sequence/slice explode
-    (no shuffle, no Python), then the chunk-duplication histogram
-    (n_copies → n_groups) over exact chunk-text groups.  The oracle
-    recomputes the identical windows with list_slice over generate_series —
-    window COUNT math included."""
-    from dataverifyr_spark.operators.chunks import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    chunks = chunk_documents(docs, chunk_tokens=8)
-    return (
-        chunks.groupBy("chunk_text")
-        .agg(F.count(F.lit(1)).alias("n_copies"))
-        .groupBy("n_copies")
-        .agg(F.count(F.lit(1)).alias("n_groups"))
-    )
 
 
 def q_suggest_rules_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,22 +341,6 @@ def q_check_error_rows_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select(
         "name", "tests", "pass", "fail", (F.col("error") != "").alias("has_error")
     )
-
-
-def q_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r5: multi-quantile column profiles (operators/quantiles.py — the
-    north_star "approx-quantiles" capability; describe stops at the
-    median).  Gate runs the EXACT interpolated mode so DuckDB's
-    quantile_cont replicates value-for-value; the approx sketch arm is
-    pinned against exact by pytest rank-tolerance and an Expand-free plan
-    test."""
-    from dataverifyr_spark.operators.quantiles import column_quantiles
-
-    li = _t(spark, sf_dir, "lineitem")
-    q = column_quantiles(
-        li, ["l_extendedprice", "l_quantity", "l_discount"], approx=False
-    )
-    return q.select("var", "prob", F.round("value", 6).alias("value"))
 
 
 def q_quantiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -615,58 +496,8 @@ def q_near_dup_pairs_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ids only: the claim under test is the exact pair SET (recall 1.0 vs the
     # O(n²) oracle); the cosine VALUE is engine-fold-order sensitive in its
-    # 4th decimal and is value-gated separately by topk_embeddings
+    # 4th decimal and is value-gated separately by topk_join_embeddings
     return pairs.select("id_a", "id_b")
-
-
-def q_near_dup_pairs_embeddings_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same near-dup recall certification as near_dup_pairs_embeddings but at
-    PRODUCTION LSH dimensions: the 64-dim vectors are deterministically tiled
-    to 768 dims (12 copies, per-copy integer scalars — cosine-preserving, so
-    the ground-truth pair set is unchanged), and bands×bits×dim = 12×8×768 =
-    73,728 plane elements puts _lsh_codes on its broadcast-numpy pandas-UDF
-    arm (similarity.py sign(X@P.T) BLAS path) — the r3 verdict's only
-    gate-untested branch.  Oracle: O(n²) exact cosine on the same tiled
-    table."""
-    from dataverifyr_spark.operators.similarity import embedding_near_dup_pairs
-
-    allv = _embeddings_with_near_dups(spark, sf_dir)
-    hi = allv.select(
-        "vec_id",
-        F.flatten(
-            F.array(
-                *[
-                    F.transform("v", lambda x, s=float(j % 3 + 1): x * F.lit(s))
-                    for j in range(12)
-                ]
-            )
-        ).alias("v"),
-    )
-    pairs = embedding_near_dup_pairs(
-        hi, dim=768, threshold=0.99, bits=8, bands=12, vec_col="v"
-    )
-    return pairs.select("id_a", "id_b")
-
-
-def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding dedup end-to-end: banded-LSH pairs → connected components →
-    min-id survivor per cluster, oracled by brute-force pairs + recursive-CTE
-    reachability over the same derived table."""
-    from dataverifyr_spark.operators.components import embedding_dedup_groups
-
-    allv = _embeddings_with_near_dups(spark, sf_dir)
-    return embedding_dedup_groups(
-        allv, dim=64, threshold=0.99, bits=16, bands=6, vec_col="v"
-    )
-
-
-def q_check_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    rules = dv.ruleset(
-        dv.rule("value > 0", name="e1"),
-        dv.rule("value <= 400", name="e2"),
-    )
-    return check_data_by(ev, rules, by="event_type")
 
 
 def q_events_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,14 +510,6 @@ def q_events_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return freshness(
         ev, "ts", as_of=dt.datetime(2024, 1, 31, 12, 0, 0), max_lag_minutes=720, by="event_type"
     )
-
-
-def q_most_frequent_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """describe()'s top-k most_frequent formatting on the two low-cardinality
-    customer columns ("v (c), v2 (c2), v3 (c3)", R/describe.R:75-93)."""
-    cust = _t(spark, sf_dir, "customer")
-    d = dv.describe(cust.select("c_nationkey", "c_mktsegment"), top_n=3)
-    return d.select("var", "most_frequent")
 
 
 def q_lsh_jaccard_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -732,20 +555,6 @@ def q_simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash(docs.select("doc_id", "text"), bits=32, token_hash=md5_hash32).select(
         "doc_id", "simhash"
     )
-
-
-def q_audio_validate_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graft flagship: validate a deterministic audio clip + transcript
-    table (input_hint schema) — decode, SNR-vs-regenerated-waveform allclose,
-    transcript equality, sr/dur consistency — in one fused scan.  The decode
-    itself is not SQL-expressible, but the fixture's violation-injection
-    cadence is pure index arithmetic (audio/fixtures.py:42-48), so the oracle
-    recomputes every rule's expected pass/fail from generate_series — the
-    Spark side must hit the exact counts through real WAV decoding."""
-    from dataverifyr_spark.audio import audio_ruleset, clips_table, with_audio_features
-
-    clips = clips_table(spark, 2000)
-    return dv.check_data(with_audio_features(clips), audio_ruleset()).select(*_SUMMARY_COLS)
 
 
 def q_audio_mixed_codec_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,23 +695,6 @@ def q_audio_segments_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dv.check_data(segs, rules).select(*_SUMMARY_COLS)
 
 
-def q_audio_validate_by_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-PARTITION audio validation — the north_rule flagship shape: one
-    groupBy(codec).agg computes every rule's conditional sum per partition
-    key in a single shuffle (check_data_by), over REAL decoded features.
-    Oracle recomputes per-codec-group counts from the injection cadences."""
-    from dataverifyr_spark.audio import clips_table, with_audio_features
-
-    clips = clips_table(spark, 2000)
-    feats = with_audio_features(clips)
-    rules = dv.ruleset(
-        dv.rule("audio_valid", name="decodes"),
-        dv.rule("audio_sr == sr_hz", name="sr_consistent"),
-        dv.rule("audio_snr_db >= 30.0", name="pcm_allclose_snr"),
-    )
-    return check_data_by(feats, rules, by="codec")
-
-
 def q_audio_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-LEVEL audio violations (the filter_fails shape over decoded
     features): (clip_id, failed_rule) pairs from one tagged scan.  The
@@ -924,7 +716,7 @@ def q_audio_validate_vs_reference(spark: SparkSession, sf_dir: str) -> DataFrame
     """The vs-REFERENCE-TABLE audio path: expectations come from a joined
     originals table (expected_bytes/expected_transcript columns) instead of
     the generator — the real-corpus shape.  Same rules, same cadence oracle
-    as audio_validate_clips: the join + dual-decode SNR must reproduce the
+    as the generator path: the join + dual-decode SNR must reproduce the
     exact counts the generator path hits."""
     from dataverifyr_spark.audio import (
         audio_ruleset,
@@ -940,24 +732,6 @@ def q_audio_validate_vs_reference(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select(*_SUMMARY_COLS)
 
 
-def q_image_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-payload validation: real PPM decode in one Arrow pass (truncated
-    containers and codec-needing formats become invalid rows), rules fused
-    over the probe columns.  Oracle recomputes the fixture's injection
-    cadence (operators/image.py DARK/CORRUPT/CODEC_EVERY) from
-    generate_series — the Spark side must hit the counts through real
-    decoding."""
-    from dataverifyr_spark.operators.image import image_probe, images_table
-
-    imgs = images_table(spark, 1000)
-    rules = dv.ruleset(
-        dv.rule("img_valid", name="decodes"),
-        dv.rule("img_width <= 20", name="width_cap", allow_na=True),
-        dv.rule("img_brightness > 1", name="not_black", allow_na=True),
-    )
-    return dv.check_data(image_probe(imgs), rules).select(*_SUMMARY_COLS)
-
-
 def q_reference_by_orderstatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group referential integrity: FK membership counts per
     o_orderstatus in ONE key-only join + groupBy (check_data_by with
@@ -967,22 +741,6 @@ def q_reference_by_orderstatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     rs = dv.ruleset(dv.reference_rule("o_custkey", "customer", "c_custkey", name="fk_by"))
     return check_data_by(orders_df, rs, by="o_orderstatus", datasets={"customer": cust})
-
-
-def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-gap detection: 6-hour buckets of January with ZERO events,
-    after carving days 5 and 12 out of the stream (so every SF has known
-    gaps).  Calendar side is a generated sequence, observed side one
-    distinct-bucket aggregation, gaps = anti-join; the oracle recomputes
-    the same buckets with time_bucket + generate_series."""
-    import datetime as _dt
-
-    from dataverifyr_spark.operators.freshness import interval_gaps
-
-    ev = _t(spark, sf_dir, "events").filter(~F.dayofmonth("ts").isin(5, 12))
-    return interval_gaps(
-        ev, "ts", _dt.datetime(2024, 1, 1), _dt.datetime(2024, 1, 31), interval_minutes=360
-    )
 
 
 def q_suggest_rules_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1001,17 +759,6 @@ def q_suggest_rules_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dv.check_data({"customer": cust, "nation": nat}, rs).select(
         "name", "tests", "pass", "fail"
     )
-
-
-def q_suggest_rules_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Timestamp induction: the events table's ts column yields a
-    ``fresh_ts`` lower-bound rule (new batches must not backfill records
-    older than the trusted slice's observed minimum), alongside the usual
-    bounds/set/not-null patterns and the r5 PK draft for event_id — 12
-    rules, all self-passing."""
-    ev = _t(spark, sf_dir, "events")
-    rs = dv.suggest_rules(ev)
-    return dv.check_data(ev, rs).select("name", "tests", "pass", "fail")
 
 
 def q_schema_drift_lineitem_vs_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,34 +809,6 @@ def q_video_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dv.rule("vid_mean_luma > 1", name="not_black", allow_na=True),
     )
     return dv.check_data(video_probe(vids), rules).select(*_SUMMARY_COLS)
-
-
-def q_describe_by_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-PARTITION profiling (describe_by, the north_rule per-partition
-    shape for describe, symmetric with check_data_by): one
-    groupBy(codec).agg(fused stats) job over the deterministic clips fixture,
-    in-plan explode to (group, column) rows — no driver loop over groups.
-    The oracle reconstructs the SQL-derivable columns (codec cadence %29,
-    sr_hz: rate table i%4 with %17 lie, clip_id length 17) from
-    generate_series and recomputes every statistic."""
-    from dataverifyr_spark.audio.fixtures import clips_table
-    from dataverifyr_spark.describe import describe_by
-
-    clips = clips_table(spark, 2000)
-    prof = describe_by(clips.select("codec", "sr_hz", "clip_id"), by="codec")
-    return prof.select(
-        "codec",
-        "var",
-        "type",
-        "n",
-        "n_distinct",
-        "n_na",
-        F.round("min", 6).alias("min"),
-        F.round("mean", 6).alias("mean"),
-        F.round("median", 6).alias("median"),
-        F.round("max", 6).alias("max"),
-        F.round("sd", 6).alias("sd"),
-    )
 
 
 def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,37 +919,6 @@ def q_h264_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dv.check_data(video_probe(vids), rules).select(*_SUMMARY_COLS)
 
 
-def q_lsh_pairs_against_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental cross-corpus dedup: the documents table split into an
-    existing CORPUS (even doc_id) and a NEW batch (odd doc_id);
-    lsh_pairs_against bands both sides and joins across them, then exact
-    3-gram Jaccard verifies candidates.  Oracled against DuckDB's exact
-    all-pairs Jaccard restricted to cross-half pairs — certifying the
-    incremental path loses no true pair, like the self-join gate."""
-    from dataverifyr_spark.operators.dedup import (
-        lsh_pairs_against,
-        minhash_signatures,
-        ngram_jaccard,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    c_sigs = minhash_signatures(corpus, "text", "doc_id", num_hashes=32, shingle_k=3)
-    n_sigs = minhash_signatures(new, "text", "doc_id", num_hashes=32, shingle_k=3)
-    pairs = lsh_pairs_against(n_sigs, c_sigs, "doc_id", num_bands=16)
-    texts = docs.select("doc_id", "text")
-    enriched = pairs.join(
-        texts.withColumnRenamed("doc_id", "id_new").withColumnRenamed("text", "text_a"),
-        "id_new",
-    ).join(
-        texts.withColumnRenamed("doc_id", "id_corpus").withColumnRenamed("text", "text_b"),
-        "id_corpus",
-    )
-    verified = ngram_jaccard(enriched, "text_a", "text_b", k=3)
-    return verified.filter(F.col("jaccard") >= 0.7).select("id_new", "id_corpus", "jaccard")
-
-
 def q_chunk_incremental_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r6: the chunk→incremental-dedup COMPOSITION as one gate (promoted
     from pytest TestChunkIncrementalDedup per r5 VERDICT #8) — the daily
@@ -1275,73 +963,6 @@ def q_chunk_incremental_dedup_documents(spark: SparkSession, sf_dir: str) -> Dat
     )
     verified = ngram_jaccard(enriched, "text_a", "text_b", k=3)
     return verified.filter(F.col("jaccard") >= 0.7).select("id_new", "id_corpus", "jaccard")
-
-
-def q_stream_cumulative_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming flagship (applyInPandasWithState,
-    streaming/validate.py): the events table replayed as 3 DETERMINISTIC
-    micro-batches (event_id % 3) through ``check_stream_cumulative``; every
-    trigger emits each appearing key's running (tests, pass, fail) per rule.
-    Oracled by a DuckDB windowed cumulative-sum CTE over the same batch
-    assignment — per (batch, event_type, rule) counters must hash-match."""
-    import glob
-    import shutil
-    import tempfile
-
-    from dataverifyr_spark.streaming import check_stream_cumulative
-
-    rules = dv.ruleset(
-        dv.rule("value <= 100", name="v_low"),
-        dv.rule("value > 400", name="v_not_extreme", negate=True),
-    )
-    ev = _t(spark, sf_dir, "events").select(
-        (F.col("event_id") % 3).cast("int").alias("batch"), "event_type", "value"
-    )
-    root = tempfile.mkdtemp(prefix="dvfy_stream_gate_")
-    acc: dict[tuple, tuple] = {}
-    try:
-        indir = os.path.join(root, "in")
-        os.makedirs(indir)
-        staged = []
-        for b in range(3):
-            stage = os.path.join(root, f"stage{b}")
-            (
-                ev.filter(F.col("batch") == b)
-                .select("event_type", "value")
-                .coalesce(1)
-                .write.parquet(stage)
-            )
-            staged.append(glob.glob(os.path.join(stage, "part-*.parquet"))[0])
-        sdf = spark.readStream.schema("event_type string, value double").parquet(indir)
-        out = check_stream_cumulative(sdf, rules, by="event_type")
-        cur = {"batch": 0}
-
-        def sink(bdf: DataFrame, _bid: int) -> None:
-            # last emission per (key, rule) within a trigger wins (cumulative)
-            for r in bdf.collect():
-                acc[(cur["batch"], r["event_type"], r["name"])] = (
-                    r["tests"], r["pass"], r["fail"],
-                )
-
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            for b in range(3):  # one file in, drain, THEN next — ordered batches
-                cur["batch"] = b
-                shutil.copy(staged[b], os.path.join(indir, f"b{b}.parquet"))
-                q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    rows = [(b, k, n, t, p, f_) for (b, k, n), (t, p, f_) in sorted(acc.items())]
-    return spark.createDataFrame(
-        rows, "batch int, event_type string, name string, tests bigint, pass bigint, fail bigint"
-    )
 
 
 def q_stream_to_ledger_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1599,9 +1220,8 @@ def q_ledger_resume_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CORRECTNESS row each round).  Every retirement below has (a) a green
 # hash_match driver row in CORRECTNESS_r04/r05.json and (b) surviving
 # coverage — a sibling gate exercising the same code path and/or dedicated
-# pytest tests.  The oracle SQL for each stays in oracle_sql()'s source for
-# the record; q_* functions remain importable for tests unless the variant
-# they drove no longer exists.
+# pytest tests.  Only the one-line rationale stays here: the retired q_*
+# functions and their oracle SQL are deleted (git history has them).
 RETIRED_GATES: dict[str, str] = {
     "most_frequent_fused_customer": "fused single-scan variant of most_frequent_customer; describe has since had one top-k (that single all-columns pass), so the variant no longer exists and its q_* function is gone; covered by describe_by_most_frequent and tests/test_describe.py",
     "near_dup_pairs_embeddings_udf": "dim-768 broadcast-numpy arm of near_dup_pairs_embeddings; adaptive-path equality pinned in tests/test_operators.py",
@@ -1729,20 +1349,6 @@ def oracle_sql() -> dict[str, str]:
         ]
     )
 
-    check_by = """
-    SELECT l_returnflag, 'q1' AS name, 'l_quantity > 0 & l_quantity <= 30' AS expr,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN l_quantity > 0 AND l_quantity <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN l_quantity > 0 AND l_quantity <= 30 THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM lineitem GROUP BY l_returnflag
-    UNION ALL
-    SELECT l_returnflag, 'q2' AS name, 'l_discount >= 0 & l_discount <= 0.05' AS expr,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN l_discount >= 0 AND l_discount <= 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN l_discount >= 0 AND l_discount <= 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM lineitem GROUP BY l_returnflag
-    """
-
     violations = f"""
     SELECT *, 'c_acctbal >= 0' AS failed_rule FROM customer
     WHERE NOT (c_acctbal >= 0 AND c_acctbal IS NOT NULL)
@@ -1801,16 +1407,6 @@ def oracle_sql() -> dict[str, str]:
     FROM documents GROUP BY md5(text)
     """
 
-    token_stats = r"""
-    SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-           CAST(LENGTH(text) AS INT) AS n_chars_calc,
-           CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_distinct_tokens,
-           CAST(len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]{1,4}|[^A-Za-z0-9\s]'))
-                AS INT) AS n_bpe_pieces
-    FROM documents
-    """
-
     quality = """
     SELECT doc_id,
            ROUND(CAST(LENGTH(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / LENGTH(text), 6) AS alpha_ratio,
@@ -1836,51 +1432,6 @@ def oracle_sql() -> dict[str, str]:
     FROM (SELECT doc_id, {", ".join(score_exprs)} FROM documents)
     """
 
-    topk = """
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           ROUND(
-             list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qe AS DOUBLE[]))
-             / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(CAST(qe AS DOUBLE[]), CAST(qe AS DOUBLE[])))),
-             4) AS cosine_sim
-    FROM embeddings, q
-    WHERE vec_id > 0
-    ORDER BY cosine_sim DESC, vec_id ASC
-    LIMIT 10
-    """
-
-    ivf_topk_sql = """
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    q AS (SELECT v AS qe FROM e WHERE vec_id = 0),
-    cents AS (SELECT vec_id - 1 AS cid, v AS cv FROM e WHERE vec_id BETWEEN 1 AND 8),
-    scored AS (
-      SELECT a.vec_id, a.v, c.cid,
-             ROW_NUMBER() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY list_dot_product(a.v, a.v) - 2 * list_dot_product(a.v, c.cv)
-                        + list_dot_product(c.cv, c.cv) ASC, c.cid ASC
-             ) AS rn
-      FROM e a CROSS JOIN cents c
-      WHERE a.vec_id > 0
-    ),
-    assigned AS (SELECT vec_id, v, cid FROM scored WHERE rn = 1),
-    probe AS (
-      SELECT cid FROM cents, q
-      ORDER BY list_dot_product(cv, cv) - 2 * list_dot_product(cv, qe)
-               + list_dot_product(qe, qe) ASC, cid ASC
-      LIMIT 3
-    )
-    SELECT a.vec_id,
-           ROUND(list_dot_product(a.v, q.qe)
-                 / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(q.qe, q.qe))),
-                 4) AS cosine_sim
-    FROM assigned a, q
-    WHERE a.cid IN (SELECT cid FROM probe)
-    ORDER BY cosine_sim DESC, a.vec_id ASC
-    LIMIT 10
-    """
-
     from dataverifyr_spark.operators.similarity import _hyperplanes
 
     _planes = _hyperplanes(64, 4, 42)
@@ -1888,26 +1439,6 @@ def oracle_sql() -> dict[str, str]:
         "(" + str(b) + ", [" + ", ".join(repr(v) for v in p) + "])"
         for b, p in enumerate(_planes)
     )
-    lsh_topk_sql = f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    planes AS (SELECT * FROM (VALUES {_plane_rows}) p(b, pl)),
-    buck AS (
-      SELECT e.vec_id,
-             CAST(SUM(CASE WHEN list_dot_product(e.v, p.pl) >= 0
-                           THEN 1 << p.b ELSE 0 END) AS BIGINT) AS bucket
-      FROM e CROSS JOIN planes p GROUP BY e.vec_id
-    ),
-    q AS (SELECT e.v AS qe, b.bucket AS qbucket
-          FROM e JOIN buck b USING (vec_id) WHERE e.vec_id = 0)
-    SELECT e.vec_id,
-           ROUND(list_dot_product(e.v, q.qe)
-                 / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qe, q.qe))),
-                 4) AS cosine_sim
-    FROM e JOIN buck b USING (vec_id), q
-    WHERE e.vec_id > 0 AND b.bucket = q.qbucket
-    ORDER BY cosine_sim DESC, e.vec_id ASC
-    LIMIT 10
-    """
 
     # ann_recall_lsh — same seed-42 plane literals; recomputes buckets,
     # Hamming-1 probe targets (XOR masks 0,1,2,4,8), per-query candidate
@@ -1986,35 +1517,6 @@ def oracle_sql() -> dict[str, str]:
 
     # drift PSI — replicate drift.py's bucket/psi math exactly:
     # bucket = clamp(floor((v-lo)/width)), NULL→-1; psi term uses frac+eps
-    drift = """
-    WITH cur AS (
-      SELECT CASE WHEN l_extendedprice IS NULL THEN -1
-                  ELSE LEAST(GREATEST(CAST(FLOOR((l_extendedprice - 0.0) / 5500.0) AS INT), 0), 19) END AS bucket,
-             COUNT(*) AS c
-      FROM lineitem GROUP BY 1
-    ), curf AS (
-      SELECT bucket, CAST(c AS DOUBLE) / (SELECT SUM(c) FROM cur) AS cur_frac FROM cur
-    ), base AS (
-      SELECT CASE WHEN l_extendedprice IS NULL THEN -1
-                  ELSE LEAST(GREATEST(CAST(FLOOR((l_extendedprice - 0.0) / 5500.0) AS INT), 0), 19) END AS bucket,
-             COUNT(*) AS c
-      FROM lineitem WHERE l_returnflag = 'A' GROUP BY 1
-    ), basef AS (
-      SELECT bucket, CAST(c AS DOUBLE) / (SELECT SUM(c) FROM base) AS base_frac FROM base
-    ), j AS (
-      SELECT bucket, COALESCE(curf.cur_frac, 0.0) AS cf, COALESCE(basef.base_frac, 0.0) AS bf
-      FROM curf FULL OUTER JOIN basef USING (bucket)
-    ), gaps AS (
-      SELECT cf, bf,
-             ABS(SUM(cf) OVER (ORDER BY bucket) - SUM(bf) OVER (ORDER BY bucket)) AS gap
-      FROM j
-    )
-    SELECT ROUND(SUM((cf - bf) * LN((cf + 1e-6) / (bf + 1e-6))), 6) AS psi,
-           ROUND(MAX(gap), 6) AS ks,
-           SUM((cf - bf) * LN((cf + 1e-6) / (bf + 1e-6))) > 0.2 AS drifted
-    FROM gaps
-    """
-
     drift_by = """
     WITH cur AS (
       SELECT l_returnflag AS k,
@@ -2072,50 +1574,6 @@ def oracle_sql() -> dict[str, str]:
           / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.99
     """
 
-    tiles = ", ".join(f"list_transform(v, x -> x * {float(j % 3 + 1)})" for j in range(12))
-    near_dup_udf = f"""
-    WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    dups AS (
-      SELECT vec_id + 100000 AS vec_id,
-             list_transform(range(0, len(v)),
-                            i -> v[i + 1] + CAST((vec_id * 7 + i) % 11 AS DOUBLE) * 0.0005) AS v
-      FROM base
-    ),
-    allv AS (SELECT * FROM base UNION ALL SELECT * FROM dups),
-    tiled AS (SELECT vec_id, flatten([{tiles}]) AS v FROM allv)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b
-    FROM tiled a, tiled b
-    WHERE a.vec_id < b.vec_id
-      AND list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.99
-    """
-
-    embedding_dedup = """
-    WITH RECURSIVE base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    dups AS (
-      SELECT vec_id + 100000 AS vec_id,
-             list_transform(range(0, len(v)),
-                            i -> v[i + 1] + CAST((vec_id * 7 + i) % 11 AS DOUBLE) * 0.0005) AS v
-      FROM base
-    ),
-    allv AS (SELECT * FROM base UNION ALL SELECT * FROM dups),
-    edges AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst
-      FROM allv a, allv b
-      WHERE a.vec_id < b.vec_id
-        AND list_dot_product(a.v, b.v)
-            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.99
-    ),
-    bi AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-    reach(node, lab) AS (
-      SELECT vec_id, vec_id FROM allv
-      UNION
-      SELECT bi.dst, reach.lab FROM reach JOIN bi ON bi.src = reach.node
-    )
-    SELECT node AS vec_id, MIN(lab) AS component, node = MIN(lab) AS is_kept
-    FROM reach GROUP BY node
-    """
-
     # shared shingle CTEs: 3-gram shingles over the same normalization Spark's
     # shingles() applies (lower, trim, collapse whitespace); docs shorter than
     # k collapse to one whole-text shingle
@@ -2149,17 +1607,6 @@ def oracle_sql() -> dict[str, str]:
     lsh_jaccard = f"""
     WITH {shingle_cte}
     SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.7
-    """
-
-    # incremental cross-corpus dedup: exact cross-half (even=corpus,
-    # odd=new) Jaccard pairs — the LSH-banded path must lose none
-    lsh_pairs_against = f"""
-    WITH {shingle_cte}
-    SELECT CASE WHEN id_a % 2 = 1 THEN id_a ELSE id_b END AS id_new,
-           CASE WHEN id_a % 2 = 1 THEN id_b ELSE id_a END AS id_corpus,
-           jaccard
-    FROM jac
-    WHERE jaccard >= 0.7 AND (id_a % 2) <> (id_b % 2)
     """
 
     # chunk→incremental-dedup composition: exact cross-half Jaccard at
@@ -2270,19 +1717,6 @@ def oracle_sql() -> dict[str, str]:
       FROM (SELECT unnest(generate_series(0, 1999)) AS i)
     )
     """
-    # image fixture cadence (operators/image.py): decode fails on truncated
-    # (every 13th) and codec-needing (every 17th) rows; dark rows (every
-    # 11th) fail the brightness rule only when they decode; width 16+i%7
-    # exceeds the cap when i%7 ∈ {5,6} only when decoded (allow_na rescues
-    # NULL probe columns on invalid rows)
-    def image_rule_row(name: str, expr: str, allow_na: str, pass_cond: str) -> str:
-        return f"""
-    SELECT 'row_rule' AS check_type, '{name}' AS name, '{expr}' AS expr,
-           {allow_na} AS allow_na, FALSE AS negate,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN {pass_cond} THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN {pass_cond} THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM iflags"""
 
     # video fixture cadence (operators/image.py VID_*_EVERY): decode fails on
     # broken-magic rows (every 13th); short rows (every 7th) have 2 frames;
@@ -2379,22 +1813,6 @@ def oracle_sql() -> dict[str, str]:
            CAST(COUNT(*) - SUM(CASE WHEN corrupt OR NOT dark THEN 1 ELSE 0 END) AS BIGINT)
     FROM mflags GROUP BY fmt
     """
-
-    image_validate = """
-    WITH iflags AS (
-      SELECT i,
-             (i > 0 AND (i % 13 = 0 OR i % 17 = 0)) AS invalid,
-             (i > 0 AND i % 11 = 0) AS dark,
-             (i % 7) IN (5, 6) AS wide
-      FROM (SELECT unnest(generate_series(0, 999)) AS i)
-    )
-    """ + " UNION ALL ".join(
-        [
-            image_rule_row("decodes", "img_valid", "FALSE", "NOT invalid"),
-            image_rule_row("width_cap", "img_width <= 20", "TRUE", "invalid OR NOT wide"),
-            image_rule_row("not_black", "img_brightness > 1", "TRUE", "invalid OR NOT dark"),
-        ]
-    )
 
     audio = audio_flags + " UNION ALL ".join(
         [
@@ -2551,90 +1969,10 @@ def oracle_sql() -> dict[str, str]:
     SELECT clip_id, 'audio_transcript_ok' FROM flags WHERE empty_t OR null_t
     """
 
-    # per-codec-group audio summary: the codec column itself is cadence-
-    # injected (every 29th row lies 'mp3_unknown'), so group membership AND
-    # per-group rule counts are pure index arithmetic
-    audio_by_codec = """
-    WITH flags AS (
-      SELECT i,
-             (i > 0 AND i % 41 = 0) AS corrupt,
-             (i > 0 AND i % 17 = 0) AS bad_sr,
-             CASE WHEN i > 0 AND i % 29 = 0 THEN 'mp3_unknown' ELSE 'pcm_s16le' END AS codec
-      FROM (SELECT unnest(generate_series(0, 1999)) AS i)
-    )
-    SELECT codec, 'decodes' AS name, 'audio_valid' AS expr,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN NOT corrupt THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN NOT corrupt THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM flags GROUP BY codec
-    UNION ALL
-    SELECT codec, 'sr_consistent', 'audio_sr == sr_hz',
-           CAST(COUNT(*) AS BIGINT),
-           CAST(SUM(CASE WHEN NOT corrupt AND NOT bad_sr THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(COUNT(*) - SUM(CASE WHEN NOT corrupt AND NOT bad_sr THEN 1 ELSE 0 END) AS BIGINT)
-    FROM flags GROUP BY codec
-    UNION ALL
-    SELECT codec, 'pcm_allclose_snr', 'audio_snr_db >= 30.0',
-           CAST(COUNT(*) AS BIGINT),
-           CAST(SUM(CASE WHEN NOT corrupt THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(COUNT(*) - SUM(CASE WHEN NOT corrupt THEN 1 ELSE 0 END) AS BIGINT)
-    FROM flags GROUP BY codec
-    """
-
-    describe_by_codec = """
-    WITH src AS (
-      SELECT CASE WHEN i > 0 AND i % 29 = 0 THEN 'mp3_unknown' ELSE 'pcm_s16le' END AS codec,
-             CAST(CASE WHEN i > 0 AND i % 17 = 0 THEN 12345
-                       ELSE ([8000, 16000, 44100, 48000])[(i % 4) + 1] END AS DOUBLE) AS sr
-      FROM (SELECT unnest(generate_series(0, 1999)) AS i)
-    )
-    SELECT codec, 'sr_hz' AS var, 'integer' AS type, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(DISTINCT sr) AS BIGINT) AS n_distinct, CAST(0 AS BIGINT) AS n_na,
-           ROUND(MIN(sr), 6) AS min, ROUND(AVG(sr), 6) AS mean,
-           ROUND(quantile_cont(sr, 0.5), 6) AS median, ROUND(MAX(sr), 6) AS max,
-           ROUND(stddev_samp(sr), 6) AS sd
-    FROM src GROUP BY codec
-    UNION ALL
-    SELECT codec, 'clip_id', 'character', CAST(COUNT(*) AS BIGINT),
-           CAST(COUNT(*) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(17 AS DOUBLE), CAST(17 AS DOUBLE), CAST(17 AS DOUBLE),
-           CAST(17 AS DOUBLE), CAST(0 AS DOUBLE)
-    FROM src GROUP BY codec
-    """
-
-    check_by_event = """
-    SELECT event_type, 'e1' AS name, 'value > 0' AS expr,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN value > 0 THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN value > 0 THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM events GROUP BY event_type
-    UNION ALL
-    SELECT event_type, 'e2' AS name, 'value <= 400' AS expr,
-           CAST(COUNT(*) AS BIGINT) AS tests,
-           CAST(SUM(CASE WHEN value <= 400 THEN 1 ELSE 0 END) AS BIGINT) AS "pass",
-           CAST(COUNT(*) - SUM(CASE WHEN value <= 400 THEN 1 ELSE 0 END) AS BIGINT) AS fail
-    FROM events GROUP BY event_type
-    """
-
-    # most_frequent: replicate describe's top-k formatter — order by count
-    # desc then value asc, take 3, "v (c)" joined with ", "
-    most_frequent = """
-    WITH ranked AS (
-      SELECT 'c_nationkey' AS var, CAST(c_nationkey AS VARCHAR) AS v, COUNT(*) AS c,
-             ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, c_nationkey ASC) AS rn
-      FROM customer GROUP BY c_nationkey
-      UNION ALL
-      SELECT 'c_mktsegment' AS var, c_mktsegment AS v, COUNT(*) AS c,
-             ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, c_mktsegment ASC) AS rn
-      FROM customer GROUP BY c_mktsegment
-    )
-    SELECT var, string_agg(v || ' (' || c || ')', ', ' ORDER BY rn) AS most_frequent
-    FROM ranked WHERE rn <= 3 GROUP BY var
-    """
-
-    full = {
+    # one entry per registered gate: the driver contract is oracle_sql()
+    # keys == queries() keys
+    return {
         "check_lineitem": check_lineitem,
-        "check_by_returnflag": check_by,
         # per-file summary: one parquet file per l_returnflag dir by
         # construction, so per-file truth == per-key truth
         "check_by_file_lineitem": """
@@ -2658,46 +1996,19 @@ def oracle_sql() -> dict[str, str]:
     WHERE i = 0 OR (i % 17 != 0 AND i % 23 != 0 AND i % 31 != 0
                     AND i % 37 != 0 AND i % 41 != 0)
     """,
-        "most_frequent_customer": most_frequent,
-        "most_frequent_fused_customer": most_frequent,
         "events_freshness": """
     SELECT event_type, MAX(ts) AS last_ts,
            ROUND((epoch(TIMESTAMP '2024-01-31 12:00:00') - epoch(MAX(ts))) / 60.0, 3) AS lag_minutes,
            (epoch(TIMESTAMP '2024-01-31 12:00:00') - epoch(MAX(ts))) / 60.0 <= 720 AS is_fresh
     FROM events GROUP BY event_type
     """,
-        "drift_psi_lineitem": drift,
         "drift_psi_by_returnflag": drift_by,
         "near_dup_pairs_embeddings": near_dup,
-        "near_dup_pairs_embeddings_udf": near_dup_udf,
         "lsh_jaccard_pairs_documents": lsh_jaccard,
-        "lsh_pairs_against_documents": lsh_pairs_against,
         "chunk_incremental_dedup_documents": chunk_incremental,
         "video_validate": video_validate,
         "h264_validate": h264_validate,
         "mjpeg_validate": mjpeg_validate,
-        "stream_cumulative_events": """
-    WITH f AS (
-      SELECT CAST(event_id % 3 AS INTEGER) AS batch, event_type,
-             CASE WHEN value <= 100 THEN 1 ELSE 0 END AS p0,
-             CASE WHEN NOT (value > 400) THEN 1 ELSE 0 END AS p1
-      FROM events
-    ),
-    pb AS (
-      SELECT batch, event_type, COUNT(*) AS t, SUM(p0) AS s0, SUM(p1) AS s1
-      FROM f GROUP BY batch, event_type
-    ),
-    cum AS (
-      SELECT batch, event_type,
-             CAST(SUM(t)  OVER w AS BIGINT) AS tests,
-             CAST(SUM(s0) OVER w AS BIGINT) AS c0,
-             CAST(SUM(s1) OVER w AS BIGINT) AS c1
-      FROM pb WINDOW w AS (PARTITION BY event_type ORDER BY batch)
-    )
-    SELECT batch, event_type, 'v_low' AS name, tests, c0 AS "pass", tests - c0 AS fail FROM cum
-    UNION ALL
-    SELECT batch, event_type, 'v_not_extreme' AS name, tests, c1 AS "pass", tests - c1 AS fail FROM cum
-    """,
         "stream_windowed_events": """
     WITH base AS (
       SELECT CAST(FLOOR(epoch(ts) / 3600) * 3600 AS DOUBLE) AS hour_epoch,
@@ -2778,10 +2089,8 @@ def oracle_sql() -> dict[str, str]:
            CAST(COUNT(*) - SUM(p1) AS BIGINT) AS fail
     FROM base GROUP BY part_key
     """,
-        "embedding_dedup_groups": embedding_dedup,
         "near_dup_groups_documents": near_dup_groups,
         "simhash_documents": simhash,
-        "audio_validate_clips": audio,
         "audio_mixed_codec_validate": audio_mixed,
         "audio_quality_validate": audio_quality,
         "transcript_validate": transcript_validate,
@@ -2838,10 +2147,8 @@ def oracle_sql() -> dict[str, str]:
            'seg_dom_freq_hz >= 150 & seg_dom_freq_hz <= 460', FALSE, FALSE,
            tests, tests - n_corrupt - n_silent, n_corrupt + n_silent FROM counts
     """,
-        "audio_validate_by_codec": audio_by_codec,
         "audio_violations": audio_violations,
         "audio_validate_vs_reference": audio,
-        "image_validate": image_validate,
         "image_formats_validate": image_formats,
         "reference_by_orderstatus": """
     SELECT o_orderstatus, 'fk_by' AS name,
@@ -2852,20 +2159,6 @@ def oracle_sql() -> dict[str, str]:
            CAST(COUNT(*) - SUM(CASE WHEN o_custkey IN (SELECT c_custkey FROM customer)
                                     THEN 1 ELSE 0 END) AS BIGINT) AS fail
     FROM orders GROUP BY o_orderstatus
-    """,
-        "event_gaps": """
-    WITH obs AS (
-      SELECT DISTINCT time_bucket(INTERVAL 6 HOUR, ts) AS bucket
-      FROM events WHERE date_part('day', ts) NOT IN (5, 12)
-    ),
-    cal AS (
-      SELECT unnest(generate_series(TIMESTAMP '2024-01-01 00:00:00',
-                                    TIMESTAMP '2024-01-31 00:00:00',
-                                    INTERVAL 6 HOUR)) AS bucket
-    )
-    SELECT bucket FROM cal
-    WHERE bucket < TIMESTAMP '2024-01-31 00:00:00'
-      AND bucket NOT IN (SELECT bucket FROM obs)
     """,
         "schema_drift_lineitem_vs_customer": """
     SELECT * FROM (VALUES
@@ -2896,16 +2189,6 @@ def oracle_sql() -> dict[str, str]:
                     ('bounds_c_acctbal'), ('notnull_c_acctbal'),
                     ('set_c_mktsegment'), ('notnull_c_mktsegment')) AS r(name)
     """,
-        "suggest_rules_events": """
-    WITH n AS (SELECT COUNT(*) AS cnt FROM events)
-    SELECT r.name, n.cnt AS tests, n.cnt AS "pass", CAST(0 AS BIGINT) AS fail
-    FROM n, (VALUES ('bounds_event_id'), ('unique_event_id'), ('notnull_event_id'),
-                    ('fresh_ts'), ('notnull_ts'),
-                    ('bounds_user_id'), ('notnull_user_id'),
-                    ('set_event_type'), ('notnull_event_type'),
-                    ('bounds_value'), ('notnull_value'),
-                    ('notnull_props')) AS r(name)
-    """,
         "reference_violations_orders": """
     WITH mutated AS (
       SELECT o_orderkey,
@@ -2922,8 +2205,6 @@ def oracle_sql() -> dict[str, str]:
            ROUND(SUM(value), 4) AS sum_value
     FROM events GROUP BY event_type
     """,
-        "check_by_event_type": check_by_event,
-        "describe_by_codec": describe_by_codec,
         "describe_by_most_frequent": """
     WITH ranked AS (
       SELECT c_mktsegment, 'c_nationkey' AS var, c_nationkey AS val, COUNT(*) AS c,
@@ -2949,24 +2230,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT r.name, n.cnt AS tests, n.cnt AS "pass", CAST(0 AS BIGINT) AS fail
     FROM n, (VALUES ('bounds_vec_id'), ('notnull_vec_id'), ('dim_embedding'),
                     ('notnull_embedding'), ('unique_vec_id')) AS r(name)
-    """,
-        "chunk_dedup_documents": """
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), t -> t != '') AS tk
-      FROM documents
-    ),
-    c AS (
-      SELECT t.doc_id, i.i AS chunk_idx,
-             array_to_string(list_slice(t.tk, i.i * 8 + 1, i.i * 8 + 8), ' ') AS chunk_text
-      FROM toks t
-      CROSS JOIN (SELECT unnest(generate_series(0, 255)) AS i) i
-      WHERE i.i <= CASE WHEN len(t.tk) <= 0 THEN 0 ELSE (len(t.tk) - 1) // 8 END
-    )
-    SELECT CAST(g.n_copies AS BIGINT) AS n_copies,
-           CAST(COUNT(*) AS BIGINT) AS n_groups
-    FROM (SELECT chunk_text, COUNT(*) AS n_copies FROM c GROUP BY chunk_text) g
-    GROUP BY g.n_copies
     """,
         "embedding_validate": ("""
     WITH e AS (
@@ -3010,23 +2273,6 @@ def oracle_sql() -> dict[str, str]:
         .replace("__ONES63__", ", ".join(["1.0"] * 63))
         .replace("__NANS64__", ", ".join(["'NaN'::DOUBLE"] * 64))
         .replace("__ZEROS64__", ", ".join(["0.0"] * 64))),
-        "quantiles_lineitem": """
-    WITH q AS (
-      SELECT 'l_extendedprice' AS var,
-             quantile_cont(l_extendedprice, [0.01, 0.25, 0.5, 0.75, 0.99]) AS vals
-      FROM lineitem
-      UNION ALL
-      SELECT 'l_quantity', quantile_cont(l_quantity, [0.01, 0.25, 0.5, 0.75, 0.99])
-      FROM lineitem
-      UNION ALL
-      SELECT 'l_discount', quantile_cont(l_discount, [0.01, 0.25, 0.5, 0.75, 0.99])
-      FROM lineitem
-    )
-    SELECT q.var,
-           CAST(([0.01, 0.25, 0.5, 0.75, 0.99])[i.i] AS DOUBLE) AS prob,
-           ROUND(CAST(q.vals[i.i] AS DOUBLE), 6) AS value
-    FROM q CROSS JOIN (SELECT unnest(generate_series(1, 5)) AS i) i
-    """,
         "check_error_rows_lineitem": """
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem)
     SELECT 'good' AS name, n.cnt AS tests,
@@ -3085,7 +2331,6 @@ def oracle_sql() -> dict[str, str]:
     """,
         "quality_documents": quality,
         "lang_scores_documents": lang_scores,
-        "topk_embeddings": topk,
         "topk_join_embeddings": """
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
@@ -3185,8 +2430,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT vec_id, ROUND(dist, 6) AS adc_dist
     FROM adc ORDER BY dist ASC, vec_id ASC LIMIT 10
     """,
-        "ivf_topk_embeddings": ivf_topk_sql,
-        "lsh_topk_embeddings": lsh_topk_sql,
         "ann_recall_lsh": ann_recall_lsh_sql,
         "ann_recall_ivf": """
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -3251,8 +2494,3 @@ def oracle_sql() -> dict[str, str]:
     GROUP BY t.qid
     """,
     }
-    # retired gates (RETIRED_GATES) keep their oracle SQL above for the
-    # record, but only registered gates are returned — the driver contract
-    # is oracle_sql() keys == queries() keys
-    registered = queries()
-    return {k: v for k, v in full.items() if k in registered}

@@ -57,20 +57,16 @@ def curate_clips(
     later costs a second decode pass)."""
     from ..filters import fail_predicate
     from ..rules import ruleset, rule
-    from .rules import with_audio_features, with_audio_features_vs
+    from .rules import audio_ruleset, with_audio_features, with_audio_features_vs
 
     if expected is None:
         feats = with_audio_features(clips)
     else:
         feats = with_audio_features_vs(clips, expected)
 
+    # the six validation rules ARE audio_ruleset's; the quality gates follow
     rules = ruleset(
-        rule("audio_valid", name="decodes"),
-        rule("audio_sr == sr_hz", name="sr_consistent"),
-        rule("abs(audio_dur_ms - dur_ms) <= 2", name="dur_consistent"),
-        rule(f"audio_snr_db >= {min_snr_db}", name="pcm_allclose_snr"),
-        rule("audio_transcript_ok", name="transcript_equal"),
-        rule("nchar(trimws(transcript)) > 0", name="transcript_nonempty"),
+        audio_ruleset(require_snr_db=min_snr_db),
         rule(f"audio_clip_ratio <= {max_clip_ratio}", name="not_clipped"),
         rule(f"abs(audio_dc_offset) <= {max_abs_dc}", name="no_dc_offset"),
         rule(f"audio_rms >= {min_rms}", name="rms_audible"),

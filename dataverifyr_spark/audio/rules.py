@@ -36,21 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..expr import register_function
-from .wav import WavError, decode_wav, decode_wav_info, snr_db
+from .wav import WavError, decode_wav_info, snr_db
 
 __all__ = ["register_audio_functions"]
 
 
-def _decode(blob) -> tuple[np.ndarray, int] | None:
-    if blob is None:
-        return None
-    try:
-        return decode_wav(bytes(blob))
-    except WavError:
-        return None
-
-
-def _decode_info(blob) -> tuple[np.ndarray, int, str] | None:
+def _decode(blob) -> tuple[np.ndarray, int, str] | None:
+    """(int16 samples, header rate, codec name); None on NULL or a bad container."""
     if blob is None:
         return None
     try:
@@ -59,37 +51,47 @@ def _decode_info(blob) -> tuple[np.ndarray, int, str] | None:
         return None
 
 
-def _audio_snr_vs_expected_impl(clip_ids: pd.Series, blobs: pd.Series) -> pd.Series:
+# full-scale int16 sample == 1.0: the wav.py encoder scale (round(x·32767)),
+# so every feature, SNR and quality value reads the same normalized buffer
+_FULL_SCALE = 32767.0
+
+
+def _snr_vs_expected(cid, x: np.ndarray | None, sr) -> float | None:
+    """SNR of normalized buffer ``x`` against the generator's waveform for
+    ``cid``; NULL on undecodable clips and unparsable ids."""
     # late import keeps fixtures optional on the hot path
     from .fixtures import clip_index, expected_pcm
 
+    if x is None or cid is None:
+        return None
+    try:
+        i = clip_index(cid)
+    except (ValueError, IndexError):
+        return None
+    return float(snr_db(expected_pcm(i, sr, len(x)), x))
+
+
+def _transcript_ok(cid, t) -> bool | None:
+    from .fixtures import clip_index, expected_transcript
+
+    if cid is None or t is None:
+        return None
+    try:
+        return expected_transcript(clip_index(cid)) == t
+    except (ValueError, IndexError):
+        return False
+
+
+def _audio_snr_vs_expected_impl(clip_ids: pd.Series, blobs: pd.Series) -> pd.Series:
     def f(cid, b):
         d = _decode(b)
-        if d is None or cid is None:
-            return None
-        samples, sr = d
-        try:
-            i = clip_index(cid)
-        except (ValueError, IndexError):
-            return None
-        ref = expected_pcm(i, sr, len(samples))
-        return float(snr_db(ref, samples * (1.0 / 32767.0)))
+        return None if d is None else _snr_vs_expected(cid, d[0] * (1.0 / _FULL_SCALE), d[1])
 
     return pd.Series([f(c, b) for c, b in zip(clip_ids, blobs)], dtype="float64")
 
 
 def _transcript_matches_expected_impl(clip_ids: pd.Series, transcripts: pd.Series) -> pd.Series:
-    from .fixtures import clip_index, expected_transcript
-
-    def f(cid, t):
-        if cid is None or t is None:
-            return None
-        try:
-            return expected_transcript(clip_index(cid)) == t
-        except (ValueError, IndexError):
-            return False
-
-    return pd.Series([f(c, t) for c, t in zip(clip_ids, transcripts)], dtype="object")
+    return pd.Series([_transcript_ok(c, t) for c, t in zip(clip_ids, transcripts)], dtype="object")
 
 
 def _spectral(x: np.ndarray, sr: int) -> tuple[float, float]:
@@ -110,14 +112,13 @@ def _spectral(x: np.ndarray, sr: int) -> tuple[float, float]:
 
 def _signal_quality(x: np.ndarray, sr) -> tuple:
     """peak / clip_ratio / dc_offset / silence_ratio from ONE normalized
-    buffer (full-scale int16 == 1.0) — shared by all three probe paths so
-    the quality rules are value-identical everywhere.  silence_ratio =
+    buffer (full-scale int16 == 1.0).  silence_ratio =
     fraction of 20 ms frames whose RMS is under 0.01 (−40 dBFS): dead-air
     detection a clip-level RMS cannot see (one loud pop makes an otherwise
     silent clip pass `audio_rms >= 0.05`).  Semantics pinned by
     tests/test_audio.py since r2 (20 ms frames, trailing partial frame
     ignored, clip shorter than one frame counts fully silent) — r6 moved
-    the computation from a standalone second-decode UDF onto this shared
+    the computation from a standalone second-decode UDF onto the shared
     probe, values unchanged."""
     ax = np.abs(x)
     peak = float(ax.max())
@@ -136,59 +137,84 @@ def _signal_quality(x: np.ndarray, sr) -> tuple:
     return peak, clip_ratio, dc, sil
 
 
+# (name, DDL type) of the ten bytes-derived features, in probe order — the
+# dialect probe's struct (field f is the dialect function audio_f(bytes));
+# the two feature probes splice their clip_id- or reference-derived fields
+# in after ``rms`` (see _probe_fields)
+_BYTES_FIELDS = (
+    ("valid", "boolean"),
+    ("n_samples", "bigint"),
+    ("sr", "int"),
+    ("dur_ms", "double"),
+    ("rms", "double"),
+    ("codec", "string"),  # header coding name (wav.WAV_CODECS), NULL if invalid
+    ("peak", "double"),  # max |sample| with full-scale int16 == 1.0
+    ("clip_ratio", "double"),  # fraction of samples at >=0.999 full scale
+    ("dc_offset", "double"),  # mean normalized sample (DC bias)
+    ("silence_ratio", "double"),  # fraction of 20 ms frames under -40 dBFS
+)
+# NULL on a decodable but empty (0-sample) clip
+_SIGNAL_FIELDS = ("rms", "peak", "clip_ratio", "dc_offset", "silence_ratio")
+_INVALID = {"valid": False, **{name: None for name, _t in _BYTES_FIELDS[1:]}}
+
+
+def _probe_fields(*extra: tuple[str, str]) -> tuple[tuple[str, str], ...]:
+    """The bytes fields with ``extra`` spliced in after ``rms`` — the
+    with_audio_features* column order."""
+    return _BYTES_FIELDS[:5] + extra + _BYTES_FIELDS[5:]
+
+
+def _ddl(fields) -> str:
+    return ", ".join(f"{name} {typ}" for name, typ in fields)
+
+
+def _probe_frame(rows: list[dict], fields) -> pd.DataFrame:
+    return pd.DataFrame({name: [r[name] for r in rows] for name, _t in fields})
+
+
+def _clip_features(blob) -> tuple[dict, np.ndarray | None, int | None]:
+    """The ten bytes-features of one clip from ONE decode — the single
+    implementation behind the dialect probe and both with_audio_features*
+    probes, so every path yields identical values.  Also returns the
+    normalized float64 buffer and the header rate for the SNR callers
+    (all-NULL features with ``valid=False``, ``None``, ``None`` on an
+    undecodable container)."""
+    d = _decode(blob)
+    if d is None:
+        return dict(_INVALID), None, None
+    samples, sr, codec = d
+    # ONE int16→float64 pass (r7): int16 × float multiplies promote to
+    # float64 directly, so no astype-then-divide pair (two full passes per
+    # buffer); rms and the quality quartet all read this buffer
+    x = samples * (1.0 / _FULL_SCALE)
+    feats = {
+        "valid": True,
+        "n_samples": len(samples),
+        "sr": sr,
+        "dur_ms": len(samples) / sr * 1000.0 if sr else None,
+        "codec": codec,
+    }
+    if len(x):
+        # hard-clip detection (fraction of samples at >=99.9% full scale — a
+        # clipped encode pins samples to +/-32767), DC bias (mic/ADC offset),
+        # peak headroom and dead air: ~3 vector folds per clip, zero extra
+        # decode — every quality rule fuses onto this one probe
+        rms = float(np.sqrt(np.mean(x * x)))
+        feats.update(zip(_SIGNAL_FIELDS, (rms, *_signal_quality(x, sr))))
+    else:
+        feats.update(dict.fromkeys(_SIGNAL_FIELDS))
+    return feats, x, sr
+
+
 def _audio_bytes_probe_impl(blobs: pd.Series) -> pd.DataFrame:
     """All cheap bytes-derived features from ONE decode per clip (the shared
     probe every bytes-family dialect function compiles onto).  Spectral
     features live in their own probe (below) so rulesets that never mention
     them never pay the per-clip rfft."""
-    keys = (
-        "valid", "n_samples", "sr", "dur_ms", "rms", "codec",
-        "peak", "clip_ratio", "dc_offset", "silence_ratio",
-    )
-    out = {k: [] for k in keys}
-    for b in blobs:
-        d = _decode_info(b)
-        if d is None:
-            out["valid"].append(False)
-            for k in keys[1:]:
-                out[k].append(None)
-            continue
-        samples, sr, codec = d
-        out["valid"].append(True)
-        out["n_samples"].append(len(samples))
-        out["sr"].append(sr)
-        out["dur_ms"].append(len(samples) / sr * 1000.0 if sr else None)
-        out["codec"].append(codec)
-        if len(samples):
-            # ONE int16→float64 pass (r7): int16 × float multiplies promote
-            # to float64 directly, so the astype-then-divide pair (two full
-            # passes per buffer) collapses to one; xf rescales the float
-            # buffer (cheap) instead of reconverting from int16
-            x = samples * (1.0 / 32768.0)
-            out["rms"].append(float(np.sqrt(np.mean(x * x))))
-            # quality trio from the SAME decoded buffer (normalized so a
-            # full-scale int16 sample is exactly 1.0): hard-clip detection
-            # (fraction of samples at >=99.9% full scale — a clipped encode
-            # pins samples to +/-32767), DC bias (mic/ADC offset), and peak
-            # headroom.  Marginal cost ~3 vector folds per clip, zero extra
-            # decode — every quality rule fuses onto this one probe.
-            xf = x * (32768.0 / 32767.0)
-            peak, clip_ratio, dc, sil = _signal_quality(xf, sr)
-            out["peak"].append(peak)
-            out["clip_ratio"].append(clip_ratio)
-            out["dc_offset"].append(dc)
-            out["silence_ratio"].append(sil)
-        else:
-            for k in ("rms", "peak", "clip_ratio", "dc_offset", "silence_ratio"):
-                out[k].append(None)
-    return pd.DataFrame(out)
+    return _probe_frame([_clip_features(b)[0] for b in blobs], _BYTES_FIELDS)
 
 
-_BYTES_PROBE_TYPE = (
-    "valid boolean, n_samples bigint, sr int, dur_ms double, rms double, "
-    "codec string, peak double, clip_ratio double, dc_offset double, "
-    "silence_ratio double"
-)
+_BYTES_PROBE_TYPE = _ddl(_BYTES_FIELDS)
 
 
 def _audio_spectral_probe_impl(blobs: pd.Series) -> pd.DataFrame:
@@ -197,18 +223,12 @@ def _audio_spectral_probe_impl(blobs: pd.Series) -> pd.DataFrame:
     ruleset mixing cheap and spectral rules evaluates two probe UDFs (two
     decodes — the FFT dominates the second decode anyway); within each
     family every rule still fuses onto one structurally-equal UDF call."""
-    out = {k: [] for k in ("dom_freq_hz", "spec_centroid_hz")}
+    rows = []
     for b in blobs:
         d = _decode(b)
-        if d is None or not len(d[0]):
-            out["dom_freq_hz"].append(None)
-            out["spec_centroid_hz"].append(None)
-            continue
-        samples, sr = d
-        dom, cent = _spectral(samples * (1.0 / 32768.0), sr)
-        out["dom_freq_hz"].append(dom)
-        out["spec_centroid_hz"].append(cent)
-    return pd.DataFrame(out)
+        ok = d is not None and len(d[0])
+        rows.append(_spectral(d[0] * (1.0 / _FULL_SCALE), d[1]) if ok else (None, None))
+    return pd.DataFrame(rows, columns=["dom_freq_hz", "spec_centroid_hz"])
 
 
 _SPECTRAL_PROBE_TYPE = "dom_freq_hz double, spec_centroid_hz double"
@@ -218,18 +238,7 @@ _SPECTRAL_PROBE_TYPE = "dom_freq_hz double, spec_centroid_hz double"
 # and Spark evaluates structurally-equal Python UDF calls ONCE per row — so a
 # 5-audio-rule check through the raw dialect spelling decodes each clip once,
 # not five times (verified by plan inspection: one ArrowEvalPython entry)
-_PROBE_FIELDS = {
-    "audio_valid": "valid",
-    "audio_n_samples": "n_samples",
-    "audio_sr": "sr",
-    "audio_dur_ms": "dur_ms",
-    "audio_rms": "rms",
-    "audio_codec": "codec",  # header coding name (wav.WAV_CODECS), NULL if invalid
-    "audio_peak": "peak",  # max |sample| with full-scale int16 == 1.0
-    "audio_clip_ratio": "clip_ratio",  # fraction of samples at >=0.999 full scale
-    "audio_dc_offset": "dc_offset",  # mean normalized sample (DC bias)
-    "audio_silence_ratio": "silence_ratio",  # fraction of 20 ms frames under -40 dBFS
-}
+_PROBE_FIELDS = {f"audio_{name}": name for name, _t in _BYTES_FIELDS}
 
 # spectral family: same field-of-shared-probe compilation, separate probe UDF
 _SPECTRAL_FIELDS = {
@@ -265,6 +274,14 @@ def _ctx_cache() -> dict[str, object]:
         _udf_cache = {}
         _udf_cache_ctx = ctx_id
     return _udf_cache
+
+
+def _cached_udf(name: str, impl, typ: str):
+    """``pandas_udf(impl, typ)``, built once per SparkContext under ``name``."""
+    cache = _ctx_cache()
+    if name not in cache:
+        cache[name] = pandas_udf(impl, typ)
+    return cache[name]
 
 
 def _get_udf(name: str):
@@ -330,68 +347,30 @@ register_audio_functions()
 # aggregation like any other rule.
 # ---------------------------------------------------------------------------
 
-_PROBE_TYPE = (
-    "valid boolean, n_samples bigint, sr int, dur_ms double, rms double, "
-    "snr_db double, transcript_ok boolean, codec string, "
-    "peak double, clip_ratio double, dc_offset double, silence_ratio double"
-)
+_FEATURE_FIELDS = _probe_fields(("snr_db", "double"), ("transcript_ok", "boolean"))
 
 
 def _audio_probe_impl(
     clip_ids: pd.Series, blobs: pd.Series, transcripts: pd.Series
 ) -> pd.DataFrame:
-    from .fixtures import clip_index, expected_pcm, expected_transcript
-
-    out = {
-        k: []
-        for k in (
-            "valid", "n_samples", "sr", "dur_ms", "rms", "snr_db", "transcript_ok",
-            "codec", "peak", "clip_ratio", "dc_offset", "silence_ratio",
-        )
-    }
+    rows = []
     for cid, blob, tr in zip(clip_ids, blobs, transcripts):
-        d = _decode_info(blob)
-        if d is None:
-            out["valid"].append(False)
-            for k in (
-                "n_samples", "sr", "dur_ms", "rms", "snr_db", "codec",
-                "peak", "clip_ratio", "dc_offset", "silence_ratio",
-            ):
-                out[k].append(None)
-        else:
-            samples, sr, codec = d
-            out["valid"].append(True)
-            out["codec"].append(codec)
-            out["n_samples"].append(len(samples))
-            out["sr"].append(sr)
-            out["dur_ms"].append(len(samples) / sr * 1000.0 if sr else None)
-            x = samples * (1.0 / 32767.0)  # one int16→float64 pass (r7)
-            out["rms"].append(float(np.sqrt(np.mean(x * x))) if len(x) else None)
-            if len(x):
-                peak, clip_ratio, dc, sil = _signal_quality(x, sr)
-                out["peak"].append(peak)
-                out["clip_ratio"].append(clip_ratio)
-                out["dc_offset"].append(dc)
-                out["silence_ratio"].append(sil)
-            else:
-                for k in ("peak", "clip_ratio", "dc_offset", "silence_ratio"):
-                    out[k].append(None)
-            snr = None
-            if cid is not None:
-                try:
-                    ref = expected_pcm(clip_index(cid), sr, len(samples))
-                    snr = float(snr_db(ref, x))
-                except (ValueError, IndexError):
-                    snr = None
-            out["snr_db"].append(snr)
-        if cid is None or tr is None:
-            out["transcript_ok"].append(None)
-        else:
-            try:
-                out["transcript_ok"].append(expected_transcript(clip_index(cid)) == tr)
-            except (ValueError, IndexError):
-                out["transcript_ok"].append(False)
-    return pd.DataFrame(out)
+        feats, x, sr = _clip_features(blob)
+        snr = _snr_vs_expected(cid, x, sr)
+        rows.append({**feats, "snr_db": snr, "transcript_ok": _transcript_ok(cid, tr)})
+    return _probe_frame(rows, _FEATURE_FIELDS)
+
+
+def _with_probe_columns(df, udf_name: str, impl, fields, cols: list, prefix: str):
+    """df + one ``{prefix}{field}`` column per probe-struct field, in field
+    order — the one expander behind both with_audio_features* calls.  The
+    probe UDF (cached per SparkContext under ``udf_name``) runs once per row;
+    the columns are plain field reads of its struct."""
+    probe = _cached_udf(udf_name, impl, _ddl(fields))
+    out = df.withColumn("__audio_probe", probe(*cols))
+    return out.withColumns(
+        {f"{prefix}{name}": F.col(f"__audio_probe.{name}") for name, _t in fields}
+    ).drop("__audio_probe")
 
 
 def with_audio_features(
@@ -402,84 +381,39 @@ def with_audio_features(
     prefix: str = "audio_",
 ):
     """df + decoded audio feature columns (one decode per clip, one Arrow
-    batch round-trip).  Adds: {prefix}valid, {prefix}n_samples, {prefix}sr,
-    {prefix}dur_ms, {prefix}rms, {prefix}snr_db, {prefix}transcript_ok,
-    {prefix}codec (header coding name, NULL on invalid container), and the
-    signal-quality trio {prefix}peak / {prefix}clip_ratio /
-    {prefix}dc_offset (same values as the audio_peak/audio_clip_ratio/
-    audio_dc_offset dialect functions)."""
-    cache = _ctx_cache()
-    if "audio_probe" not in cache:
-        cache["audio_probe"] = pandas_udf(_audio_probe_impl, _PROBE_TYPE)
-    probe = cache["audio_probe"]
-    struct = probe(F.col(clip_id_col), F.col(bytes_col), F.col(transcript_col))
-    out = df.withColumn("__audio_probe", struct)
-    for field in (
-        "valid", "n_samples", "sr", "dur_ms", "rms", "snr_db", "transcript_ok",
-        "codec", "peak", "clip_ratio", "dc_offset", "silence_ratio",
-    ):
-        out = out.withColumn(f"{prefix}{field}", F.col(f"__audio_probe.{field}"))
-    return out.drop("__audio_probe")
+    batch round-trip).  Adds, in this order: {prefix}valid,
+    {prefix}n_samples, {prefix}sr, {prefix}dur_ms, {prefix}rms,
+    {prefix}snr_db, {prefix}transcript_ok, {prefix}codec (header coding
+    name, NULL on invalid container), and the signal-quality quartet
+    {prefix}peak / {prefix}clip_ratio / {prefix}dc_offset /
+    {prefix}silence_ratio.  All ten bytes-derived columns come from the
+    same kernel as the dialect probe, so they equal audio_valid(bytes) …
+    audio_silence_ratio(bytes) value for value."""
+    cols = [F.col(clip_id_col), F.col(bytes_col), F.col(transcript_col)]
+    return _with_probe_columns(
+        df, "audio_probe", _audio_probe_impl, _FEATURE_FIELDS, cols, prefix
+    )
 
 
 # vs-reference probe: decodes the ACTUAL and the REFERENCE byte columns in
 # the same Arrow batch — the corpus shape where expectations exist only as
 # columns of a reference table (no generator), e.g. validating a transcoded
 # corpus against the originals
-_PROBE_VS_TYPE = (
-    "valid boolean, n_samples bigint, sr int, dur_ms double, rms double, "
-    "snr_db double, codec string, peak double, clip_ratio double, "
-    "dc_offset double, silence_ratio double"
-)
+_FEATURE_VS_FIELDS = _probe_fields(("snr_db", "double"))
 
 
 def _audio_probe_vs_impl(blobs: pd.Series, ref_blobs: pd.Series) -> pd.DataFrame:
-    out = {
-        k: []
-        for k in (
-            "valid", "n_samples", "sr", "dur_ms", "rms", "snr_db", "codec",
-            "peak", "clip_ratio", "dc_offset", "silence_ratio",
-        )
-    }
+    rows = []
     for blob, ref_blob in zip(blobs, ref_blobs):
-        d = _decode_info(blob)
-        if d is None:
-            out["valid"].append(False)
-            for k in (
-                "n_samples", "sr", "dur_ms", "rms", "snr_db", "codec",
-                "peak", "clip_ratio", "dc_offset", "silence_ratio",
-            ):
-                out[k].append(None)
-            continue
-        samples, sr, codec = d
-        out["valid"].append(True)
-        out["codec"].append(codec)
-        out["n_samples"].append(len(samples))
-        out["sr"].append(sr)
-        out["dur_ms"].append(len(samples) / sr * 1000.0 if sr else None)
-        x = samples * (1.0 / 32767.0)  # one int16→float64 pass (r7)
-        out["rms"].append(float(np.sqrt(np.mean(x * x))) if len(x) else None)
-        # signal-quality quartet: _signal_quality is shared with the fixture
-        # probe (_audio_bytes_probe) so rules are value-identical on both paths
-        if len(x):
-            peak, clip_ratio, dc, sil = _signal_quality(x, sr)
-            out["peak"].append(peak)
-            out["clip_ratio"].append(clip_ratio)
-            out["dc_offset"].append(dc)
-            out["silence_ratio"].append(sil)
-        else:
-            for k in ("peak", "clip_ratio", "dc_offset", "silence_ratio"):
-                out[k].append(None)
+        feats, x, sr = _clip_features(blob)
         snr = None
-        r = _decode(ref_blob)
-        if r is not None:
-            ref_samples, ref_sr = r
-            if ref_sr == sr:
-                # shape mismatch → snr_db returns -inf → the >=30 rule fails,
-                # which is the right verdict for a truncated/padded clip
-                snr = float(snr_db(ref_samples * (1.0 / 32767.0), x))
-        out["snr_db"].append(snr)
-    return pd.DataFrame(out)
+        r = None if x is None else _decode(ref_blob)
+        if r is not None and r[1] == sr:
+            # shape mismatch → snr_db returns -inf → the >=30 rule fails,
+            # which is the right verdict for a truncated/padded clip
+            snr = float(snr_db(r[0] * (1.0 / _FULL_SCALE), x))
+        rows.append({**feats, "snr_db": snr})
+    return _probe_frame(rows, _FEATURE_VS_FIELDS)
 
 
 def with_audio_features_vs(
@@ -497,7 +431,8 @@ def with_audio_features_vs(
     with expectations taken from a REFERENCE TABLE instead of the synthetic
     generator: SNR compares the decoded clip against the decoded
     ``expected_bytes`` column, transcript equality against the
-    ``expected_transcript`` column (pure Catalyst — no UDF for that part).
+    ``expected_transcript`` column (pure Catalyst — no UDF for that part,
+    so {prefix}transcript_ok is the LAST added column here).
 
     The join is a plain equi-join on ``on`` (left: clips with no reference
     row get NULL features from the expectation side, so the SNR/transcript
@@ -512,24 +447,16 @@ def with_audio_features_vs(
     if broadcast_expected:
         exp = F.broadcast(exp)
     joined = df.join(exp, on=on, how="left")
-
-    cache = _ctx_cache()
-    if "audio_probe_vs" not in cache:
-        cache["audio_probe_vs"] = pandas_udf(_audio_probe_vs_impl, _PROBE_VS_TYPE)
-    probe = cache["audio_probe_vs"]
-    struct = probe(F.col(bytes_col), F.col(expected_bytes_col))
-    out = joined.withColumn("__audio_probe", struct)
-    for field in (
-        "valid", "n_samples", "sr", "dur_ms", "rms", "snr_db", "codec",
-        "peak", "clip_ratio", "dc_offset", "silence_ratio",
-    ):
-        out = out.withColumn(f"{prefix}{field}", F.col(f"__audio_probe.{field}"))
+    out = _with_probe_columns(
+        joined, "audio_probe_vs", _audio_probe_vs_impl, _FEATURE_VS_FIELDS,
+        [F.col(bytes_col), F.col(expected_bytes_col)], prefix,
+    )
     t, e = F.col(transcript_col), F.col(expected_transcript_col)
     out = out.withColumn(
         f"{prefix}transcript_ok",
         F.when(t.isNull() | e.isNull(), F.lit(None).cast("boolean")).otherwise(t == e),
     )
-    return out.drop("__audio_probe", expected_bytes_col, expected_transcript_col)
+    return out.drop(expected_bytes_col, expected_transcript_col)
 
 
 def audio_ruleset(require_snr_db: float = 30.0, codec_consistent: bool = False):
@@ -587,13 +514,6 @@ def audio_quality_ruleset(
     return ruleset(*rules)
 
 
-# (r6) audio_silence_ratio used to be a standalone UDF here with its own
-# decode pass; it is now the `silence_ratio` field of the shared bytes
-# probe (_signal_quality), so mixing it with any other audio rule costs
-# zero extra decodes.  Same 20ms/-40dBFS definition, pinned by
-# tests/test_audio.py.
-
-
 # ---------------------------------------------------------------------------
 # cross-codec audio near-dup: a spectral fingerprint computed once in the
 # decode probe, fed into the SAME banded-hyperplane-LSH machinery as text
@@ -618,8 +538,7 @@ def _audio_band_profile_impl(blobs: pd.Series) -> pd.Series:
         d = _decode(b)
         if d is None or not len(d[0]):
             return None
-        samples, _sr = d
-        mag = np.abs(np.fft.rfft(samples * (1.0 / 32768.0)))
+        mag = np.abs(np.fft.rfft(d[0] * (1.0 / _FULL_SCALE)))
         n = len(mag)
         if n >= BAND_PROFILE_BINS:
             cut = (n // BAND_PROFILE_BINS) * BAND_PROFILE_BINS
@@ -641,12 +560,8 @@ def with_audio_band_profile(
     """df + ``out_col`` (array<double>, L2-normalized spectral profile; NULL
     on undecodable clips).  One Arrow-batched decode+rfft per clip — its own
     probe, paid only by dedup pipelines (rule checks never compute it)."""
-    cache = _ctx_cache()
-    if "audio_band_profile" not in cache:
-        cache["audio_band_profile"] = pandas_udf(
-            _audio_band_profile_impl, "array<double>"
-        )
-    return df.withColumn(out_col, cache["audio_band_profile"](F.col(bytes_col)))
+    profile = _cached_udf("audio_band_profile", _audio_band_profile_impl, "array<double>")
+    return df.withColumn(out_col, profile(F.col(bytes_col)))
 
 
 def audio_near_dup_pairs(

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .rules import _decode, _spectral
+from .rules import _FULL_SCALE, _decode, _spectral
 from .wav import encode_wav_pcm16
 
 __all__ = ["audio_segments", "long_clips_table", "SEGMENT_SCHEMA"]
@@ -69,7 +69,7 @@ def audio_segments(
                 if d is None:
                     rows.append((cid, None, None, False, None, None, "undecodable container"))
                     continue
-                samples, sr = d
+                samples, sr, _codec = d
                 if not len(samples):
                     # decodable but empty — still ONE row, never a silently
                     # missing clip
@@ -92,7 +92,7 @@ def audio_segments(
                     sl = samples[s * win : (s + 1) * win]
                     if not len(sl):
                         continue
-                    x = sl * (1.0 / 32768.0)
+                    x = sl * (1.0 / _FULL_SCALE)
                     rms = float(np.sqrt(np.mean(x * x)))
                     dom, _cent = _spectral(x, sr)
                     rows.append(

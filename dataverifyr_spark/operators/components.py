@@ -154,6 +154,22 @@ def connected_components(
     return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
 
 
+def _groups(df: DataFrame, pairs: DataFrame, id_col: str, stats: dict | None) -> DataFrame:
+    """(id, component, is_kept) for every row of ``df``: connected components
+    over the verified ``(id_a, id_b)`` pairs, a singleton component for an
+    id in no pair, and ``is_kept`` on the minimum id per component."""
+    comps = connected_components(pairs.select("id_a", "id_b"), stats=stats)
+    out = (
+        df.select(F.col(id_col))
+        .join(comps, df[id_col] == comps["node"], "left")
+        .select(F.col(id_col), F.coalesce("component", F.col(id_col)).alias("component"))
+    )
+    keep = out.groupBy("component").agg(F.min(id_col).alias("__keep"))
+    return out.join(keep, "component").select(
+        id_col, "component", (F.col(id_col) == F.col("__keep")).alias("is_kept")
+    )
+
+
 def embedding_dedup_groups(
     df: DataFrame,
     dim: int,
@@ -182,16 +198,7 @@ def embedding_dedup_groups(
         df, dim, threshold, bits, bands, vec_col, id_col, seed, max_bucket_size,
         stats=stats,
     )
-    comps = connected_components(pairs.select("id_a", "id_b"), stats=stats)
-    out = (
-        df.select(F.col(id_col))
-        .join(comps, df[id_col] == comps["node"], "left")
-        .select(F.col(id_col), F.coalesce("component", F.col(id_col)).alias("component"))
-    )
-    keep = out.groupBy("component").agg(F.min(id_col).alias("__keep"))
-    return out.join(keep, "component").select(
-        id_col, "component", (F.col(id_col) == F.col("__keep")).alias("is_kept")
-    )
+    return _groups(df, pairs, id_col, stats)
 
 
 def near_dup_groups(
@@ -227,14 +234,4 @@ def near_dup_groups(
     verified = ngram_jaccard(enriched, "text_a", "text_b", shingle_k).filter(
         F.col("jaccard") >= jaccard_threshold
     )
-    comps = connected_components(verified.select("id_a", "id_b"), stats=stats)
-    out = docs.select(F.col(id_col)).join(
-        comps, docs[id_col] == comps["node"], "left"
-    ).select(
-        F.col(id_col),
-        F.coalesce("component", F.col(id_col)).alias("component"),
-    )
-    keep = out.groupBy("component").agg(F.min(id_col).alias("__keep"))
-    return out.join(keep, "component").select(
-        id_col, "component", (F.col(id_col) == F.col("__keep")).alias("is_kept")
-    )
+    return _groups(docs, verified, id_col, stats)

@@ -204,32 +204,53 @@ def lsh_candidate_pairs(
     and every run still computes from the raw inputs (within-query
     materialization, not cross-run caching).
     """
-    # When the stats path runs, its _dropped_counts collect is the FIRST
-    # action and computes sizes → banded end to end, so both checkpoints can
-    # be non-eager and materialize inside that one job (plan truncation
-    # still happens here, at call time) — one job where three ran.  Without
-    # the sequencing collect the first consumer is the self-join, whose two
-    # map stages run CONCURRENTLY and would each compute a lazy checkpoint;
-    # those branches stay eager.
+    return _bucket_pairs(_banded(sigs, id_col, num_bands), id_col, max_bucket_size, stats)
+
+
+def _cap_buckets(
+    banded: DataFrame, max_bucket_size: int | None, stats: dict | None
+) -> DataFrame:
+    """The ``(…, band, bucket)`` rows materialized once, minus every bucket
+    over ``max_bucket_size`` — the one hot-bucket cap behind the MinHash
+    self-join, the cross-corpus join (per side) and the embedding pairs.
+    ``stats`` receives ``n_buckets_dropped``/``n_rows_dropped`` (zeros when
+    uncapped).
+
+    Sequencing rule for the checkpoints: when the stats path runs, its
+    _dropped_counts collect is the FIRST action and computes sizes → banded
+    end to end, so both checkpoints can be non-eager and materialize inside
+    that one job (plan truncation still happens here, at call time) — one
+    job where three ran.  Without the sequencing collect the first consumer
+    is the caller's join, whose map stages run CONCURRENTLY and would each
+    compute a lazy checkpoint; that branch stays eager."""
     seq = max_bucket_size is not None and stats is not None
-    banded = _banded(sigs, id_col, num_bands).localCheckpoint(eager=not seq)
-    if max_bucket_size is not None:
-        # two-shuffle guard: count per bucket (partial-agg), drop hot buckets
-        sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__bsz"))
+    banded = banded.localCheckpoint(eager=not seq)
+    if max_bucket_size is None:
         if stats is not None:
-            # localCheckpoint (NOT persist): materializes the tiny bucket-size
-            # table once so the stats collect and the cap-filter join share
-            # it, and — unlike a CacheManager entry — the storage is
-            # reclaimed by the ContextCleaner when the caller drops the
-            # DataFrame (no per-call cache leak in long-lived sessions)
-            sizes = sizes.localCheckpoint(eager=False)
-            stats.update(_dropped_counts(sizes, max_bucket_size))
-        banded = (
-            banded.join(sizes.filter(F.col("__bsz") <= max_bucket_size), ["band", "bucket"])
-            .drop("__bsz")
-        )
-    elif stats is not None:
-        stats.update(n_buckets_dropped=0, n_rows_dropped=0)
+            stats.update(n_buckets_dropped=0, n_rows_dropped=0)
+        return banded
+    # two-shuffle guard: count per bucket (partial-agg), drop hot buckets
+    sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__bsz"))
+    if stats is not None:
+        # localCheckpoint (NOT persist): materializes the tiny bucket-size
+        # table once so the stats collect and the cap-filter join share
+        # it, and — unlike a CacheManager entry — the storage is
+        # reclaimed by the ContextCleaner when the caller drops the
+        # DataFrame (no per-call cache leak in long-lived sessions)
+        sizes = sizes.localCheckpoint(eager=False)
+        stats.update(_dropped_counts(sizes, max_bucket_size))
+    return banded.join(
+        sizes.filter(F.col("__bsz") <= max_bucket_size), ["band", "bucket"]
+    ).drop("__bsz")
+
+
+def _bucket_pairs(
+    banded: DataFrame, id_col: str, max_bucket_size: int | None, stats: dict | None
+) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, sharing any capped
+    ``(band, bucket)`` of ``banded`` (``id, band, bucket`` rows) — the one
+    bucket self-join behind MinHash-LSH and embedding-LSH near-dups."""
+    banded = _cap_buckets(banded, max_bucket_size, stats)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -322,30 +343,15 @@ def lsh_pairs_against(
     HOFs defeat exchange reuse; without this each side's signature pipeline
     re-ran per consumer).
     """
-    # same sequencing rule as lsh_candidate_pairs: with the stats path each
-    # side's _dropped_counts collect materializes its lazy checkpoints in
-    # one job; without it the cross join fans out concurrently → stay eager
-    seq = max_bucket_size is not None and stats is not None
-    a = _banded(new_sigs, id_col, num_bands).localCheckpoint(eager=not seq)
-    b = _banded(corpus_sigs, id_col, num_bands).localCheckpoint(eager=not seq)
-    if max_bucket_size is not None:
-
-        def _cap(side: DataFrame, side_name: str) -> DataFrame:
-            sizes = side.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__bsz"))
-            if stats is not None:
-                sizes = sizes.localCheckpoint(eager=False)  # GC-reclaimed, not cached
-                stats[side_name] = _dropped_counts(sizes, max_bucket_size)
-            return side.join(
-                sizes.filter(F.col("__bsz") <= max_bucket_size), ["band", "bucket"]
-            ).drop("__bsz")
-
-        a, b = _cap(a, "new"), _cap(b, "corpus")
-    elif stats is not None:
-        zero = {"n_buckets_dropped": 0, "n_rows_dropped": 0}
-        stats["new"], stats["corpus"] = dict(zero), dict(zero)
+    sides = {}
+    for name, side in (("new", new_sigs), ("corpus", corpus_sigs)):
+        side_stats = None if stats is None else {}
+        sides[name] = _cap_buckets(_banded(side, id_col, num_bands), max_bucket_size, side_stats)
+        if stats is not None:
+            stats[name] = side_stats
     return (
-        a.withColumnRenamed(id_col, "id_new")
-        .join(b.withColumnRenamed(id_col, "id_corpus"), ["band", "bucket"])
+        sides["new"].withColumnRenamed(id_col, "id_new")
+        .join(sides["corpus"].withColumnRenamed(id_col, "id_corpus"), ["band", "bucket"])
         .select("id_new", "id_corpus")
         .distinct()
     )

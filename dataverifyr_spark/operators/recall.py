@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .ivf import _sq_dist
-from .similarity import _hyperplanes, cosine_similarity_col
+from .similarity import _probe_masks, cosine_similarity_col, hyperplane_lsh_buckets
 
 __all__ = [
     "ivf_topk_join",
@@ -128,10 +128,6 @@ def lsh_topk_join_multiprobe(
     corpus is written partitioned by bucket).  probes=0 degenerates to the
     plain bucketed ``topk_join`` with an added ``n_candidates`` column.
     """
-    from itertools import combinations
-
-    from .similarity import hyperplane_lsh_buckets
-
     if dim is None:
         raise ValueError("dim is required (hyperplanes are dim-shaped)")
     corpus_b = hyperplane_lsh_buckets(corpus, dim, bits, vec_col, seed)
@@ -140,18 +136,11 @@ def lsh_topk_join_multiprobe(
         q.withColumnRenamed("__qvec", vec_col), dim, bits, vec_col, seed
     ).withColumnRenamed(vec_col, "__qvec")
 
-    masks = [0]
-    for r in range(1, probes + 1):
-        for flip in combinations(range(bits), r):
-            m = 0
-            for b in flip:
-                m |= 1 << b
-            masks.append(m)
     targets = queries_b.withColumn(
         "bucket",
         F.explode(
             F.transform(
-                F.array(*[F.lit(m) for m in masks]),
+                F.array(*[F.lit(m) for m in _probe_masks(bits, probes)]),
                 lambda m: F.col("bucket").bitwiseXOR(m),
             )
         ),

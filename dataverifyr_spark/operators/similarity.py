@@ -14,7 +14,7 @@ seed via xxhash64 so driver and executors agree without broadcasting floats.
 
 from __future__ import annotations
 
-import math
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
@@ -197,18 +197,10 @@ def lsh_topk(
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: restrict the brute-force scan to the query's LSH
-    bucket.  Recall improves with fewer bits (bigger buckets); partition the
-    table by ``bucket`` on write to turn this into partition pruning."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, bits, seed)
-    qbucket = 0
-    for b, plane in enumerate(planes):
-        if sum(q * p for q, p in zip(query_vec, plane)) >= 0:
-            qbucket |= 1 << b
-    bucketed = hyperplane_lsh_buckets(df, dim, bits, vec_col, seed)
-    return brute_force_topk(
-        bucketed.filter(F.col("bucket") == qbucket), query_vec, k, vec_col, id_col
-    )
+    bucket — :func:`lsh_topk_multiprobe` with ``probes=0``.  Recall improves
+    with fewer bits (bigger buckets); partition the table by ``bucket`` on
+    write to turn this into partition pruning."""
+    return lsh_topk_multiprobe(df, query_vec, k, bits, 0, vec_col, id_col, seed)
 
 
 def embedding_near_dup_pairs(
@@ -240,40 +232,16 @@ def embedding_near_dup_pairs(
     ``n_rows_dropped`` — the same no-silent-caps accounting as
     ``dedup.lsh_candidate_pairs`` (r6).
     """
-    from .dedup import _dropped_counts
+    from .dedup import _bucket_pairs
 
     band_seeds = [seed + 7919 * b for b in range(bands)]
+    # only the narrow (id, band, bucket) codes are checkpointed and
+    # self-joined; the vectors re-enter for the verify step alone
     codes = df.select(
         F.col(id_col),
-        F.col(vec_col),
         F.posexplode(_lsh_codes(vec_col, df, dim, bits, band_seeds)).alias("band", "bucket"),
     )
-    if max_bucket_size is not None:
-        sizes = codes.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__bsz"))
-        if stats is not None:
-            # localCheckpoint, not persist: shared by stats + cap join, and
-            # GC-reclaimed when the caller drops the result (no cache leak);
-            # non-eager — the _dropped_counts collect right below is the
-            # first action and materializes it in the same job
-            sizes = sizes.localCheckpoint(eager=False)
-            stats.update(_dropped_counts(sizes, max_bucket_size))
-        codes = codes.join(
-            sizes.filter(F.col("__bsz") <= max_bucket_size), ["band", "bucket"]
-        ).drop("__bsz")
-    elif stats is not None:
-        stats.update(n_buckets_dropped=0, n_rows_dropped=0)
-    slim = codes.select(id_col, "band", "bucket")
-    a, b = slim.alias("a"), slim.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = _bucket_pairs(codes, id_col, max_bucket_size, stats)
     vecs = df.select(F.col(id_col), F.col(vec_col))
     enriched = cand.join(
         vecs.withColumnRenamed(id_col, "id_a").withColumnRenamed(vec_col, "__va"), "id_a"
@@ -283,6 +251,17 @@ def embedding_near_dup_pairs(
         enriched.select("id_a", "id_b", sim.alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
     )
+
+
+def _probe_masks(bits: int, probes: int) -> list[int]:
+    """XOR masks flipping every set of at most ``probes`` of ``bits`` sign
+    bits, fewest flips first (``[0]`` at probes=0; 1+bits masks at
+    probes=1) — shared by the single-query and batch multiprobe searches."""
+    return [
+        sum(1 << b for b in flip)
+        for r in range(probes + 1)
+        for flip in combinations(range(bits), r)
+    ]
 
 
 def lsh_topk_multiprobe(
@@ -303,21 +282,13 @@ def lsh_topk_multiprobe(
     The candidate scan stays O(N·(1+bits)/2^bits); with the table written
     partitioned by ``bucket``, the isin filter becomes partition pruning.
     """
-    from itertools import combinations
-
     dim = len(query_vec)
     planes = _hyperplanes(dim, bits, seed)
     qbucket = 0
     for b, plane in enumerate(planes):
         if sum(q * p for q, p in zip(query_vec, plane)) >= 0:
             qbucket |= 1 << b
-    targets = {qbucket}
-    for r in range(1, probes + 1):
-        for flip in combinations(range(bits), r):
-            m = 0
-            for b in flip:
-                m |= 1 << b
-            targets.add(qbucket ^ m)
+    targets = {qbucket ^ m for m in _probe_masks(bits, probes)}
     bucketed = hyperplane_lsh_buckets(df, dim, bits, vec_col, seed)
     return brute_force_topk(
         bucketed.filter(F.col("bucket").isin(sorted(targets))), query_vec, k, vec_col, id_col

@@ -19,3 +19,43 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def _next_job_id(sc) -> int:
+    """Id the next Spark job will get.  Job ids are sequential over the
+    whole application, whatever thread, group or tag submits the job."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    i = max(tracker.getJobIdsForGroup(None), default=-1) + 1
+    while tracker.getJobInfo(i) is not None:
+        i += 1
+    return i
+
+
+@pytest.fixture()
+def job_ids(spark):
+    """``job_ids(fn)``: ids of the Spark jobs ``fn()`` ran, by job-id delta
+    (a job group would miss jobs submitted from other threads)."""
+
+    def ids(fn) -> list[int]:
+        sc = spark.sparkContext
+        first = _next_job_id(sc)
+        fn()
+        return list(range(first, _next_job_id(sc)))
+
+    return ids
+
+
+@pytest.fixture()
+def no_runtime_broadcast(spark):
+    """AQE's runtime broadcast conversion races a join's shuffle stages, so
+    the same plan can run a different number of jobs; job budgets are
+    counted with that conversion off."""
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)

@@ -242,3 +242,85 @@ class TestSilenceRatioOnProbe:
         # fixture waveforms are two audible tones: every decodable clip ~0.0
         vals = [v for v in a.values() if v is not None]
         assert vals and all(v == 0.0 for v in vals)
+
+
+def _pcm16_wav(samples: np.ndarray, sr: int) -> bytes:
+    """A pcm_s16le WAV holding ``samples`` verbatim (no float round trip)."""
+    import struct
+
+    data = samples.astype("<i2").tobytes()
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+
+
+# RMS 0.05000000 on the 32767 full scale (0.04999848 on a 32768 one): the
+# clip sits exactly on audio_quality_ruleset's and curate_clips' rms_audible
+# threshold, so a probe using another scale gives the opposite verdict
+BOUNDARY_RMS_CLIP = _pcm16_wav(
+    np.concatenate([np.full(5600, 1639), np.full(10400, 1638)]), 16000
+)
+
+
+class TestOneFeatureKernel:
+    """The dialect probe and both with_audio_features* probes compute the ten
+    bytes-features with one kernel: identical values on every fixture corpus
+    and on the rms_audible boundary clip, and both feature frames keep
+    their column order."""
+
+    BYTES_FEATURES = [
+        "valid", "n_samples", "sr", "dur_ms", "rms", "codec",
+        "peak", "clip_ratio", "dc_offset", "silence_ratio",
+    ]
+
+    def test_three_probes_agree_on_bytes_features(self):
+        from dataverifyr_spark.audio.fixtures import _make_mixed_row, _make_row
+        from dataverifyr_spark.audio.rules import _audio_probe_impl, _audio_probe_vs_impl
+
+        blobs = [bytes(_make_row(i)[1]) for i in range(90)]
+        blobs += [bytes(_make_mixed_row(i)[1]) for i in range(60)]
+        blobs += [bytes(_make_quality_row(i)[1]) for i in range(200)]
+        blobs += [BOUNDARY_RMS_CLIP, encode_wav_pcm16(np.zeros(0), 8000), b"junk", None]
+        blobs = pd.Series(blobs)
+        ids = pd.Series([f"clip-{i:012d}" for i in range(len(blobs))])
+        dialect = _audio_bytes_probe_impl(blobs)[self.BYTES_FEATURES]
+        full = _audio_probe_impl(ids, blobs, pd.Series(["x"] * len(blobs)))
+        vs = _audio_probe_vs_impl(blobs, blobs)
+        pd.testing.assert_frame_equal(full[self.BYTES_FEATURES], dialect)
+        pd.testing.assert_frame_equal(vs[self.BYTES_FEATURES], dialect)
+        boundary = dialect.iloc[350]
+        assert abs(boundary["rms"] - 0.05) < 1e-8 and boundary["rms"] >= 0.05
+
+    def test_boundary_clip_is_audible_on_both_paths(self, spark):
+        from dataverifyr_spark.audio import with_audio_features
+
+        clips = spark.createDataFrame(
+            [("clip-000000000000", bytearray(BOUNDARY_RMS_CLIP), "x")],
+            "clip_id string, bytes binary, transcript string",
+        )
+        dialect = {
+            r["name"]: r["pass"] for r in dv.check_data(clips, audio_quality_ruleset()).collect()
+        }
+        feats = with_audio_features(clips)
+        via_join = dv.check_data(feats, dv.ruleset(dv.rule("audio_rms >= 0.05"))).collect()
+        assert dialect["rms_audible"] == 1 and via_join[0]["pass"] == 1
+
+    def test_feature_column_order(self, spark):
+        from dataverifyr_spark.audio import with_audio_features, with_audio_features_vs
+        from dataverifyr_spark.audio.fixtures import clips_table, expected_table
+
+        clips = clips_table(spark, 4)
+        base = list(clips.columns)
+        assert with_audio_features(clips).columns == base + [
+            "audio_valid", "audio_n_samples", "audio_sr", "audio_dur_ms", "audio_rms",
+            "audio_snr_db", "audio_transcript_ok", "audio_codec", "audio_peak",
+            "audio_clip_ratio", "audio_dc_offset", "audio_silence_ratio",
+        ]
+        vs = with_audio_features_vs(clips, expected_table(spark, 4), prefix="f_")
+        assert vs.columns == base + [
+            "f_valid", "f_n_samples", "f_sr", "f_dur_ms", "f_rms", "f_snr_db",
+            "f_codec", "f_peak", "f_clip_ratio", "f_dc_offset", "f_silence_ratio",
+            "f_transcript_ok",
+        ]

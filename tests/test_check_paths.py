@@ -118,24 +118,6 @@ class TestKeyedParity:
             assert {name: groups[g] for name, groups in keyed.items()} == flat
 
 
-def _next_job_id(sc) -> int:
-    """Id the next Spark job will get.  Job ids are sequential over the
-    whole application, whatever thread, group or tag submits the job."""
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    i = max(tracker.getJobIdsForGroup(None), default=-1) + 1
-    while tracker.getJobInfo(i) is not None:
-        i += 1
-    return i
-
-
-def _job_ids(spark, fn) -> list[int]:
-    sc = spark.sparkContext
-    first = _next_job_id(sc)
-    fn()
-    return list(range(first, _next_job_id(sc)))
-
-
 class TestJobBudget:
     """Total Spark jobs of one call on an expression + reference +
     uniqueness ruleset, counted by job-id delta (a job group would miss
@@ -146,33 +128,22 @@ class TestJobBudget:
     CHECK_DATA_JOBS = 10
     CHECK_DATA_BY_JOBS = 8
 
-    @pytest.fixture()
-    def no_runtime_broadcast(self, spark):
-        key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, "-1")
-        yield
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-    def test_check_data(self, spark, frames, no_runtime_broadcast):
+    def test_check_data(self, job_ids, frames, no_runtime_broadcast):
         df, ref = frames
         rs = _rules(False, False)
         counts = [
-            len(_job_ids(spark, lambda: check_data({"main": df, "c": ref}, rs).collect()))
+            len(job_ids(lambda: check_data({"main": df, "c": ref}, rs).collect()))
             for _ in range(2)
         ]
         assert counts == [self.CHECK_DATA_JOBS] * 2
 
-    def test_check_data_by(self, spark, frames, no_runtime_broadcast):
+    def test_check_data_by(self, job_ids, frames, no_runtime_broadcast):
         df, ref = frames
         rs = _rules(False, False)
         counts = [
             len(
-                _job_ids(
-                    spark, lambda: check_data_by(df, rs, by="g", datasets={"c": ref}).collect()
+                job_ids(
+                    lambda: check_data_by(df, rs, by="g", datasets={"c": ref}).collect()
                 )
             )
             for _ in range(2)
@@ -180,7 +151,7 @@ class TestJobBudget:
         assert counts == [self.CHECK_DATA_BY_JOBS] * 2
 
 
-def test_pool_jobs_keep_callers_group_and_tags(spark, frames):
+def test_pool_jobs_keep_callers_group_and_tags(spark, job_ids, frames):
     """check_data evaluates reference and uniqueness rules on pool threads;
     every job they run must carry the caller's job group and session tag,
     so cancelling by group or tag reaches them."""
@@ -197,7 +168,7 @@ def test_pool_jobs_keep_callers_group_and_tags(spark, frames):
     sc.setJobGroup(group, "check_data pool threads")
     spark.addTag(tag)
     try:
-        ids = _job_ids(spark, lambda: check_data({"main": df, "c": ref}, rs).collect())
+        ids = job_ids(lambda: check_data({"main": df, "c": ref}, rs).collect())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.removeTag(tag)

@@ -343,6 +343,95 @@ class TestEmbeddingNearDup:
         assert pairs[(3, 100)] > 0.999
 
 
+class TestLshPairJobBudget:
+    """Jobs the shared capped-bucket pair builder issues INSIDE each call and
+    when its result is CONSUMED (one count), with the hot-bucket cap on.
+    The split pins the lazy-checkpoint sequencing rule: with stats, the
+    drop-count collect is the first action and materializes the lazy
+    checkpoints inside the call; without stats the banded checkpoint is
+    eager, because the join's concurrent map stages would each compute a
+    lazy one.  Counted by job-id delta with runtime broadcast off."""
+
+    @pytest.fixture(scope="class")
+    def sigs(self, spark):
+        # every 4th doc is the same boilerplate: its buckets exceed cap 5
+        rows = [
+            (i, "same boilerplate text here now" if i % 4 == 0
+             else f"w{i} w{i + 1} w{i + 2} w{i + 3} w{i + 4}")
+            for i in range(60)
+        ]
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        return {
+            name: minhash_signatures(docs.filter(cond), num_hashes=16)
+            for name, cond in (
+                ("all", "true"), ("new", "doc_id % 2 = 1"), ("corpus", "doc_id % 2 = 0")
+            )
+        }
+
+    @staticmethod
+    def _budget(job_ids, build) -> tuple[int, int]:
+        out = []
+        in_call = job_ids(lambda: out.append(build()))
+        on_consume = job_ids(lambda: out[0].count())
+        return len(in_call), len(on_consume)
+
+    @pytest.mark.parametrize(
+        "with_stats,expected", [(False, (2, 6)), (True, (4, 5))], ids=["no_stats", "stats"]
+    )
+    def test_lsh_candidate_pairs(self, sigs, job_ids, no_runtime_broadcast, with_stats, expected):
+        stats = {} if with_stats else None
+        got = self._budget(
+            job_ids,
+            lambda: lsh_candidate_pairs(sigs["all"], num_bands=8, max_bucket_size=5, stats=stats),
+        )
+        assert got == expected
+        if with_stats:
+            assert stats == {"n_buckets_dropped": 8, "n_rows_dropped": 120}
+
+    @pytest.mark.parametrize(
+        "with_stats,expected", [(False, (4, 9)), (True, (8, 7))], ids=["no_stats", "stats"]
+    )
+    def test_lsh_pairs_against(self, sigs, job_ids, no_runtime_broadcast, with_stats, expected):
+        from dataverifyr_spark.operators.dedup import lsh_pairs_against
+
+        stats = {} if with_stats else None
+        got = self._budget(
+            job_ids,
+            lambda: lsh_pairs_against(
+                sigs["new"], sigs["corpus"], num_bands=8, max_bucket_size=5, stats=stats
+            ),
+        )
+        assert got == expected
+        if with_stats:
+            assert stats["corpus"] == {"n_buckets_dropped": 8, "n_rows_dropped": 120}
+            assert stats["new"] == {"n_buckets_dropped": 0, "n_rows_dropped": 0}
+
+    @pytest.mark.parametrize("with_stats", [False, True], ids=["no_stats", "stats"])
+    @pytest.mark.parametrize("udf_codes", [False, True], ids=["expr_codes", "udf_codes"])
+    def test_embedding_pairs_plan_reads_checkpointed_codes(
+        self, spark, monkeypatch, udf_codes, with_stats
+    ):
+        """embedding_near_dup_pairs self-joins the checkpointed (id, band,
+        bucket) codes: its returned plan computes no band code — no
+        posexplode, and on the broadcast-numpy arm no ArrowEvalPython."""
+        from dataverifyr_spark.operators import similarity as sim
+
+        if udf_codes:
+            monkeypatch.setattr(sim, "_EXPR_LSH_MAX", 0)
+        rows = [(i, [math.sin(i * 0.7 + d) for d in range(8)]) for i in range(25)]
+        rows += [(i + 100, [v + 1e-5 for v in vec]) for i, vec in rows]
+        df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        pairs = sim.embedding_near_dup_pairs(
+            df, dim=8, threshold=0.999, bits=8, bands=4, stats={} if with_stats else None
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "posexplode" not in plan
+        assert "ArrowEvalPython" not in plan
+        assert {(i, i + 100) for i in range(25)} <= {
+            (r["id_a"], r["id_b"]) for r in pairs.collect()
+        }
+
+
 class TestBpeProxy:
     def test_bpe_pieces(self, spark):
         df = spark.createDataFrame(

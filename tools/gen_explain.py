@@ -49,10 +49,13 @@ emb_d = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v")
 pairs = embedding_near_dup_pairs(emb_d, dim=64, threshold=0.99, bits=16, bands=2, vec_col="v")
 pp = cap(pairs)
 assert "BroadcastNestedLoopJoin" not in pp and "CartesianProduct" not in pp
-# keep the tree only: the detail section inlines 2x16x64 hyperplane literals
+# the self-join reads the checkpointed (id, band, bucket) codes: no band
+# code (posexplode over the hyperplane literals) is computed in this plan
+assert "Scan ExistingRDD" in pp and "posexplode" not in pp
 pp_tree = pp.split("\n\n(1)")[0] + (
-    "\n\n[node details elided: the projection inlines the band hyperplane "
-    "literals; asserted free of BroadcastNestedLoopJoin/CartesianProduct]\n"
+    "\n\n[node details elided: both join sides scan the checkpointed (id, band, "
+    "bucket) codes; asserted free of posexplode and BroadcastNestedLoopJoin/"
+    "CartesianProduct]\n"
 )
 sections.append(("Banded-LSH embedding near-dup pairs (equi-joins only; NO nested-loop/cartesian)", pp_tree))
 
