@@ -25,6 +25,10 @@ Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
   ``_reference_counts``) — never a collected ``isin`` list, which would cap
   ref size at driver memory.  Uniqueness rules evaluate as one key-only
   groupBy count (``_uniqueness_counts``).
+* ``check_data`` runs ONE Spark action: each reference or uniqueness rule
+  is a one-row subtree cross-joined (1×1, no keys) onto the fused
+  aggregate, so the scheduler runs their stages side by side.  Rules run
+  one by one only when that action raises (see ``check_data``).
 * ``check_data_by(by=[cols])`` returns a distributed per-group summary (one
   row per group × rule) via the same fused aggregation under ``groupBy`` —
   the north_rule's "per-partition pass/fail rows" — without collecting.
@@ -38,13 +42,11 @@ from __future__ import annotations
 import re
 import time as _time
 import warnings
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
 from operator import and_, or_
 from typing import Any, Mapping, Sequence
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -81,6 +83,8 @@ RESULT_SCHEMA = T.StructType(
 )
 
 _COERCION_WARN = "NAs introduced by coercion"
+# a job cancelled by group, tag or cancelAll stops check_data: no re-run, no error row
+_CANCELLED = "[SPARK_JOB_CANCELLED]"
 
 
 class CheckDataError(RuntimeError):
@@ -170,12 +174,16 @@ def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
     return out
 
 
+def _hits(pred: Column, alias: str) -> Column:
+    """Sum of rows where ``pred`` is TRUE (NULL counts as not)."""
+    return F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(alias)
+
+
 def _pass_sums(preds: Sequence[Column]) -> list[Column]:
     """The fused conditional-sum aggregate: ``__tests`` (the row count) plus
     one ``__p{i}`` sum of rows passing each predicate."""
     return [F.count(F.lit(1)).alias("__tests")] + [
-        F.sum(F.when(p, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}")
-        for i, p in enumerate(preds)
+        _hits(p, f"__p{i}") for i, p in enumerate(preds)
     ]
 
 
@@ -304,44 +312,27 @@ def _schema_rows(
         elif extra_columns == "fail":
             raise ValueError(msg)
 
+    def row(name: str, expr: str, ok: bool, error: str) -> dict[str, Any]:
+        return {
+            "check_type": "schema", "name": name, "expr": expr, "allow_na": False,
+            "negate": False, "tests": 1, "pass": int(ok), "fail": int(not ok),
+            "warn": "", "error": "" if ok else error, "time": 0.0,
+        }
+
     for c in decls:
         exists = c.col in actual
-        ok = exists or c.optional
         rows.append(
-            {
-                "check_type": "schema",
-                "name": f"Column exists: {c.col}",
-                "expr": f"column_exists('{c.col}')",
-                "allow_na": False,
-                "negate": False,
-                "tests": 1,
-                "pass": int(ok),
-                "fail": int(not ok),
-                "warn": "",
-                "error": "" if ok else f"required column '{c.col}' not found",
-                "time": 0.0,
-            }
+            row(f"Column exists: {c.col}", f"column_exists('{c.col}')", exists or c.optional,
+                f"required column '{c.col}' not found")
         )
         family = c.spark_type_family()
         if exists and c.type is not None:
             # unknown declared type ⇒ always passes (R/data_column.R:328)
             ok_t = True if family is None else isinstance(actual[c.col], _SPARK_FAMILY[family])
+            got = actual[c.col].simpleString()
             rows.append(
-                {
-                    "check_type": "schema",
-                    "name": f"Column type: {c.col}",
-                    "expr": f"column_type('{c.col}') == '{c.type}'",
-                    "allow_na": False,
-                    "negate": False,
-                    "tests": 1,
-                    "pass": int(ok_t),
-                    "fail": int(not ok_t),
-                    "warn": "",
-                    "error": ""
-                    if ok_t
-                    else f"column '{c.col}' has type '{actual[c.col].simpleString()}', declared '{c.type}'",
-                    "time": 0.0,
-                }
+                row(f"Column type: {c.col}", f"column_type('{c.col}') == '{c.type}'", ok_t,
+                    f"column '{c.col}' has type '{got}', declared '{c.type}'")
             )
     return rows, warns
 
@@ -455,21 +446,6 @@ def _rule_counts(
     if isinstance(r, ReferenceRule):
         return _reference_counts(df, r, datasets, by_cols)
     return _uniqueness_counts(df, r, by_cols)
-
-
-def _eval_counted(
-    df: DataFrame, r: Rule, datasets: Mapping[str, DataFrame], tests: int
-) -> dict[str, Any]:
-    """check_data's result row for one reference or uniqueness rule.
-    ``tests`` is the fused scan's row count; any failure (missing dataset or
-    column, analysis error) becomes an error row, never an exception
-    (R/check_data.R:301-315 applies to these rules too)."""
-    t0 = _time.perf_counter()
-    try:
-        passed = _rule_counts(df, r, datasets, []).collect()[0]["pass"]
-        return _result_row(r, tests, int(passed or 0), elapsed=_time.perf_counter() - t0)
-    except Exception as exc:
-        return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
 
 
 def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
@@ -586,19 +562,26 @@ def check_data(
     """Run a ruleset against a dataset; return the 11-column summary DataFrame.
 
     Row-order contract (R/check_data.R:127-144): schema rows first, then
-    row_rules in ruleset order, then reference rules.
+    row_rules in ruleset order, then reference rules, then uniqueness rules.
 
     ``timing`` semantics for the ``time`` column: the reference evaluates one
-    scan per rule, so its per-rule times are real; this engine fuses all
-    expression rules into ONE scan, so true per-rule cost does not exist.
+    scan per rule, so its per-rule times are real; this engine evaluates
+    every rule in ONE Spark action, so true per-rule cost does not exist.
 
-    - ``"shared"`` (default): each rule's ``time`` is the fused scan's wall
-      time divided evenly — total across rules equals real wall time, the
-      per-rule split is nominal.
-    - ``"per_rule"``: after the fused pass, each rule's predicate is ALSO
-      timed in its own single-rule aggregation job and that wall time is
-      reported — reference-comparable numbers, at the cost of N extra scans
+    - ``"shared"`` (default): each evaluated rule's ``time`` is an even
+      share of that action's wall time, reference and uniqueness rules
+      included — the shares sum to the real wall time, the split is nominal.
+    - ``"per_rule"``: each rule runs alone in its own job and reports that
+      job's wall time — reference-comparable numbers, at the cost of N scans
       (use for profiling, never in production pipelines).
+
+    A rule that raises at runtime (an ANSI ``[DIVIDE_BY_ZERO]``, a failed
+    join-key cast) fails the shared action; every rule then runs alone as
+    under ``"per_rule"``, so the failure becomes that rule's error row
+    (pass=0, fail=tests) and the other rules still report
+    (R/check_data.R:301-315).  ``tests`` then comes from the first rule job
+    that read it, else from ``df.count()``, so an unreadable source still
+    raises rather than give N error rows, as does a cancelled job.
     """
     if isinstance(rules, str):
         from .io import read_rules
@@ -623,95 +606,99 @@ def check_data(
             warnings.warn(msg, stacklevel=2)
 
     expr_rules, counted_rules = _split_rules(rules)
-
     compiled = _compile_all(df, expr_rules)
-    good = [c for c in compiled if c.pred is not None]
+    # one single-row subtree per rule, keyed by its summary-row position i:
+    # an expression rule's columns of the fused aggregate, a counted rule's
+    # one-row frame, or the error that kept it from being built
+    aggs: dict[int, list[Column]] = {}
+    frames: dict[int, DataFrame] = {}
+    errors: dict[int, str] = {}
+    for i, c in enumerate(compiled):
+        if c.pred is None:
+            errors[i] = c.error
+        else:
+            aggs[i] = [_hits(c.pred, f"__p{i}")]
+            aggs[i] += [_hits(w, f"__w{i}_{j}") for j, w in enumerate(c.watchers)]
+    for i, r in enumerate(counted_rules, len(compiled)):
+        try:
+            frames[i] = _rule_counts(df, r, datasets, []).select(F.col("pass").alias(f"__p{i}"))
+        except Exception as exc:  # missing dataset or column, analysis error
+            errors[i] = _strip_error(exc)
 
     # no explicit column-pruning select: Catalyst prunes the scan (parquet
     # ReadSchema / InMemoryTableScan) to the union of referenced columns on
     # its own, and an extra select only adds an analysis pass (measured 1.7x
     # slower — on CACHED inputs, where analysis overhead dominates; on cold
     # parquet the select is merely redundant, Catalyst prunes either way)
-    t0 = _time.perf_counter()
-    aggs = _pass_sums([c.pred for c in good]) + [
-        F.sum(F.when(w, F.lit(1)).otherwise(F.lit(0))).alias(f"__w{i}_{j}")
-        for i, c in enumerate(good)
-        for j, w in enumerate(c.watchers)
-    ]
+    count = F.count(F.lit(1)).alias("__tests")
+    values: dict[int, dict[str, Any]] = {}
+    times: dict[int, float] = {}
+    tests: int | None = None
     warn_before = udf_warnings.snapshot()
-    agg_row = df.agg(*aggs).collect()[0].asDict()
-    tests = int(agg_row["__tests"])
-    scan_elapsed = _time.perf_counter() - t0
-    per_rule_time = scan_elapsed / max(len(good), 1)
-
-    rule_times: dict[int, float] = {}
-    if timing == "per_rule":
-        for i, c in enumerate(good):
+    if timing == "shared":
+        # ONE action: the counted frames cross-join (1×1, no keys) onto the
+        # fused aggregate, and the scheduler runs their stages side by side
+        t0 = _time.perf_counter()
+        try:
+            fused = df.agg(count, *[a for cols in aggs.values() for a in cols])
+            wide = reduce(DataFrame.crossJoin, frames.values(), fused).collect()[0].asDict()
+        except Exception as exc:  # a rule failed at runtime: each runs alone below
+            if _CANCELLED in str(exc):
+                raise
+        else:
+            tests = wide["__tests"]
+            values = dict.fromkeys([*aggs, *frames], wide)
+            share = (_time.perf_counter() - t0) / max(len(values), 1)
+            times = dict.fromkeys(values, share)
+    if tests is None:
+        # each rule alone: a runtime failure (ANSI divide by zero, a failed
+        # join-key cast) becomes the error row of the rule that raised, and
+        # under timing="per_rule" each rule reports its own job's wall time
+        for i in sorted([*aggs, *frames]):
             t1 = _time.perf_counter()
-            df.agg(*_pass_sums([c.pred])).collect()
-            rule_times[i] = _time.perf_counter() - t1
+            try:
+                frame = frames[i] if i in frames else df.agg(count, *aggs[i])
+                values[i] = frame.collect()[0].asDict()
+                tests = values[i].get("__tests") if tests is None else tests
+            except Exception as exc:
+                if _CANCELLED in str(exc):
+                    raise
+                errors[i] = _strip_error(exc)
+            times[i] = _time.perf_counter() - t1
+        if tests is None:
+            tests = df.count()  # no rule read the source: a failing source raises here
 
-    # executor-side warnings raised inside UDF batches during THIS job,
+    # executor-side warnings raised inside UDF batches during these jobs,
     # attributed to the rules whose expressions call the warning function
     # (reference records any evaluation warning, R/check_data.R:248-253)
     fn_warns: dict[str, list[str]] = {}
     for fn, msg in sorted(udf_warnings.new_since(warn_before)):
         fn_warns.setdefault(fn, []).append(msg)
 
-    row_results: list[dict[str, Any]] = []
-    gi = 0
-    for c in compiled:
-        if c.pred is None:
+    rule_rows: list[dict[str, Any]] = []
+    for i, r in enumerate([*expr_rules, *counted_rules]):
+        if i in errors:
             # error row: pass=0, fail=tests (R/check_data.R:301-315)
-            row_results.append(_result_row(c.rule, tests, 0, error=c.error, elapsed=0.0))
-        else:
-            passed = int(agg_row[f"__p{gi}"] or 0)
-            warns: list[str] = []
-            if c.watchers and any(
-                int(agg_row[f"__w{gi}_{j}"] or 0) > 0 for j in range(len(c.watchers))
-            ):
-                warns.append(_COERCION_WARN)
-            if fn_warns:
-                try:
-                    called = get_called_functions(c.rule.expr)
-                except ExprError:
-                    called = []
-                for fn in called:
-                    warns.extend(m for m in fn_warns.get(fn, ()) if m not in warns)
-            row_results.append(
-                _result_row(
-                    c.rule,
-                    tests,
-                    passed,
-                    # unique messages joined with ", " exactly like the
-                    # reference's get_warnings (R/check_data.R:
-                    # paste(unique(out), collapse = ", "))
-                    warn=", ".join(warns),
-                    elapsed=rule_times.get(gi, per_rule_time),
-                )
-            )
-            gi += 1
+            rule_rows.append(_result_row(r, tests, 0, error=errors[i], elapsed=times.get(i, 0.0)))
+            continue
+        row = values[i]
+        warns: list[str] = []
+        if any(v for k, v in row.items() if k.startswith(f"__w{i}_")):
+            warns.append(_COERCION_WARN)
+        if fn_warns and i in aggs:
+            try:
+                called = get_called_functions(r.expr)
+            except ExprError:
+                called = []
+            for fn in called:
+                warns.extend(m for m in fn_warns.get(fn, ()) if m not in warns)
+        # unique messages joined with ", " exactly like the reference's
+        # get_warnings (R/check_data.R: paste(unique(out), collapse = ", "))
+        rule_rows.append(
+            _result_row(r, tests, row[f"__p{i}"] or 0, warn=", ".join(warns), elapsed=times[i])
+        )
 
-    # reference and uniqueness rules are independent join/groupBy jobs —
-    # submit them concurrently from one pool (Spark's scheduler interleaves
-    # jobs from multiple driver threads); result rows keep _split_rules' order.
-    # The pool target inherits the caller's local properties and session
-    # tags: pinned pool threads would otherwise start without the caller's
-    # job group and tags, so cancelling by group or tag would miss them.
-    def evaluate(r: Rule) -> dict[str, Any]:
-        return _eval_counted(df, r, datasets, tests)
-
-    if len(counted_rules) > 1:
-        with ThreadPoolExecutor(max_workers=min(4, len(counted_rules))) as pool:
-            # returns the session itself when pinned-thread mode is off,
-            # where there is nothing to inherit
-            inherit = inheritable_thread_target(df.sparkSession)
-            target = inherit(evaluate) if callable(inherit) else evaluate
-            counted_rows = list(pool.map(target, counted_rules))
-    else:
-        counted_rows = [evaluate(r) for r in counted_rules]
-
-    all_rows = schema_rows + row_results + counted_rows
+    all_rows = schema_rows + rule_rows
     result = _local_result_df(
         spark,
         [tuple(r[f.name] for f in RESULT_SCHEMA.fields) for r in all_rows],
@@ -795,9 +782,9 @@ def check_data_by(
     aggregates combine map-side, so a key holding 90% of the rows shuffles
     ONE partial row per upstream task, not 90% of the data to one reducer —
     no salting needed for the summary path (tested under extreme skew in
-    tests/test_scale_features.py::TestSkew).  Salting matters for DISTINCT
-    counting (operators/uniqueness.py) and joins (AQE skewJoin enabled in
-    session.build_spark), not for these sums.
+    tests/test_scale_features.py::TestSkew).  Key counts (uniqueness rules,
+    operators/uniqueness.py) combine map-side the same way; joins rely on
+    AQE skewJoin (enabled in session.build_spark).
     """
     if isinstance(rules, Rule):
         rules = ruleset(rules)
@@ -810,16 +797,17 @@ def check_data_by(
             "to check_data_by (they would otherwise be silently dropped)"
         )
 
+    # a bad rule raises (unparsable expression, missing dataset or column):
+    # the _by contract has no error-row channel
     parts: list[DataFrame] = []
     if expr_rules:
-        good = [c for c in _compile_all(df, expr_rules) if c.pred is not None]
-        if not good:
-            raise ValueError("no compilable rules for check_data_by")
-        grouped = df.groupBy(*by_cols).agg(*_pass_sums([c.pred for c in good]))
-        parts.append(_long_summary(grouped, by_cols, [c.rule for c in good]))
+        compiled = _compile_all(df, expr_rules)
+        bad = [f"'{c.rule.name}' ({c.rule.expr}): {c.error}" for c in compiled if c.pred is None]
+        if bad:
+            raise ValueError("check_data_by: bad rule(s) " + "; ".join(bad))
+        grouped = df.groupBy(*by_cols).agg(*_pass_sums([c.pred for c in compiled]))
+        parts.append(_long_summary(grouped, by_cols, expr_rules))
 
-    # counted rules raise on a missing dataset or column: the _by contract
-    # has no error-row channel
     for r in counted_rules:
         parts.append(
             _rule_counts(df, r, datasets or {}, by_cols).select(
@@ -833,7 +821,7 @@ def check_data_by(
         )
 
     if not parts:
-        raise ValueError("no compilable rules for check_data_by")
+        raise ValueError("no rules for check_data_by")
     return reduce(DataFrame.unionByName, parts)
 
 

@@ -1,71 +1,63 @@
 """Uniqueness / distinct-count checks at skew scale (north_rule).
 
-A naive ``COUNT(DISTINCT key)`` over 10^12 rows funnels every distinct key
-through one shuffle with no partial aggregation when keys are skewed.  The
-salted two-phase pattern here:
-
-  phase 1: groupBy(hash(key) % S, key)  — dedupe within salt buckets,
-           map-side combine applies, hot keys split across S buckets
-  phase 2: count survivors
-
-stays fully parallel at any skew.  ``approx=True`` swaps in the HyperLogLog
-sketch (``approx_count_distinct``) — constant memory per partition, one pass,
-the north_star's 10^12-scale path.
+Total rows and distinct keys come from ONE aggregation: a key-only
+``groupBy(key)`` count, re-aggregated to ``sum(n), count(*)``.  Partial
+aggregation combines duplicate keys map-side, so a hot key ships one
+partial row per task and the group-by stays parallel at any skew; a salt
+computed from the key would add nothing (it follows the key, so a hot key
+still lands in one bucket).  ``approx=True`` swaps in the HyperLogLog
+sketch (``approx_count_distinct``) beside ``count(*)`` — constant memory
+per partition, one pass, the north_star's 10^12-scale path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..check import _local_result_df, _safe_alias
 
 __all__ = ["distinct_count_salted", "uniqueness_check"]
 
 
-def distinct_count_salted(
-    df: DataFrame, cols: list[str] | str, num_salts: int = 64, approx: bool = False
-) -> int:
-    cols = [cols] if isinstance(cols, str) else list(cols)
+def _key_totals(df: DataFrame, cols: list[str], approx: bool) -> Row:
+    """``total, distinct`` over the key columns in one aggregation."""
     if approx:
-        row = df.agg(F.approx_count_distinct(F.struct(*cols)).alias("d")).collect()[0]
-        return int(row["d"])
-    salt = "__salt"
-    while salt in df.columns:  # collision-proof internal alias
-        salt = "_" + salt
+        return df.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.approx_count_distinct(F.struct(*cols)).alias("distinct"),
+        ).collect()[0]
     # group directly on the key columns (r7): a struct wrapper allocated one
     # nested row per input row only to reproduce what multi-column grouping
     # already does (GROUP BY groups NULLs identically either way)
-    salted = df.select(
-        F.pmod(F.xxhash64(*cols), F.lit(num_salts)).alias(salt),
-        *[F.col(c) for c in cols],
-    )
-    # phase 1 dedupe within (salt, key); phase 2 global count — two shuffles
-    # but both with partial aggregation and no hot single reducer
-    deduped = salted.groupBy(salt, *cols).agg(F.lit(1))
-    return deduped.count()
+    cnt = _safe_alias(df.columns, "__cnt")
+    keys = df.groupBy(*cols).agg(F.count(F.lit(1)).alias(cnt))
+    return keys.agg(
+        F.sum(cnt).alias("total"), F.count(F.lit(1)).alias("distinct")
+    ).collect()[0]
+
+
+def distinct_count_salted(df: DataFrame, cols: list[str] | str, approx: bool = False) -> int:
+    """Distinct key count; the name stays for existing callers (``bench.py``)."""
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    return int(_key_totals(df, cols, approx)["distinct"])
 
 
 def uniqueness_check(
     df: DataFrame, cols: list[str] | str, approx: bool = False
 ) -> DataFrame:
-    """One-row summary: total rows, distinct keys, duplicate rows, unique flag.
-
-    Single-scan: total + distinct computed in one aggregation when approx,
-    two-phase salted otherwise.
-    """
+    """One-row summary: total rows, distinct keys, duplicate rows, unique
+    flag — total and distinct from one aggregation."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    spark = df.sparkSession
-    total = df.count()
-    distinct = distinct_count_salted(df, cols, approx=approx)
-    from pyspark.sql import types as T
-
-    from ..check import _local_result_df
-
+    row = _key_totals(df, cols, approx)
+    total, distinct = int(row["total"] or 0), int(row["distinct"])
     schema = T.StructType.fromDDL(
         "key string, total_rows bigint, distinct_keys bigint, "
         "duplicate_rows bigint, is_unique boolean"
     )
     return _local_result_df(
-        spark,
+        df.sparkSession,
         [(".".join(cols), total, distinct, total - distinct, distinct == total)],
         schema,
     )

@@ -213,6 +213,22 @@ class TestCheckDataBy:
         flat = _rows(check_data(cars_df, rule("mpg > 20")))[0]
         assert total_pass == flat["pass"]
 
+    def test_bad_rules_raise_naming_each(self, spark):
+        """No error-row channel: a rule that does not compile raises rather
+        than silently losing its rows."""
+        df = spark.createDataFrame([(1,), (2,)], "x int")
+        rs = ruleset(
+            rule("x > 1", name="good"),
+            rule("nope > 1", name="missing"),
+            rule("x >> 1", name="unparsable"),
+        )
+        with pytest.raises(ValueError) as err:
+            check_data_by(df, rs, by="x")
+        msg = str(err.value)
+        assert "'missing' (nope > 1): [UNRESOLVED_COLUMN" in msg
+        assert "'unparsable' (x >> 1): " in msg
+        assert "good" not in msg
+
 
 class TestYamlPathConvenience:
     # test-check_data.R:209-228: a path as `rules` loads the YAML ruleset

@@ -1,10 +1,13 @@
 """check_data is the no-key case of check_data_by: every rule kind has one
 evaluator taking the group keys.  These tests pin that the two paths agree
-on every flag combination, how many Spark jobs each runs, and that the jobs
-check_data submits from its pool threads keep the caller's job group and
-tags."""
+on every flag combination, how many Spark jobs each runs, that the jobs of
+a check_data call keep the caller's job group and tags, and that a rule
+failing at runtime becomes its own error row while the others report."""
 
 import itertools
+import shutil
+import threading
+import time
 import uuid
 
 import pytest
@@ -125,7 +128,7 @@ class TestJobBudget:
     races the join's shuffle stages — the same check_data_by plan ran 5 or
     6 jobs — so the budget is counted with that conversion off."""
 
-    CHECK_DATA_JOBS = 10
+    CHECK_DATA_JOBS = 9
     CHECK_DATA_BY_JOBS = 8
 
     def test_check_data(self, job_ids, frames, no_runtime_broadcast):
@@ -151,10 +154,10 @@ class TestJobBudget:
         assert counts == [self.CHECK_DATA_BY_JOBS] * 2
 
 
-def test_pool_jobs_keep_callers_group_and_tags(spark, job_ids, frames):
-    """check_data evaluates reference and uniqueness rules on pool threads;
-    every job they run must carry the caller's job group and session tag,
-    so cancelling by group or tag reaches them."""
+def test_jobs_keep_callers_group_and_tags(spark, job_ids, frames):
+    """Every job check_data runs for reference and uniqueness rules must
+    carry the caller's job group and session tag, so cancelling by group or
+    tag reaches them."""
     df, ref = frames
     sc = spark.sparkContext
     rs = ruleset(
@@ -177,3 +180,91 @@ def test_pool_jobs_keep_callers_group_and_tags(spark, job_ids, frames):
     # a session tag reaches a job as "spark-session-<id>-thread-<id>-<tag>"
     store = sc._jsc.sc().statusStore()
     assert [i for i in ids if f"-{tag}" not in store.job(i).jobTags().toString()] == []
+
+
+def _counts(rows) -> dict:
+    return {r["name"]: (r["tests"], r["pass"], r["fail"], r["error"]) for r in rows}
+
+
+class TestRuntimeErrors:
+    """A rule that raises while the data is read (Spark 4's default ANSI
+    mode) fails check_data's one shared action; each rule then runs alone,
+    so the failure becomes that rule's error row and the other rules still
+    report (R/check_data.R:301-315)."""
+
+    @pytest.mark.parametrize("timing", ["shared", "per_rule"])
+    def test_expression_rule_error_row(self, spark, timing):
+        df = spark.createDataFrame([(3, 1), (2, 0), (1, 1)], "a int, b int")
+        rs = ruleset(
+            rule("a > 1", name="ok"),
+            rule("a / b > 0", name="div"),
+            rule("a %% b == 0", name="mod"),
+        )
+        got = _counts(check_data(df, rs, timing=timing).collect())
+        assert got["ok"] == (3, 2, 1, "")
+        assert got["div"][:3] == got["mod"][:3] == (3, 0, 3)
+        assert got["div"][3].startswith("[DIVIDE_BY_ZERO]")
+        assert got["mod"][3].startswith("[REMAINDER_BY_ZERO]")
+
+    def test_reference_cast_error_row(self, spark):
+        """The string FK 'abc' fails its cast to the int reference column
+        inside the join."""
+        df = spark.createDataFrame([("abc", 1), ("1", 2), ("3", 2)], "fk string, k int")
+        ref = spark.createDataFrame([(1,), (3,)], "id int")
+        rs = ruleset(
+            rule("k > 1", name="expr"),
+            reference_rule("fk", "r", "id", name="ref"),
+            unique_rule("k", name="uniq"),
+        )
+        got = _counts(check_data({"m": df, "r": ref}, rs).collect())
+        assert got["expr"] == (3, 2, 1, "")
+        assert got["uniq"] == (3, 1, 2, "")
+        assert got["ref"][:3] == (3, 0, 3)
+        assert got["ref"][3].startswith("[CAST_INVALID_INPUT]")
+
+    @pytest.mark.parametrize("timing", ["shared", "per_rule"])
+    def test_zero_rows(self, frames, timing):
+        df, ref = frames
+        rs = _rules(False, False)
+        rows = check_data({"main": df.filter("false"), "c": ref}, rs, timing=timing).collect()
+        assert _counts(rows) == {n: (0, 0, 0, "") for n in ("expr", "ref", "uniq")}
+
+    @pytest.mark.parametrize("timing", ["shared", "per_rule"])
+    def test_unreadable_source_raises(self, spark, tmp_path, timing):
+        """A source that fails under every rule raises, instead of turning
+        into one error row per rule."""
+        path = str(tmp_path / "gone")
+        spark.range(10).write.parquet(path)
+        df = spark.read.parquet(path)
+        shutil.rmtree(path)
+        with pytest.raises(Exception, match="FileNotFound|does not exist"):
+            check_data(df, ruleset(rule("id > 1"), unique_rule("id")), timing=timing)
+
+    def test_cancelled_call_raises(self, spark):
+        """A job cancelled by its group stops the call: one job ran, and it
+        neither restarts rule by rule nor becomes error rows.  The
+        canceller keeps cancelling, so a call that restarted would run (and
+        lose) more jobs in the group."""
+        sc = spark.sparkContext
+        group = f"dvfy-cancel-{uuid.uuid4().hex}"
+        done = threading.Event()
+
+        def cancel():
+            while not done.is_set():
+                if sc.statusTracker().getJobIdsForGroup(group):
+                    sc.cancelJobGroup(group)
+                time.sleep(0.05)
+
+        canceller = threading.Thread(target=cancel, daemon=True)
+        sc.setJobGroup(group, "cancelled check_data")
+        canceller.start()
+        try:
+            df = spark.range(10**12).selectExpr("id AS a")
+            with pytest.raises(Exception, match="SPARK_JOB_CANCELLED"):
+                check_data(df, ruleset(rule("a > 1"), rule("a < 5")))
+        finally:
+            done.set()
+            canceller.join(timeout=10)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not canceller.is_alive()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

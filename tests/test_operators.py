@@ -180,6 +180,20 @@ class TestUniqueness:
         assert (row["total_rows"], row["distinct_keys"], row["duplicate_rows"]) == (3, 2, 1)
         assert row["is_unique"] is False
 
+    # jobs of one uniqueness_check call, collect included; the two-scan
+    # version (df.count() then a salted distinct count) ran 6 exact, 5 approx
+    UNIQUENESS_CHECK_JOBS = {False: 4, True: 3}
+
+    @pytest.mark.parametrize("approx", [False, True])
+    def test_uniqueness_check_job_budget(self, spark, job_ids, approx):
+        """Total rows and distinct keys come from one aggregation."""
+        df = spark.createDataFrame([(1, "a"), (2, "a"), (2, "a"), (None, "b")], "k int, s string")
+        counts = [
+            len(job_ids(lambda: uniqueness_check(df, ["k", "s"], approx=approx).collect()))
+            for _ in range(2)
+        ]
+        assert counts == [self.UNIQUENESS_CHECK_JOBS[approx]] * 2
+
 
 class TestLSHBucketCap:
     def test_hot_buckets_dropped(self, spark):

@@ -218,7 +218,7 @@ class TestReferenceViolations:
 
 class TestConcurrentReferenceRules:
     def test_multiple_reference_rules_order_and_counts(self, spark):
-        # three independent FK rules -> evaluated concurrently, rows in
+        # three independent FK rules -> subtrees of one action, rows in
         # ruleset order with correct counts
         rs = ruleset(
             reference_rule("carrier", "carriers", "carrier_id", name="fk_a"),
