@@ -8,7 +8,8 @@ change's effect is visible without a full 22-query suite run.
 
 Usage:
   python bench_extra.py minhash     # dedup_minhash_lsh / longdocs / skewed
-  python bench_extra.py describe    # describe_lineitem_approx / by_returnflag
+  python bench_extra.py describe    # describe_lineitem_approx / by_returnflag, plus
+                                    # the default-argument describe calls
   python bench_extra.py reference   # reference_fk_join / skewed_smj
   python bench_extra.py audio       # audio_validate / quality / fingerprint / curate
   python bench_extra.py misc        # violations_tagged_scan / uniqueness / simhash
@@ -130,6 +131,13 @@ def mode_describe(spark):
             (
                 "describe_by_returnflag",
                 lambda: dv.describe_by(li, by="l_returnflag", approx=True).collect(),
+            ),
+            # the default-argument calls bench.py skips: exact, and approx
+            # with its default top-k
+            ("describe_lineitem_exact_default", lambda: dv.describe(li).collect()),
+            (
+                "describe_lineitem_approx_default",
+                lambda: dv.describe(li, approx=True).collect(),
             ),
         ]
     )

@@ -582,6 +582,18 @@ def check_data(
     (R/check_data.R:301-315).  ``tests`` then comes from the first rule job
     that read it, else from ``df.count()``, so an unreadable source still
     raises rather than give N error rows, as does a cancelled job.
+
+    PySpark still logs each such failure at ERROR, with its stack trace,
+    when the exception is built: its logger ``DataFrameQueryContextLogger``
+    writes every DataFrame query-context error, handled or not — once for
+    the failed shared action and once per failing rule's job.  To silence
+    it, set the level on PySpark's own logger class:
+    ``PySparkLogger.getLogger("DataFrameQueryContextLogger").setLevel(
+    logging.CRITICAL)`` (``from pyspark.logger import PySparkLogger``).  A
+    plain ``logging.getLogger`` of that name, made first, registers a plain
+    ``Logger`` that rejects PySpark's keyword arguments: the error row then
+    reads ``Logger._log() got an unexpected keyword argument 'file'``.
+    This call leaves logger levels alone, since they are process-wide.
     """
     if isinstance(rules, str):
         from .io import read_rules

@@ -5,10 +5,11 @@ mean, median, max, sd``.  Follows the reference's own batched-collectibles
 strategy (R/describe.R:329-422): every column's statistics come from one
 aggregate with ``stat__col``-aliased outputs, unpivoted in-plan by an
 explode of per-column structs.  ``describe`` is the key-less case of
-``describe_by``: both run :func:`_profile`, and ``most_frequent`` comes from
-one top-k pass over all columns at once (:func:`_most_frequent_by`), so the
-job count does not grow with the column count.  The top-k is skipped under
-``fast=True`` or ``top_n=0``.
+``describe_by``: both run :func:`_profile`.  Exact ``n_distinct``, the
+exact ``median`` and ``most_frequent`` all read one value-count frame
+(:func:`_value_counts`: one row per distinct (group, column, value) with its
+count), so the job count does not grow with the column count.  That frame
+is skipped under ``fast=True``, and under ``approx=True`` with ``top_n=0``.
 
 Semantics pinned to the reference:
 - non-numeric columns profile the LENGTH of their string form
@@ -16,7 +17,7 @@ Semantics pinned to the reference:
 - timestamps count as numeric (R/describe.R:67-69) — profiled as epoch
   seconds, since our output schema keeps min/mean/median/max/sd as doubles;
 - ``n_distinct`` counts NA as a distinct value (R n_distinct semantics,
-  R/describe.R:112);
+  R/describe.R:112), and ``-0.0`` as ``0.0``;
 - ``sd`` is the SAMPLE standard deviation (R/describe.R:128);
 - ``fast=True`` leaves n_distinct/median/most_frequent NULL
   (R/describe.R:604-607) — at 10^12 rows use ``approx=True`` instead, which
@@ -49,13 +50,8 @@ DESCRIBE_SCHEMA = T.StructType(
 )
 
 _NUMERIC = (
-    T.IntegerType,
-    T.LongType,
-    T.ShortType,
-    T.ByteType,
-    T.DoubleType,
-    T.FloatType,
-    T.DecimalType,
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType,
 )
 _TEMPORAL = (T.TimestampType, T.DateType)
 
@@ -78,12 +74,10 @@ def _friendly_type(dt: T.DataType) -> str:
 def _value_expr(name: str, dt: T.DataType) -> Column:
     """Numeric view of a column: itself, epoch seconds, or string length."""
     c = F.col(name)
-    if isinstance(dt, _NUMERIC):
+    if isinstance(dt, (*_NUMERIC, T.BooleanType)):
         return c.cast("double")
     if isinstance(dt, _TEMPORAL):
         return c.cast("timestamp").cast("double")
-    if isinstance(dt, T.BooleanType):
-        return c.cast("double")
     return F.length(c.cast("string")).cast("double")
 
 
@@ -116,11 +110,14 @@ def _profile(
     mean, median, max, sd`` per (group, column), plus ``most_frequent``
     after ``n_na`` when ``top_n > 0`` and not ``fast``.
 
-    Aggregates, one builder for every mode:
-    - declarative (count/sum/min/mean/max/stddev) in every mode;
-    - exact adds ``count_distinct`` + exact ``percentile`` to that same
-      aggregate — Spark plans the distinct aggregates through an Expand
-      that replicates each scanned row once per distinct aggregate;
+    - declarative (count/sum/min/mean/max/stddev): one aggregate in every
+      mode, unpivoted to one row per (group, column);
+    - exact (the default): ``count(*)`` and ``percentile(__val, 0.5, __c)``
+      per (group, column) of the value-count frame (:func:`_value_counts`).
+      ``count(*)`` counts the NULL value as one more value (R/describe.R:112);
+      the count-weighted percentile equals ``percentile(val, 0.5)`` over the
+      rows but buffers distinct values only.  The frame's shuffle is the
+      top-k's own, reused when both run;
     - approx adds a second, sketch-only aggregate (HLL + raw KLL), joined
       back on the null-safe group key (a 1×1 cross join without keys).
       r7: a single aggregate mixing sketches with min/mean/max/sd forces
@@ -145,9 +142,7 @@ def _profile(
             F.max(val).alias(f"max__{name}"),
             F.stddev_samp(val).alias(f"sd__{name}"),
         ]
-        if fast:
-            continue
-        if approx:
+        if approx and not fast:
             # r6: KLL quantile sketch (DataSketches, built into Spark 4)
             # replaced percentile_approx — 3.2× faster on 16 double columns
             # × 10M rows at ~1% rank error.  KLL ignores NaN updates, so an
@@ -160,76 +155,72 @@ def _profile(
                 _approx_distinct(f).alias(f"nd__{name}"),
                 F.kll_sketch_agg_double(val).alias(f"kll__{name}"),
             ]
-        else:
-            decl += [
-                F.count_distinct(c).alias(f"nd__{name}"),
-                F.percentile(val, 0.5).alias(f"med__{name}"),
-            ]
     stats = df.groupBy(*by_cols).agg(*decl)
     if sketch:
-        sk_keys = []
-        for c in by_cols:  # collision-proof internal join-key aliases
-            k = f"__k_{c}"
-            while k in df.columns:
-                k = "_" + k
-            sk_keys.append(k)
-        sk = (
-            df.select(*[F.col(c).alias(k) for c, k in zip(by_cols, sk_keys)], *df.columns)
-            .groupBy(*sk_keys)
-            .agg(*sketch)
-        )
-        cond = F.lit(True)
-        for c, k in zip(by_cols, sk_keys):
-            cond = cond & stats[c].eqNullSafe(sk[k])
-        stats = stats.join(sk, cond, "inner").drop(*sk_keys)
+        stats = _join_on(stats, df.groupBy(*by_cols).agg(*sketch), by_cols, "inner")
 
     structs: list[Column] = []
     for f in fields:
         name = f.name
-        if fast:
-            nd = F.lit(None).cast("long")
-            med = F.lit(None).cast("double")
-        else:
+        if approx and not fast:
             # R n_distinct counts NA as one distinct value (R/describe.R:112)
             nd = (F.col(f"nd__{name}") + (F.col(f"na__{name}") > 0).cast("long")).cast("long")
-            if approx:
-                med = F.when(
-                    F.col(f"nnan__{name}") > 0,
-                    F.kll_sketch_get_quantile_double(F.col(f"kll__{name}"), F.lit(0.5)),
-                )
-            else:
-                med = F.col(f"med__{name}").cast("double")
+            med = F.when(
+                F.col(f"nnan__{name}") > 0,
+                F.kll_sketch_get_quantile_double(F.col(f"kll__{name}"), F.lit(0.5)),
+            )
+        else:  # fast leaves them NULL; exact replaces them below
+            nd, med = F.lit(None).cast("long"), F.lit(None).cast("double")
         structs.append(
             F.struct(
                 F.lit(name).alias("var"),
                 F.lit(_friendly_type(f.dataType)).alias("type"),
-                F.col("n__").cast("long").alias("n"),
+                F.col("n__").alias("n"),
+                F.col(f"na__{name}").alias("n_na"),
                 nd.alias("n_distinct"),
-                F.col(f"na__{name}").cast("long").alias("n_na"),
-                F.col(f"min__{name}").cast("double").alias("min"),
-                F.col(f"mean__{name}").cast("double").alias("mean"),
                 med.alias("median"),
-                F.col(f"max__{name}").cast("double").alias("max"),
-                F.col(f"sd__{name}").cast("double").alias("sd"),
+                *[F.col(f"{s}__{name}").alias(s) for s in ("min", "mean", "max", "sd")],
             )
         )
     out = stats.select(
         *[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("__s")
     ).select(*by_cols, "__s.*")
-    if top_n > 0 and not fast:
-        mf = _most_frequent_by(df, by_cols, fields, top_n, digits, skip_ones)
-        # null-safe equi-join so NULL group keys keep their top-k; mf has at
-        # most one row per (group, var), so this is a 1:1 key join of two
-        # already-aggregated (small) sides — AQE broadcasts it when tiny
-        cond = F.lit(True)
-        for c in by_cols + ["var"]:
-            cond = cond & out[c].eqNullSafe(mf[c])
-        joined = out.join(mf, cond, "left").drop(*[mf[c] for c in by_cols + ["var"]])
-        mf_col = F.when(
-            F.col("n_distinct") <= 1, F.lit("")  # per-slice suppression
-        ).otherwise(F.coalesce(F.col("most_frequent"), F.lit("")))
-        out = joined.withColumn("most_frequent", mf_col).select(*by_cols, *DESCRIBE_SCHEMA.names)
-    return out
+    keys = by_cols + ["var"]
+    counts = _value_counts(df, by_cols, fields)  # lazy: runs only where read
+    if not fast and not approx:
+        exact = counts.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n_distinct"),
+            F.percentile("__val", F.lit(0.5), F.col("__c")).alias("median"),
+        )
+        out = _join_on(out.drop("n_distinct", "median"), exact, keys, "left")
+        # a zero-row describe() has no value rows: 0 distinct values
+        out = out.withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0).cast("long")))
+    if not fast and top_n > 0:
+        mf = _most_frequent_by(counts, by_cols, fields, top_n, digits, skip_ones)
+        # per-slice suppression: a slice with ≤1 distinct value shows ""
+        mf_col = F.coalesce(F.when(F.col("n_distinct") > 1, F.col("most_frequent")), F.lit(""))
+        out = _join_on(out, mf, keys, "left").withColumn("most_frequent", mf_col)
+    return out.select(*by_cols, *[c for c in DESCRIBE_SCHEMA.names if c in out.columns])
+
+
+def _join_on(left: DataFrame, right: DataFrame, keys: list[str], how: str) -> DataFrame:
+    """Null-safe equi-join of two aggregates on ``keys`` (NULL group keys
+    keep their row; no keys is a 1×1 cross join), dropping the right side's
+    keys.  Both sides descend from one frame and share the keys' attribute
+    ids, so the right keys are re-aliased first — dropping them by
+    reference would otherwise be ambiguous.  Each side has at most one row
+    per key, so this is a 1:1 join of two small sides that AQE broadcasts."""
+    alias = {}
+    for k in keys:  # collision-proof internal join-key aliases
+        a = f"__k_{k}"
+        while a in left.columns or a in right.columns:
+            a = "_" + a
+        alias[k] = a
+    right = right.withColumnsRenamed(alias)
+    cond = F.lit(True)
+    for k, a in alias.items():
+        cond = cond & left[k].eqNullSafe(right[a])
+    return left.join(right, cond, how).drop(*alias.values())
 
 
 def describe(
@@ -243,24 +234,22 @@ def describe(
     """Profile every column of ``df``: the key-less :func:`describe_by`,
     collected in column order into a local result frame.
 
-    The profile aggregate, the unpivot and the one all-columns top-k pass
-    run as a single collected plan, so the number of Spark jobs is the same
-    for 2 columns as for 200 (tests/test_describe.py pins this budget in
-    exact and approx mode).  ``most_frequent`` is ``"v (c), v2 (c2)"``
+    The profile aggregate, the unpivot and the one all-columns value-count
+    frame run as a single collected plan, so the number of Spark jobs is the
+    same for 2 columns as for 200 (tests/test_describe.py pins this budget
+    in exact and approx mode).  ``most_frequent`` is ``"v (c), v2 (c2)"``
     (R/describe.R:75-93): top ``top_n`` by count, ties broken on the typed
     value (numeric columns numerically), NA last; numbers rounded to
     ``digits`` and integral values shown bare; ``skip_ones`` then drops
     count==1 entries.  It is NULL under ``fast`` and ``""`` for ``top_n=0``
     or a column with ≤1 distinct value.
 
-    COST WARNING — exact mode (``approx=False``, the default) packs K
-    ``count_distinct`` + K exact ``percentile`` aggregates into one
-    aggregate: Spark plans multiple distinct aggregates through an Expand
-    node that REPLICATES every scanned row once per distinct aggregate
-    (scan rows × K), and exact percentile buffers each column's values.
-    That is the small-scale reference-parity path only — for profiles
-    beyond ~10⁷ rows use ``approx=True`` (HLL distinct + KLL median), whose
-    aggregates plan with no Expand and which is the 100 TB path.
+    Cost: exact mode (``approx=False``, the default) shuffles one row per
+    distinct (group, column, value) — the same shuffle as the top-k — and
+    its median buffers each column's distinct values.  High-cardinality
+    columns make that frame as large as the input, so for profiles beyond
+    ~10⁷ rows use ``approx=True`` (HLL distinct + KLL median), whose
+    sketches take no shuffle of values and which is the 100 TB path.
     """
     fields = list(df.schema.fields)
     got = {}
@@ -290,21 +279,20 @@ def describe_by(
     skip_ones: bool = True,
 ) -> DataFrame:
     """Per-group ``describe`` — the north_rule per-partition shape applied to
-    profiling (the check analog is ``check_data_by``).  ONE
-    ``groupBy(by).agg(*fused stats)`` computes every non-key column's
-    statistics for every group, then an in-plan explode unpivots to one row
-    per (group, column) — fully distributed, no driver-side loop over groups,
-    so a 10^6-partition profile is still a single shuffle.
+    profiling (the check analog is ``check_data_by``).  Grouped aggregates
+    compute every non-key column's statistics for every group, and in-plan
+    explodes unpivot to one row per (group, column) — fully distributed, no
+    driver-side loop over groups, so a 10^6-partition profile runs the same
+    jobs as a 2-partition one.
 
     Columns: ``by...`` + ``var, type, n, n_distinct, n_na, min, mean,
     median, max, sd``.  With ``top_n > 0`` (and not ``fast``), a
-    ``most_frequent`` column is added after ``n_na`` — computed by ONE keyed
-    top-k pass (:func:`_most_frequent_by`) joined back on (by, var); the
-    default ``top_n=0`` keeps the single-aggregate plan and schema.  Slices
-    with ≤1 distinct value are suppressed to ``""`` exactly like
-    :func:`describe` (R/describe.R:75-93 applied per slice).  Value
-    semantics are those of :func:`describe`, which is this function with no
-    keys (both run :func:`_profile`).
+    ``most_frequent`` column is added after ``n_na`` — the keyed top-k
+    (:func:`_most_frequent_by`) joined back on (by, var).  Slices with ≤1
+    distinct value are suppressed to ``""`` exactly like :func:`describe`
+    (R/describe.R:75-93 applied per slice).  Value semantics and cost are
+    those of :func:`describe`, which is this function with no keys (both
+    run :func:`_profile`).
     """
     by_cols = [by] if isinstance(by, str) else list(by)
     for c in by_cols:
@@ -314,16 +302,40 @@ def describe_by(
     return _profile(df, by_cols, fields, fast, approx, top_n, digits, skip_ones)
 
 
+def _value_counts(df: DataFrame, by_cols: list[str], fields: list[T.StructField]) -> DataFrame:
+    """The one value-count frame: ONE explode of per-column structs →
+    ``groupBy(by..., var, __v, __val)`` → ``(by..., var, __v, __val, __c)``,
+    one row per distinct (group, column, value) with its count ``__c``.
+    ``__v`` is the top-k's string view (:func:`_mf_value_str`), ``__val``
+    the numeric view (:func:`_value_expr`) that the median and the numeric
+    tie-break read; NULL is one row with both NULL.  Dunder names keep group
+    keys such as ``v`` or ``c`` from colliding with them."""
+    structs = [
+        F.struct(
+            F.lit(f.name).alias("var"),
+            _mf_value_str(f).alias("__v"),
+            _value_expr(f.name, f.dataType).alias("__val"),
+        )
+        for f in fields
+    ]
+    return (
+        df.select(*[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("__p"))
+        .select(*by_cols, "__p.*")
+        .groupBy(*by_cols, "var", "__v", "__val")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+
+
 def _most_frequent_by(
-    df: DataFrame,
+    counts: DataFrame,
     by_cols: list[str],
     fields: list[T.StructField],
     top_n: int,
     digits: int,
     skip_ones: bool,
 ) -> DataFrame:
-    """The one top-k, fully IN-PLAN (no collect): ONE explode → ``groupBy(by,
-    var, v)`` count → window top-n per (group, var) →
+    """The one top-k, fully IN-PLAN (no collect), over the value-count frame
+    (:func:`_value_counts`): window top-n per (group, var) →
     ``collect_list``/``array_sort``/``filter``/``transform`` assembles the
     ``"v (c), v2 (c2)"`` string per slice with pure Catalyst expressions.
     Returns ``(by..., var, most_frequent)`` — one row per (group, column)
@@ -339,55 +351,43 @@ def _most_frequent_by(
     """
     from pyspark.sql.window import Window
 
-    structs = [
-        F.struct(F.lit(f.name).alias("var"), _mf_value_str(f).alias("v"))
-        for f in fields
-    ]
-    pairs = df.select(
-        *[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("p")
-    ).select(*by_cols, "p.var", "p.v")
-    counts = pairs.groupBy(*by_cols, "var", "v").agg(F.count(F.lit(1)).alias("c"))
-
     numeric_vars = sorted(f.name for f in fields if isinstance(f.dataType, _NUMERIC))
-    num_key = F.when(F.col("var").isin(numeric_vars), F.col("v").try_cast("double"))
+    v, c = F.col("__v"), F.col("__c")
+    num_key = F.when(F.col("var").isin(numeric_vars), F.col("__val"))
     w = Window.partitionBy(*by_cols, "var").orderBy(
-        F.desc("c"), F.asc_nulls_last(num_key), F.asc_nulls_last("v")
+        c.desc(), F.asc_nulls_last(num_key), v.asc_nulls_last()
     )
-    d = F.round(F.col("v").try_cast("double"), digits)
+    d = F.round(v.try_cast("double"), digits)
     disp_num = F.when(d % 1 == 0, F.format_string("%.0f", d)).otherwise(d.cast("string"))
-    disp = F.when(F.col("v").isNull(), F.lit("NA")).otherwise(
-        F.when(F.col("var").isin(numeric_vars), disp_num).otherwise(F.col("v"))
+    disp = F.when(v.isNull(), F.lit("NA")).otherwise(
+        F.when(F.col("var").isin(numeric_vars), disp_num).otherwise(v)
     )
     ranked = (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= top_n)
-        .select(*by_cols, "var", F.struct("rn", "c", disp.alias("disp")).alias("e"))
+        .select(*by_cols, "var", F.struct("rn", c.alias("c"), disp.alias("disp")).alias("e"))
     )
     arr = F.array_sort(F.collect_list("e"))  # sorts by rn (first struct field)
     if skip_ones:
         # R semantics (R/describe.R:87-93): rank FIRST, then drop count==1 —
         # no backfill from below the top-n cut
         arr = F.filter(arr, lambda s: s["c"] > F.lit(1))
-    mf = F.array_join(
-        F.transform(
-            arr,
-            lambda s: F.concat(s["disp"], F.lit(" ("), s["c"].cast("string"), F.lit(")")),
-        ),
-        ", ",
-    )
-    return ranked.groupBy(*by_cols, "var").agg(mf.alias("most_frequent"))
+    entries = F.transform(arr, lambda s: F.format_string("%s (%d)", s["disp"], s["c"]))
+    return ranked.groupBy(*by_cols, "var").agg(F.array_join(entries, ", ").alias("most_frequent"))
 
 
 def _mf_value_str(f: T.StructField) -> Column:
-    """String view of a column for top-k counting: booleans render TRUE/FALSE
+    """String view of a column for value counting: booleans render TRUE/FALSE
     (the R format, R/describe.R:75-85), everything else casts; NULL stays
     NULL (displayed as NA downstream)."""
     c = F.col(f.name)
-    if isinstance(f.dataType, T.BooleanType):
-        # NULL must stay NULL (otherwise() would swallow it into FALSE)
-        return F.when(c.isNull(), F.lit(None).cast("string")).when(
-            c, F.lit("TRUE")
-        ).otherwise(F.lit("FALSE"))
+    if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+        # -0.0 and 0.0 are one value (as Spark grouping, DuckDB and R count
+        # them) but cast to two strings; the zero keeps the column's own
+        # type, since a float cast through double changes its string form
+        c = F.when(c == 0, F.lit(0.0).cast(f.dataType)).otherwise(c)
+    if isinstance(f.dataType, T.BooleanType):  # NULL matches neither: stays NULL
+        return F.when(c, F.lit("TRUE")).when(~c, F.lit("FALSE"))
     return c.cast("string")
 
 

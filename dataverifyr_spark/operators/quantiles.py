@@ -14,14 +14,14 @@ column:
   ``percentile_approx(acc=1000)`` after measuring **10.8 s → ~0.4-1.1 s**
   for 8 columns × 5 probs × 10M rows (Spark dedups the identical sketch
   aggregate across the per-prob extractors, so the sketch builds once).
-  ``sketch="gk"`` keeps the old GK/QuantileSummaries path.
 * ``approx=False``: exact interpolated ``percentile`` (matches ANSI
   ``quantile_cont`` / DuckDB) — buffers each column's values; small-slice /
   oracle-parity use only.
 
-Output is the long shape ``(var, prob, value)`` — one row per
-column × probability — assembled driver-side from the single aggregate row
-(one row regardless of input size, like describe).
+Output is the long shape ``(by..., var, prob, value)`` — one row per
+group × column × probability, unpivoted in-plan by an explode.
+:func:`column_quantiles` is the key-less :func:`column_quantiles_by`,
+collected into a local result frame (the describe/describe_by shape).
 
 Reference analog: none (R describe stops at the median, R/describe.R:120);
 this is a graft extension in the reference's batched-collectibles style
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..check import _local_result_df
+from ..describe import _NUMERIC
 
 __all__ = ["column_quantiles", "column_quantiles_by", "QUANTILE_SCHEMA"]
 
@@ -49,9 +50,9 @@ QUANTILE_SCHEMA = T.StructType(
 DEFAULT_PROBS = (0.01, 0.25, 0.5, 0.75, 0.99)
 
 
-def _quantile_agg(v, probs, approx: bool, accuracy: int, sketch: str):
+def _quantile_agg(v, probs, approx: bool, accuracy: int):
     """ONE aggregate expression returning array<double> of the requested
-    quantiles.  KLL (default approx sketch): the identical
+    quantiles.  KLL (the approx sketch): the identical
     ``kll_sketch_agg_double`` child is deduplicated by Spark across the
     per-prob extractors, so the sketch builds once per column; the guard
     counts NON-NaN values — the KLL sketch silently ignores NaN updates,
@@ -61,10 +62,6 @@ def _quantile_agg(v, probs, approx: bool, accuracy: int, sketch: str):
     prob_arr = F.array(*[F.lit(float(p)) for p in probs])
     if not approx:
         return F.percentile(v, prob_arr)
-    if sketch == "gk":
-        return F.percentile_approx(v, prob_arr, accuracy)
-    if sketch != "kll":
-        raise ValueError(f"unknown sketch {sketch!r} (use 'kll' or 'gk')")
     k = max(8, min(int(accuracy), 65535))
     sk = F.kll_sketch_agg_double(v, F.lit(k))
     arr = F.array(*[F.kll_sketch_get_quantile_double(sk, F.lit(float(p))) for p in probs])
@@ -77,39 +74,14 @@ def column_quantiles(
     probs: tuple[float, ...] = DEFAULT_PROBS,
     approx: bool = True,
     accuracy: int = 1000,
-    sketch: str = "kll",
 ) -> DataFrame:
     """(var, prob, value) rows for every requested column × probability,
-    from ONE aggregation scan.  ``cols=None`` profiles every numeric column.
-    NULLs are ignored per quantile semantics; an all-NULL column yields NULL
-    values."""
-    if not probs or any(not (0.0 <= p <= 1.0) for p in probs):
-        raise ValueError("probs must be fractions in [0, 1]")
-    numeric = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DecimalType,
-    )
-    if cols is None:
-        cols = [f.name for f in df.schema.fields if isinstance(f.dataType, numeric)]
-    if not cols:
-        raise ValueError("no numeric columns to profile")
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"column(s) {missing} not in DataFrame")
-
-    aggs = [
-        _quantile_agg(F.col(c).cast("double"), probs, approx, accuracy, sketch).alias(f"q__{c}")
-        for c in cols
-    ]
-    row = df.agg(*aggs).collect()[0]
-
-    out = []
-    for c in cols:
-        vals = row[f"q__{c}"]
-        for i, p in enumerate(probs):
-            v = None if vals is None else vals[i]
-            out.append((c, float(p), float(v) if v is not None else None))
-    return _local_result_df(df.sparkSession, out, QUANTILE_SCHEMA)
+    from ONE aggregation scan: the key-less :func:`column_quantiles_by`,
+    collected into a local result frame.  ``cols=None`` profiles every
+    numeric column.  NULLs are ignored per quantile semantics; an all-NULL
+    column yields NULL values."""
+    rows = column_quantiles_by(df, [], cols, probs, approx, accuracy).collect()
+    return _local_result_df(df.sparkSession, [tuple(r) for r in rows], QUANTILE_SCHEMA)
 
 
 def column_quantiles_by(
@@ -119,7 +91,6 @@ def column_quantiles_by(
     probs: tuple[float, ...] = DEFAULT_PROBS,
     approx: bool = True,
     accuracy: int = 1000,
-    sketch: str = "kll",
 ) -> DataFrame:
     """Per-group quantile profiles — ``(by..., var, prob, value)`` rows from
     ONE ``groupBy(by).agg`` job (the :func:`column_quantiles` analog of
@@ -133,15 +104,11 @@ def column_quantiles_by(
             raise ValueError(f"by column {c!r} not in DataFrame")
     if not probs or any(not (0.0 <= p <= 1.0) for p in probs):
         raise ValueError("probs must be fractions in [0, 1]")
-    numeric = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.FloatType, T.DoubleType, T.DecimalType,
-    )
     if cols is None:
         cols = [
             f.name
             for f in df.schema.fields
-            if isinstance(f.dataType, numeric) and f.name not in by_cols
+            if isinstance(f.dataType, _NUMERIC) and f.name not in by_cols
         ]
     if not cols:
         raise ValueError("no numeric columns to profile")
@@ -150,7 +117,7 @@ def column_quantiles_by(
         raise ValueError(f"column(s) {missing} not in DataFrame")
 
     aggs = [
-        _quantile_agg(F.col(c).cast("double"), probs, approx, accuracy, sketch).alias(f"q__{c}")
+        _quantile_agg(F.col(c).cast("double"), probs, approx, accuracy).alias(f"q__{c}")
         for c in cols
     ]
     grouped = df.groupBy(*[F.col(c) for c in by_cols]).agg(*aggs)

@@ -59,3 +59,22 @@ def no_runtime_broadcast(spark):
         spark.conf.unset(key)
     else:
         spark.conf.set(key, old)
+
+
+@pytest.fixture()
+def collected_plans(spark, monkeypatch):
+    """Physical plans of the frames ``collect()``-ed while the test runs: the
+    plans a surface that returns a local result frame actually executed
+    (AQE's final plan; the initial plan it also prints is cut off)."""
+    plans: list[str] = []
+    cls = type(spark.range(1))
+    collect = cls.collect
+
+    def recording(self):
+        rows = collect(self)
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        plans.append(plan.split("== Initial Plan ==")[0])
+        return rows
+
+    monkeypatch.setattr(cls, "collect", recording)
+    return plans

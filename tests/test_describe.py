@@ -9,6 +9,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+import dataverifyr_spark as dv
 from dataverifyr_spark import describe
 
 
@@ -252,20 +253,24 @@ class TestDescribeBy:
                         assert a == b, (g, var, c)
         assert len(got) == 2 * 3  # 2 groups x 3 non-key columns
 
-    def test_single_job_no_driver_loop(self, spark, df):
-        """The plan is ONE grouped aggregate + explode; adding groups adds no
+    def test_single_job_no_driver_loop(self, spark, job_ids, no_runtime_broadcast):
+        """The plan is grouped aggregates + explode; adding groups adds no
         jobs (the per-group describe() loop would run K jobs)."""
-        import contextlib
-        import io
-
         from dataverifyr_spark import describe_by
 
-        plan_df = describe_by(df, by="g")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            plan_df.explain(True)
-        phys = buf.getvalue().split("== Physical Plan ==")[-1]
-        assert phys.count("HashAggregate") <= 4  # partial+final (+percentile pair)
+        def frame(groups):
+            return spark.range(0, 240).select(
+                (F.col("id") % groups).alias("g"),
+                (F.col("id") % 7).cast("double").alias("x"),
+                (F.col("id") % 5).cast("string").alias("s"),
+            )
+
+        for top_n in (0, 3):
+            two, twelve = (
+                len(job_ids(lambda: describe_by(frame(k), by="g", top_n=top_n).collect()))
+                for k in (2, 12)
+            )
+            assert two > 0 and two == twelve, (top_n, two, twelve)
 
     def test_approx_plans_no_expand(self, spark, df):
         """describe_by(approx=True) is the at-scale per-partition profile:
@@ -330,6 +335,94 @@ class TestDescribeBy:
         assert {r["n"] for r in res} == {2, 3}
         with pytest.raises(ValueError, match="not in DataFrame"):
             describe_by(df, by="nope")
+
+
+def _stats_frame(spark):
+    rows = [
+        ("p", 1.0, "a"),
+        ("p", 1.0, "a"),
+        ("p", float("nan"), None),
+        ("p", float("nan"), "bb"),
+        ("p", None, "bb"),
+        ("p", 4.0, "a"),
+        ("q", None, None),
+        ("q", None, None),
+        ("q", 2.0, "cc"),
+        (None, 3.0, "z"),
+        (None, 3.0, "z"),
+    ]
+    return spark.createDataFrame(rows, "g string, x double, s string")
+
+
+class TestExactValueCounts:
+    """Exact n_distinct, median and most_frequent come from one value-count
+    frame: NA counts as a value, NaN sorts above every number, the median is
+    over the raw rows, and the plan replicates no row (no Expand)."""
+
+    def test_describe_hand_computed(self, spark):
+        got = _by_var(describe(_stats_frame(spark)))
+        # x: 1,1,2,3,3,4,NaN,NaN (+3 NA) -> {1,2,3,4,NaN,NA}; median of 8 = 3
+        assert (got["x"]["n_distinct"], got["x"]["median"]) == (6, 3.0)
+        # s lengths: 1,1,1,1,1,2,2,2 (+3 NA) -> {a,bb,cc,z,NA}; median 1
+        assert (got["s"]["n_distinct"], got["s"]["median"]) == (5, 1.0)
+        # g: {p,q,NA}; a string column's median is over its lengths
+        assert (got["g"]["n_distinct"], got["g"]["median"]) == (3, 1.0)
+
+    def test_describe_by_hand_computed(self, spark):
+        from dataverifyr_spark import describe_by
+
+        got = {
+            (r["g"], r["var"]): (r["n_distinct"], r["median"])
+            for r in describe_by(_stats_frame(spark), by="g").collect()
+        }
+        assert got == {
+            ("p", "x"): (4, 4.0),  # 1,1,4,NaN,NaN + NA
+            ("p", "s"): (3, 1.0),  # lengths 1,1,1,2,2 + NA
+            ("q", "x"): (2, 2.0),
+            ("q", "s"): (2, 2.0),
+            (None, "x"): (1, 3.0),
+            (None, "s"): (1, 1.0),
+        }
+
+    def test_signed_zero_is_one_value(self, spark):
+        from dataverifyr_spark import describe_by
+
+        vals = [0.0, -0.0, -0.0, 1.0, None]
+        df = spark.createDataFrame([(v, v) for v in vals], "d double, f float")
+        for r in describe(df).collect():
+            # three zeros; 0, 1 and NA are the distinct values
+            assert (r["most_frequent"], r["n_distinct"]) == ("0 (3)", 3), r
+        keyed = spark.createDataFrame(
+            [("a", v) for v in vals] + [("b", -0.0), ("b", 0.0)], "k string, d double"
+        )
+        got = {
+            r["k"]: (r["most_frequent"], r["n_distinct"])
+            for r in describe_by(keyed, by="k", top_n=3).collect()
+        }
+        assert got == {"a": ("0 (3)", 3), "b": ("", 1)}
+
+    def test_group_keys_named_like_frame_columns(self, spark):
+        from dataverifyr_spark import describe_by
+
+        d = spark.createDataFrame(
+            [(1, 2, 3.0), (1, 2, 3.0), (1, 5, 4.0), (1, 5, 6.0)], "v int, c int, val double"
+        )
+        got = {
+            (r["v"], r["c"]): (r["n_distinct"], r["median"], r["most_frequent"])
+            for r in describe_by(d, by=["v", "c"], top_n=2).collect()
+        }
+        assert got == {(1, 2): (1, 3.0, ""), (1, 5): (2, 5.0, "")}
+
+    def test_exact_plans_no_expand(self, spark, collected_plans):
+        from dataverifyr_spark import describe_by
+
+        df = _stats_frame(spark)
+        describe(df)
+        describe_by(df, by="g", top_n=3).collect()
+        describe_by(df, by="g").collect()
+        assert len(collected_plans) == 3
+        for plan in collected_plans:
+            assert "Expand" not in plan, plan
 
 
 class TestApproxPlanShape:
@@ -437,3 +530,80 @@ class TestDescribeByFile:
         df = spark.createDataFrame([(1,)], "id int")
         with _pytest.raises(ValueError, match="file-backed"):
             describe_by_file(df)
+
+
+class TestDescribeSplitParity:
+    def test_approx_declarative_stats_equal_exact(self, spark):
+        """The split must keep every declarative statistic bit-equal to the
+        exact path, and n_distinct's NA-as-distinct uplift must survive the
+        derived (na>0) anynull."""
+        df = spark.createDataFrame(
+            [(1.0, "a"), (2.0, "b"), (None, "b"), (4.0, None)], "x double, s string"
+        )
+        exact = {r["var"]: r for r in dv.describe(df, top_n=0).collect()}
+        approx = {r["var"]: r for r in dv.describe(df, top_n=0, approx=True).collect()}
+        for var in ("x", "s"):
+            for fld in ("n", "n_na", "min", "mean", "max", "sd"):
+                assert approx[var][fld] == exact[var][fld], (var, fld)
+        # x: 3 distinct non-null + 1 NULL => 4 (NA counts as distinct)
+        assert approx["x"]["n_distinct"] == exact["x"]["n_distinct"] == 4
+        assert approx["s"]["n_distinct"] == exact["s"]["n_distinct"] == 3
+
+    def test_describe_by_split_group_parity(self, spark):
+        df = spark.createDataFrame(
+            [("g1", 1.0), ("g1", 3.0), ("g2", None), (None, 5.0)], "g string, x double"
+        )
+        rows = dv.describe_by(df, by="g", approx=True).collect()
+        got = {r["g"]: r for r in rows}
+        # NULL group keys must survive the null-safe split join
+        assert set(got) == {"g1", "g2", None}
+        assert got["g1"]["n"] == 2 and got["g1"]["mean"] == 2.0
+        assert got["g2"]["n_na"] == 1 and got["g2"]["n_distinct"] == 1  # NA only
+        assert got[None]["min"] == 5.0
+
+
+class TestKllMedianGuards:
+    def test_describe_by_group_with_all_null_column(self, spark):
+        """r6: a GROUP whose column is entirely NULL must profile to a NULL
+        median (empty per-group KLL buffer raises without the count guard)."""
+        import dataverifyr_spark as dv
+
+        df = spark.createDataFrame(
+            [("a", 1.0), ("a", 2.0), ("b", None), ("b", None)], "g string, x double"
+        )
+        out = {r["g"]: r for r in dv.describe_by(df, by="g", approx=True).filter("var = 'x'").collect()}
+        assert out["b"]["median"] is None and out["b"]["n_na"] == 2
+        assert out["a"]["median"] is not None
+
+    def test_describe_all_null_column(self, spark):
+        import dataverifyr_spark as dv
+
+        df = spark.createDataFrame([(None,), (None,)], "x double")
+        row = dv.describe(df, top_n=0, approx=True).collect()[0]
+        assert row["median"] is None and row["n_na"] == 2
+
+
+class TestKllNanGuards:
+    """r6 review finding (CONFIRMED crash): the KLL sketch silently ignores
+    NaN updates, so an all-NaN column/group passed count()>0 but left an
+    empty buffer that kll_sketch_get_quantile raised on."""
+
+    def test_describe_all_nan_column(self, spark):
+        import dataverifyr_spark as dv
+
+        df = spark.createDataFrame(
+            [(float("nan"),), (float("nan"),), (None,)], "x double"
+        )
+        row = dv.describe(df, top_n=0, approx=True).collect()[0]
+        assert row["median"] is None  # no crash, NULL median
+
+    def test_describe_by_all_nan_group(self, spark):
+        import dataverifyr_spark as dv
+
+        df = spark.createDataFrame(
+            [("a", 1.0), ("a", 2.0), ("b", float("nan")), ("b", float("nan"))],
+            "g string, x double",
+        )
+        out = {r["g"]: r for r in dv.describe_by(df, by="g", approx=True).filter("var = 'x'").collect()}
+        assert out["b"]["median"] is None
+        assert out["a"]["median"] is not None

@@ -1497,7 +1497,7 @@ class TestColumnQuantiles:
 
     def test_kll_null_guard_and_gk_fallback(self, spark):
         """r6: the KLL arm must yield NULLs (not raise) for an all-NULL
-        column, and sketch='gk' must keep the old percentile_approx path."""
+        column."""
         from dataverifyr_spark.operators.quantiles import column_quantiles
 
         df = spark.createDataFrame(
@@ -1507,10 +1507,6 @@ class TestColumnQuantiles:
         vals = {r["var"]: r["value"] for r in rows}
         assert vals["y"] is None
         assert abs(vals["x"] - 49.5) <= 2
-        gk = column_quantiles(df, ["x", "y"], probs=(0.5,), approx=True, sketch="gk").collect()
-        assert {r["var"]: r["value"] for r in gk}["y"] is None
-        with pytest.raises(ValueError, match="unknown sketch"):
-            column_quantiles(df, ["x"], approx=True, sketch="tdigest")
 
     def test_defaults_all_numeric_and_validation(self, spark):
         from dataverifyr_spark.operators.quantiles import column_quantiles
@@ -1529,27 +1525,33 @@ class TestColumnQuantiles:
         nul = spark.createDataFrame([(None,), (None,)], "x double")
         assert all(r["value"] is None for r in column_quantiles(nul, ["x"]).collect())
 
-    def test_approx_plan_one_agg_no_expand(self, spark):
-        import contextlib
-        import io
-
+    def test_approx_plan_one_agg_no_expand(self, spark, collected_plans):
         from dataverifyr_spark.operators.quantiles import column_quantiles
 
         df = spark.range(0, 100).selectExpr(
             "CAST(id AS DOUBLE) AS a", "CAST(id % 7 AS DOUBLE) AS b"
         )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.agg(
-                *[
-                    __import__("pyspark.sql.functions", fromlist=["F"]).percentile_approx(
-                        c, [0.25, 0.5], 1000
-                    ).alias(c)
-                    for c in ("a", "b")
-                ]
-            ).explain(True)
-        phys = buf.getvalue().split("== Physical Plan ==")[-1]
+        column_quantiles(df, approx=True)
+        assert len(collected_plans) == 1
+        phys = collected_plans[0]
         assert "Expand" not in phys and phys.count("Exchange") <= 1, phys
+
+    def test_column_quantiles_all_nan(self, spark):
+        from dataverifyr_spark.operators.quantiles import (
+            column_quantiles,
+            column_quantiles_by,
+        )
+
+        df = spark.createDataFrame(
+            [("a", 1.0, float("nan")), ("a", 2.0, float("nan")), ("b", float("nan"), float("nan"))],
+            "g string, x double, y double",
+        )
+        rows = column_quantiles(df, ["x", "y"], probs=(0.5,)).collect()
+        vals = {r["var"]: r["value"] for r in rows}
+        assert vals["y"] is None and vals["x"] is not None
+        grows = column_quantiles_by(df, by="g", cols=["x"], probs=(0.5,)).collect()
+        gvals = {r["g"]: r["value"] for r in grows}
+        assert gvals["b"] is None and gvals["a"] is not None
 
 
 class TestColumnQuantilesBy:

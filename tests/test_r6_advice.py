@@ -89,70 +89,6 @@ class TestPipelineStatsThreading:
         assert stats["converged"] is True
 
 
-class TestKllMedianGuards:
-    def test_describe_by_group_with_all_null_column(self, spark):
-        """r6: a GROUP whose column is entirely NULL must profile to a NULL
-        median (empty per-group KLL buffer raises without the count guard)."""
-        import dataverifyr_spark as dv
-
-        df = spark.createDataFrame(
-            [("a", 1.0), ("a", 2.0), ("b", None), ("b", None)], "g string, x double"
-        )
-        out = {r["g"]: r for r in dv.describe_by(df, by="g", approx=True).filter("var = 'x'").collect()}
-        assert out["b"]["median"] is None and out["b"]["n_na"] == 2
-        assert out["a"]["median"] is not None
-
-    def test_describe_all_null_column(self, spark):
-        import dataverifyr_spark as dv
-
-        df = spark.createDataFrame([(None,), (None,)], "x double")
-        row = dv.describe(df, top_n=0, approx=True).collect()[0]
-        assert row["median"] is None and row["n_na"] == 2
-
-
-class TestKllNanGuards:
-    """r6 review finding (CONFIRMED crash): the KLL sketch silently ignores
-    NaN updates, so an all-NaN column/group passed count()>0 but left an
-    empty buffer that kll_sketch_get_quantile raised on."""
-
-    def test_describe_all_nan_column(self, spark):
-        import dataverifyr_spark as dv
-
-        df = spark.createDataFrame(
-            [(float("nan"),), (float("nan"),), (None,)], "x double"
-        )
-        row = dv.describe(df, top_n=0, approx=True).collect()[0]
-        assert row["median"] is None  # no crash, NULL median
-
-    def test_describe_by_all_nan_group(self, spark):
-        import dataverifyr_spark as dv
-
-        df = spark.createDataFrame(
-            [("a", 1.0), ("a", 2.0), ("b", float("nan")), ("b", float("nan"))],
-            "g string, x double",
-        )
-        out = {r["g"]: r for r in dv.describe_by(df, by="g", approx=True).filter("var = 'x'").collect()}
-        assert out["b"]["median"] is None
-        assert out["a"]["median"] is not None
-
-    def test_column_quantiles_all_nan(self, spark):
-        from dataverifyr_spark.operators.quantiles import (
-            column_quantiles,
-            column_quantiles_by,
-        )
-
-        df = spark.createDataFrame(
-            [("a", 1.0, float("nan")), ("a", 2.0, float("nan")), ("b", float("nan"), float("nan"))],
-            "g string, x double, y double",
-        )
-        rows = column_quantiles(df, ["x", "y"], probs=(0.5,)).collect()
-        vals = {r["var"]: r["value"] for r in rows}
-        assert vals["y"] is None and vals["x"] is not None
-        grows = column_quantiles_by(df, by="g", cols=["x"], probs=(0.5,)).collect()
-        gvals = {r["g"]: r["value"] for r in grows}
-        assert gvals["b"] is None and gvals["a"] is not None
-
-
 class TestWatermarkStateRecovery:
     """r6 review finding: the narrowed watermark-state except must treat
     an existing-but-empty state dir (crash mid-first-write) as first batch,

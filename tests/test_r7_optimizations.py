@@ -4,8 +4,8 @@
 Each test pins the CONTRACT the optimization must preserve, not the
 implementation: banded-LSH single-materialization, CC fused-init round
 semantics on empty input, reference pre-aggregation count equivalence under
-every flag combination, the approx-describe declarative/sketch split's value
-parity, and the two new guard paths."""
+every flag combination, and the two new guard paths.  (The approx-describe
+split's value parity lives in tests/test_describe.py.)"""
 
 import pytest
 from pyspark.sql import functions as F
@@ -149,36 +149,6 @@ class TestReferencePreAggregation:
         got = {r["grp"]: (r["tests"], r["pass"]) for r in out}
         # grp 1: two 1s (hits) + value 7 (miss); grp 0: value 2; grp 9: NULLs
         assert got == {1: (3, 2), 0: (1, 0), 9: (2, 0)}
-
-
-class TestDescribeSplitParity:
-    def test_approx_declarative_stats_equal_exact(self, spark):
-        """The split must keep every declarative statistic bit-equal to the
-        exact path, and n_distinct's NA-as-distinct uplift must survive the
-        derived (na>0) anynull."""
-        df = spark.createDataFrame(
-            [(1.0, "a"), (2.0, "b"), (None, "b"), (4.0, None)], "x double, s string"
-        )
-        exact = {r["var"]: r for r in dv.describe(df, top_n=0).collect()}
-        approx = {r["var"]: r for r in dv.describe(df, top_n=0, approx=True).collect()}
-        for var in ("x", "s"):
-            for fld in ("n", "n_na", "min", "mean", "max", "sd"):
-                assert approx[var][fld] == exact[var][fld], (var, fld)
-        # x: 3 distinct non-null + 1 NULL => 4 (NA counts as distinct)
-        assert approx["x"]["n_distinct"] == exact["x"]["n_distinct"] == 4
-        assert approx["s"]["n_distinct"] == exact["s"]["n_distinct"] == 3
-
-    def test_describe_by_split_group_parity(self, spark):
-        df = spark.createDataFrame(
-            [("g1", 1.0), ("g1", 3.0), ("g2", None), (None, 5.0)], "g string, x double"
-        )
-        rows = dv.describe_by(df, by="g", approx=True).collect()
-        got = {r["g"]: r for r in rows}
-        # NULL group keys must survive the null-safe split join
-        assert set(got) == {"g1", "g2", None}
-        assert got["g1"]["n"] == 2 and got["g1"]["mean"] == 2.0
-        assert got["g2"]["n_na"] == 1 and got["g2"]["n_distinct"] == 1  # NA only
-        assert got[None]["min"] == 5.0
 
 
 class TestAdviceGuards:
