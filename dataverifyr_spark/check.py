@@ -24,7 +24,7 @@ Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
   broadcast-hash when the distinct ref side is small; see
   ``_reference_counts``) — never a collected ``isin`` list, which would cap
   ref size at driver memory.  Uniqueness rules evaluate as one key-only
-  groupBy count (``_uniqueness_counts``).
+  groupBy count (``_uniqueness_keys``).
 * ``check_data`` runs ONE Spark action: each reference or uniqueness rule
   is a one-row subtree cross-joined (1×1, no keys) onto the fused
   aggregate, so the scheduler runs their stages side by side.  Rules run
@@ -179,37 +179,12 @@ def _hits(pred: Column, alias: str) -> Column:
     return F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(alias)
 
 
-def _pass_sums(preds: Sequence[Column]) -> list[Column]:
-    """The fused conditional-sum aggregate: ``__tests`` (the row count) plus
-    one ``__p{i}`` sum of rows passing each predicate."""
-    return [F.count(F.lit(1)).alias("__tests")] + [
-        _hits(p, f"__p{i}") for i, p in enumerate(preds)
-    ]
-
-
-def _long_summary(grouped: DataFrame, keys: list, rules: list[Rule]) -> DataFrame:
-    """Unpivot a ``_pass_sums`` aggregate to long form, one row per
-    (group × rule): ``keys…, name, expr, tests, pass, fail``.  An inline
-    array-of-structs — pure Catalyst, no Python in the row path."""
-    structs = [
-        F.struct(
-            F.lit(r.name).alias("name"),
-            F.lit(r.expr).alias("expr"),
-            F.col("__tests").alias("tests"),
-            F.col(f"__p{i}").alias("pass"),
-            (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-        )
-        for i, r in enumerate(rules)
-    ]
-    return grouped.select(*keys, F.inline(F.array(*structs)))
-
-
 def _safe_alias(columns: Sequence[str], base: str) -> str:
     """Internal-alias name guaranteed not to shadow a user column: a
     dataset with a column literally named ``__dvfy_ref_val`` or ``__cnt``
     must not turn a valid reference or uniqueness rule into an
-    AMBIGUOUS_REFERENCE error (used by ``_reference_counts`` and
-    ``_uniqueness_counts``)."""
+    AMBIGUOUS_REFERENCE error (used by ``_reference_counts``,
+    ``_uniqueness_keys`` and the streaming window column)."""
     out = base
     while out in columns:
         out = "_" + out
@@ -405,17 +380,21 @@ def _reference_counts(
     return _sum_counts(joined, by_cols, ok, cnt)
 
 
-def _uniqueness_counts(df: DataFrame, r: UniquenessRule, by_cols: list[str]) -> DataFrame:
-    """``by…, tests, pass`` for one uniqueness rule: ONE key-only
-    ``groupBy(by + keys)`` count, re-aggregated per group — tests = Σ group
-    counts, pass = rows in singleton groups, so uniqueness is judged WITHIN
-    each group.  The projection ships ONLY the key columns into the shuffle
-    (at 10^12 rows the audio payload never moves); partial aggregation
-    combines duplicate keys map-side.  NULL keys group together (SQL), and
-    a group's keys are its rows' keys, so the NULL-key test reads the group
-    columns.  With no keys the second aggregate is a single-row reduce.
-    allow_na rescues NULL-key rows FIRST, negate LAST (the reference-rule
-    flag order)."""
+def _uniqueness_keys(
+    df: DataFrame, r: UniquenessRule, by_cols: list[str]
+) -> tuple[DataFrame, Column, str]:
+    """``(grouped, ok, cnt)`` for one uniqueness rule: ONE key-only
+    ``groupBy(by + keys)`` → ``cnt`` rows per key, and ``ok``, the verdict
+    on every row of a key.  Its counts sum per group in ``_rule_counts``
+    (tests = Σ key counts, pass = rows of ``ok`` keys, so uniqueness is
+    judged WITHIN each group; with no keys a single-row reduce), and
+    ``uniqueness_violations`` semi-joins the keys that are not ``ok``.  The
+    projection ships ONLY the key columns into the shuffle (at 10^12 rows
+    the audio payload never moves); partial aggregation combines duplicate
+    keys map-side.  NULL keys group together (SQL), and a group's keys are
+    its rows' keys, so the NULL-key test reads the group columns.  allow_na
+    rescues NULL-key rows FIRST, negate LAST (the reference-rule flag
+    order)."""
     missing = [c for c in r.unique_cols if c not in df.columns]
     if missing:
         raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
@@ -427,7 +406,7 @@ def _uniqueness_counts(df: DataFrame, r: UniquenessRule, by_cols: list[str]) -> 
         ok = ok | _null_key(r.unique_cols)
     if r.negate:
         ok = ~ok
-    return _sum_counts(grouped, by_cols, ok, cnt)
+    return grouped, ok, cnt
 
 
 def _split_rules(rules: Ruleset) -> tuple[list[Rule], list[Rule]]:
@@ -445,41 +424,27 @@ def _rule_counts(
 ) -> DataFrame:
     if isinstance(r, ReferenceRule):
         return _reference_counts(df, r, datasets, by_cols)
-    return _uniqueness_counts(df, r, by_cols)
+    grouped, ok, cnt = _uniqueness_keys(df, r, by_cols)
+    return _sum_counts(grouped, by_cols, ok, cnt)
 
 
 def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
     """Rows of ``df`` violating a uniqueness rule — the filter_fails
     complement (filter_fails itself skips aggregation rules the way the
     reference skips reference rules, R/filters.R:42-47).  A left-semi join
-    against the duplicated key set; only keys shuffle."""
-    keys = list(r.unique_cols)
-    null_key = _null_key(keys)
-    # allow_na rescues NULL-key rows FIRST: they leave the candidate pool
-    # (and re-enter wholesale as violators under negation, flag order per
-    # R/data_column.R:353-358)
-    base = df.filter(~null_key) if r.allow_na else df
-    cnt = _safe_alias(df.columns, "__cnt")
+    against the keys that ``_uniqueness_keys`` judges not ``ok``, so the
+    flag order is the count's own; only keys shuffle."""
+    grouped, ok, _ = _uniqueness_keys(df, r, [])
+    keys = list(dict.fromkeys(r.unique_cols))
     bk = "__bk"
     while any(f"{bk}_{c}" in df.columns for c in keys):
         bk = "_" + bk
-    grouped = base.groupBy(*[F.col(c) for c in keys]).agg(
-        F.count(F.lit(1)).alias(cnt)
-    )
-    bad = F.col(cnt) > 1
-    if r.negate:
-        bad = ~bad  # singleton keys become the violators
-    bad_keys = grouped.filter(bad).select(
-        *[F.col(c).alias(f"{bk}_{c}") for c in keys]
-    )
-    # null-SAFE semi join: without allow_na a duplicated NULL-key group must
-    # still surface (SQL GROUP BY groups NULLs together; a plain equi-join
-    # would silently drop them)
-    join_cond = reduce(and_, [base[c].eqNullSafe(bad_keys[f"{bk}_{c}"]) for c in keys])
-    out = base.join(bad_keys, join_cond, "left_semi")
-    if r.allow_na and r.negate:
-        out = out.unionByName(df.filter(null_key))
-    return out
+    bad_keys = grouped.filter(~ok).select(*[F.col(c).alias(f"{bk}_{c}") for c in keys])
+    # null-SAFE semi join: SQL GROUP BY groups NULLs together, so a NULL-key
+    # group is flagged (or rescued) like any other key; a plain equi-join
+    # would silently drop it
+    join_cond = reduce(and_, [df[c].eqNullSafe(bad_keys[f"{bk}_{c}"]) for c in keys])
+    return df.join(bad_keys, join_cond, "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +753,10 @@ def check_data_by(
     a single shuffle; results are unpivoted to long form
     ``by..., name, expr, tests, pass, fail`` via an inline array-of-structs
     (pure Catalyst — no Python in the row path).  At 10^12 rows this yields
-    one summary row per (partition-key × rule), the north_rule shape.
+    one summary row per (partition-key × rule), the north_rule shape.  A
+    streaming ``df`` gives a streaming aggregation with its running sums in
+    Spark's state store: every surface of ``streaming/validate.py`` is this
+    call over the stream.
 
     Skew note (north_rule: hot clip_id partitions): conditional-sum
     aggregates combine map-side, so a key holding 90% of the rows shuffles
@@ -817,8 +785,21 @@ def check_data_by(
         bad = [f"'{c.rule.name}' ({c.rule.expr}): {c.error}" for c in compiled if c.pred is None]
         if bad:
             raise ValueError("check_data_by: bad rule(s) " + "; ".join(bad))
-        grouped = df.groupBy(*by_cols).agg(*_pass_sums([c.pred for c in compiled]))
-        parts.append(_long_summary(grouped, by_cols, expr_rules))
+        grouped = df.groupBy(*by_cols).agg(
+            F.count(F.lit(1)).alias("__tests"),
+            *[_hits(c.pred, f"__p{i}") for i, c in enumerate(compiled)],
+        )
+        structs = [
+            F.struct(
+                F.lit(r.name).alias("name"),
+                F.lit(r.expr).alias("expr"),
+                F.col("__tests").alias("tests"),
+                F.col(f"__p{i}").alias("pass"),
+                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
+            )
+            for i, r in enumerate(expr_rules)
+        ]
+        parts.append(grouped.select(*by_cols, F.inline(F.array(*structs))))
 
     for r in counted_rules:
         parts.append(

@@ -242,7 +242,9 @@ def describe(
     value (numeric columns numerically), NA last; numbers rounded to
     ``digits`` and integral values shown bare; ``skip_ones`` then drops
     count==1 entries.  It is NULL under ``fast`` and ``""`` for ``top_n=0``
-    or a column with ≤1 distinct value.
+    or a column with ≤1 distinct value.  Array, map and struct values are
+    counted and shown as JSON (``["a","b"] (2)``), so values that a plain
+    string cast renders alike stay apart.
 
     Cost: exact mode (``approx=False``, the default) shuffles one row per
     distinct (group, column, value) — the same shuffle as the top-k — and
@@ -378,9 +380,12 @@ def _most_frequent_by(
 
 def _mf_value_str(f: T.StructField) -> Column:
     """String view of a column for value counting: booleans render TRUE/FALSE
-    (the R format, R/describe.R:75-85), everything else casts; NULL stays
-    NULL (displayed as NA downstream)."""
+    (the R format, R/describe.R:75-85), arrays, maps and structs render as
+    JSON (a plain cast renders ``["a, b"]`` and ``["a", "b"]`` alike),
+    everything else casts; NULL stays NULL (displayed as NA downstream)."""
     c = F.col(f.name)
+    if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
+        return F.to_json(c)
     if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
         # -0.0 and 0.0 are one value (as Spark grouping, DuckDB and R count
         # them) but cast to two strings; the zero keeps the column's own

@@ -36,42 +36,40 @@ def load_table(spark: SparkSession, ref: str, fmt: str | None = None) -> DataFra
     header + schema inference — pass an explicit schema via
     ``spark.read.csv`` directly for production ingests), and everything else
     tries parquet then Iceberg."""
-    if fmt is not None:
-        if fmt == "parquet":
-            return spark.read.parquet(ref)
-        if fmt == "json":
-            return spark.read.json(ref)
-        if fmt in ("csv", "tsv"):
-            reader = spark.read.option("header", "true").option("inferSchema", "true")
-            # forced csv on a .tsv path must still honor the tab separator,
-            # matching the extension-sniffing path below
-            if fmt == "tsv" or ref.rstrip("/").lower().endswith(".tsv"):
-                reader = reader.option("sep", "\t")
-            return reader.csv(ref)
-        if fmt == "iceberg":
-            return spark.read.format("iceberg").load(ref)
-        raise ValueError(f"unknown fmt {fmt!r}")
-    if not ref.startswith(("/", "file:", "s3:", "s3a:", "hdfs:")):
-        # catalog table name (Iceberg/HMS)
-        try:
-            return spark.read.table(ref)
-        except Exception:
-            pass
-        return spark.read.format("iceberg").load(ref)
     low = ref.rstrip("/").lower()
-    if low.endswith((".jsonl", ".json", ".ndjson")):
+    if fmt is None:
+        if not ref.startswith(("/", "file:", "s3:", "s3a:", "hdfs:")):
+            # catalog table name (Iceberg/HMS)
+            try:
+                return spark.read.table(ref)
+            except Exception:
+                pass
+            return spark.read.format("iceberg").load(ref)
+        if low.endswith((".jsonl", ".json", ".ndjson")):
+            fmt = "json"
+        elif low.endswith((".csv", ".tsv")):
+            fmt = "csv"
+        else:
+            # filesystem ref: parquet first (the common sandbox case — avoids
+            # a noisy iceberg-jar-missing stack in the logs), iceberg table
+            # dir as fallback
+            try:
+                return spark.read.parquet(ref)
+            except Exception:
+                return spark.read.format("iceberg").load(ref)
+    if fmt == "parquet":
+        return spark.read.parquet(ref)
+    if fmt == "json":
         return spark.read.json(ref)
-    if low.endswith((".csv", ".tsv")):
+    if fmt in ("csv", "tsv"):
         reader = spark.read.option("header", "true").option("inferSchema", "true")
-        if low.endswith(".tsv"):
+        # a .tsv path is tab-separated whether csv was forced or sniffed
+        if fmt == "tsv" or low.endswith(".tsv"):
             reader = reader.option("sep", "\t")
         return reader.csv(ref)
-    # filesystem ref: parquet first (the common sandbox case — avoids a noisy
-    # iceberg-jar-missing stack in the logs), iceberg table dir as fallback
-    try:
-        return spark.read.parquet(ref)
-    except Exception:
+    if fmt == "iceberg":
         return spark.read.format("iceberg").load(ref)
+    raise ValueError(f"unknown fmt {fmt!r}")
 
 
 def write_violations(

@@ -3,10 +3,13 @@ unbounded inputs.
 
 The reference is strictly batch (SURVEY.md §2.5), so this is a graft
 extension: a training-data ingest pipeline validates clips AS THEY ARRIVE and
-alerts on quality regressions per event-time window.  Rules compile to the
-identical Column predicates as the batch path, so semantics (NULL→fail,
-negate-then-guard) carry over verbatim; the fused conditional-sum aggregation
-becomes a (windowed) streaming aggregation with watermark-bounded state.
+alerts on quality regressions per event-time window.  A streaming DataFrame
+is a DataFrame, so every surface here is the batch ``check_data_by`` over
+the stream: the rules compile to the identical Column predicates
+(semantics — NULL→fail, negate-then-guard — carry over verbatim), and the
+fused conditional-sum aggregation becomes a JVM streaming aggregation whose
+state per key is the aggregation buffer (one count plus one sum per rule).
+No Python runs in the row path.
 
 Shapes:
 - ``check_stream``: declarative — streaming DataFrame in, streaming
@@ -14,18 +17,26 @@ Shapes:
 - ``check_stream_against``: the same, with a stream-static left equi-join
   against a reference table first (incremental ingest validated against
   persisted captions/originals; unmatched rows fail, never vanish).
+- ``check_stream_cumulative``: running per-key counters since the stream
+  started (``check_data_by`` keyed on ``by``, no window).
 - ``validate_stream_to_ledger``: foreachBatch — every micro-batch runs the
   batch ``check_data_by`` and appends per-partition rows to the
   ValidationLedger, unifying streaming ingest with the resumable batch
   ledger (exactly-once per micro-batch via the sink's idempotent run key).
+- ``validate_stream_windowed_to_sink``: foreachBatch — windowed summaries
+  with the rows the watermark drops counted, not discarded.
+
+Every surface rejects reference and uniqueness rules, and ``check_data_by``
+rejects unparsable rules and unknown columns, when the query is defined —
+before ``start()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..check import _long_summary, _pass_sums, compile_rule_predicate
+from ..check import _safe_alias, check_data_by
 from ..rules import ReferenceRule, Rule, Ruleset, UniquenessRule, ruleset
 
 __all__ = [
@@ -55,10 +66,13 @@ def _parse_duration_s(s: str) -> float:
     return float(parts[0]) * _DUR_UNITS[parts[1].lower()]
 
 
-def _rule_aggs(rules: Ruleset) -> tuple[list[Column], list[Rule]]:
-    """The batch engine's fused ``_pass_sums`` aggregate over the rules'
-    compiled predicates, behind the rule-kind guard every streaming surface
-    goes through."""
+def _guard_rule_kinds(rules: Ruleset | Rule) -> Ruleset:
+    """The rule-kind guard every streaming surface goes through: reference
+    and uniqueness rules are refused with a message that says why (a
+    uniqueness rule would otherwise fail only at ``start()``, with Spark's
+    "multiple streaming aggregations" error)."""
+    if isinstance(rules, Rule):
+        rules = ruleset(rules)
     for r in rules:
         if isinstance(r, ReferenceRule):
             raise ValueError("reference rules need a static lookup side; use foreachBatch")
@@ -66,15 +80,17 @@ def _rule_aggs(rules: Ruleset) -> tuple[list[Column], list[Rule]]:
             raise ValueError(
                 "uniqueness rules are aggregation rules; not supported in streaming"
             )
-    good = list(rules)
-    return _pass_sums([compile_rule_predicate(r).column for r in good]), good
+    return rules
 
 
-def _window_bounds(window_col: str) -> list[Column]:
-    return [
-        F.col(f"{window_col}.start").alias("window_start"),
-        F.col(f"{window_col}.end").alias("window_end"),
-    ]
+def _window_rows(summary: DataFrame, w: str) -> DataFrame:
+    """A summary keyed on window column ``w`` as ``window_start,
+    window_end, name, expr, tests, pass, fail``."""
+    return summary.select(
+        F.col(f"{w}.start").alias("window_start"),
+        F.col(f"{w}.end").alias("window_end"),
+        "name", "expr", "tests", "pass", "fail",
+    )
 
 
 def check_stream(
@@ -84,22 +100,22 @@ def check_stream(
     window: str = "1 minute",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming per-window rule summary.
+    """Streaming per-window rule summary: ``check_data_by`` keyed on the
+    watermarked event-time window.
 
-    One streaming aggregation keyed on the event-time window computes every
-    rule's conditional sum (state size: one row per open window, NOT per
-    input row); late data beyond ``watermark`` is dropped and closed windows
-    emit finalized counts in append mode.
+    One streaming aggregation keyed on the window computes every rule's
+    conditional sum (state size: one row per open window, NOT per input
+    row); late data beyond ``watermark`` is dropped and closed windows emit
+    finalized counts in append mode.  The window column gets a name no
+    input column has, so a user column named ``window`` stays readable by
+    the rules.
     """
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    aggs, good = _rule_aggs(rules)
-    grouped = (
-        sdf.withWatermark(time_col, watermark)
-        .groupBy(F.window(F.col(time_col), window).alias("window"))
-        .agg(*aggs)
+    rules = _guard_rule_kinds(rules)
+    w = _safe_alias(sdf.columns, "window")
+    windowed = sdf.withWatermark(time_col, watermark).withColumn(
+        w, F.window(F.col(time_col), window)
     )
-    return _long_summary(grouped, _window_bounds("window"), good)
+    return _window_rows(check_data_by(windowed, rules, by=w), w)
 
 
 def validate_stream_to_ledger(
@@ -180,8 +196,8 @@ def validate_stream_windowed_to_sink(
     ENTERING the batch (max event time of all strictly-earlier batches minus
     the delay — Spark's global-watermark update rule), then
 
-    * on-time rows aggregate per (window × rule) exactly like the batch
-      engine, and
+    * on-time rows go through ``check_data_by`` keyed on the window, as in
+      the batch engine, and
     * dropped rows become per-window ``_dropped_by_watermark`` counter rows
       (tests = fail = n_dropped) in the same summary shape,
 
@@ -195,41 +211,30 @@ def validate_stream_windowed_to_sink(
     """
     delay_s = _parse_duration_s(watermark)
     _parse_duration_s(window)  # validate early; F.window parses it per-row
+    rules = _guard_rule_kinds(rules)
+    w = _safe_alias(sdf.columns, "__w")
 
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    aggs, good = _rule_aggs(rules)
+    def summary(df: DataFrame, wm: float | None) -> DataFrame:
+        tagged = df.withColumn(w, F.window(F.col(time_col), window))
+        late = F.lit(False) if wm is None else F.col(f"{w}.end").cast("double") <= F.lit(wm)
+        late_rows = tagged.filter(late).groupBy(w).agg(
+            F.lit("_dropped_by_watermark").alias("name"),
+            F.lit(f"late > {watermark}").alias("expr"),
+            F.count(F.lit(1)).alias("tests"),
+            F.lit(0).cast("long").alias("pass"),
+            F.count(F.lit(1)).alias("fail"),
+        )
+        rule_rows = check_data_by(tagged.filter(~late), rules, by=w)
+        return _window_rows(rule_rows.unionByName(late_rows), w)
+
+    summary(sdf, None)  # a bad rule or column raises now, not in the first batch
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         wm = _read_watermark_state(spark, sink_path, batch_id, delay_s)
-
-        tagged = batch_df.withColumn("__w", F.window(F.col(time_col), window))
-        late_pred = (
-            F.lit(False)
-            if wm is None
-            else (F.col("__w.end").cast("double") <= F.lit(wm))
-        )
-        tagged = tagged.withColumn("__late", late_pred)
-
-        ontime = tagged.filter(~F.col("__late")).groupBy("__w").agg(*aggs)
-        rule_rows = _long_summary(ontime, _window_bounds("__w"), good)
-        late_rows = (
-            tagged.filter(F.col("__late"))
-            .groupBy("__w")
-            .agg(F.count(F.lit(1)).alias("tests"))
-            .select(
-                *_window_bounds("__w"),
-                F.lit("_dropped_by_watermark").alias("name"),
-                F.lit(f"late > {watermark}").alias("expr"),
-                F.col("tests"),
-                F.lit(0).cast("long").alias("pass"),
-                F.col("tests").alias("fail"),
-            )
-        )
-        out = rule_rows.unionByName(late_rows).withColumn("batch", F.lit(batch_id))
+        out = summary(batch_df, wm).withColumn("batch", F.lit(batch_id))
         out.write.mode("overwrite").parquet(f"{sink_path}/summary/b{batch_id}")
 
         mx = batch_df.agg(F.max(F.col(time_col).cast("double"))).collect()[0][0]
@@ -293,8 +298,8 @@ def check_stream_against(
     one becomes a shuffled join per batch — for 10^12-row reference tables
     prefer the foreachBatch ledger path with a bucketed/pre-partitioned
     join.  Rules may reference columns from either side; the usual
-    streaming limits apply (no reference/uniqueness rules — _rule_aggs
-    raises)."""
+    streaming limits apply (no reference/uniqueness rules — the rule-kind
+    guard raises)."""
     joined = sdf.join(static_df, on=on, how="left")
     return check_stream(joined, rules, time_col, window=window, watermark=watermark)
 
@@ -304,57 +309,17 @@ def check_stream_cumulative(
     rules: Ruleset | Rule,
     by: str,
 ) -> DataFrame:
-    """CUMULATIVE per-key rule counters across micro-batches — the custom
-    stateful operator shape (``applyInPandasWithState``): every update emits
-    each key's running (tests, pass, fail) per rule since the stream started,
-    e.g. "how many clips of codec X have failed decode so far this ingest".
+    """CUMULATIVE per-key rule counters across micro-batches: every update
+    emits each key's running (tests, pass, fail) per rule since the stream
+    started, e.g. "how many clips of codec X have failed decode so far this
+    ingest".
 
-    Plan split for scale: the rule predicates evaluate JVM-side (Catalyst
-    Column → int flag columns) BEFORE the stateful exchange, so Python sees
-    only (key, flags) integers; the state per key is one row of n_rules + 1
-    counters — no raw payload enters state or Python.  Unbounded key spaces
-    should prefer the windowed :func:`check_stream` (watermark-bounded
-    state); this operator is for LOW-cardinality keys (codec, source,
-    partition day) that need lifetime-of-stream totals.
+    This is ``check_data_by(sdf, rules, by)``: a JVM streaming aggregation
+    (update or complete output mode) whose state per key is the aggregation
+    buffer, one count plus one sum per rule.  No raw payload enters state
+    and no row reaches Python.  The state is never evicted, so unbounded key
+    spaces should prefer the windowed :func:`check_stream`
+    (watermark-bounded state); this operator is for LOW-cardinality keys
+    (codec, source, partition day) that need lifetime-of-stream totals.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    _, good = _rule_aggs(rules)
-    preds = [compile_rule_predicate(r).column for r in good]
-    flags = sdf.select(
-        F.col(by),
-        *[F.when(p, F.lit(1)).otherwise(F.lit(0)).alias(f"__f{i}") for i, p in enumerate(preds)],
-    )
-
-    names = [r.name for r in good]
-    exprs = [r.expr for r in good]
-    n = len(good)
-    key_field = sdf.schema[by]
-    key_ddl = f"{by} {key_field.dataType.simpleString()}"
-    out_schema = f"{key_ddl}, name string, expr string, tests bigint, pass bigint, fail bigint"
-    state_schema = "tests bigint, " + ", ".join(f"p{i} bigint" for i in range(n))
-
-    def update(key, pdfs, state: GroupState):
-        counts = list(state.get) if state.exists else [0] * (n + 1)
-        for pdf in pdfs:
-            counts[0] += len(pdf)
-            for i in range(n):
-                counts[i + 1] += int(pdf[f"__f{i}"].sum())
-        state.update(tuple(counts))
-        yield pd.DataFrame(
-            {
-                by: [key[0]] * n,
-                "name": names,
-                "expr": exprs,
-                "tests": [counts[0]] * n,
-                "pass": [counts[i + 1] for i in range(n)],
-                "fail": [counts[0] - counts[i + 1] for i in range(n)],
-            }
-        )
-
-    return flags.groupBy(by).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+    return check_data_by(sdf, _guard_rule_kinds(rules), by)

@@ -3,7 +3,14 @@
 
 import pytest
 
-from dataverifyr_spark import CheckDataError, check_data, rule, ruleset
+from dataverifyr_spark import (
+    CheckDataError,
+    check_data,
+    rule,
+    ruleset,
+    unique_rule,
+    uniqueness_violations,
+)
 from dataverifyr_spark.check import check_data_by
 from dataverifyr_spark.fixtures import cars, orders
 
@@ -397,6 +404,15 @@ class TestUniquenessRule:
         ks = sorted((r["g"] for r in neg.collect()))
         assert ks == ["a", "c", "d", "e"]  # singletons (1,5) + rescued NULLs
 
+    def test_violations_plan_has_no_union(self, spark, kdf):
+        """allow_na + negate reads the count's own verdict: NULL-key rows are
+        flagged through the one semi join, not a second scan unioned on."""
+        from dataverifyr_spark import unique_rule, uniqueness_violations
+
+        out = uniqueness_violations(kdf, unique_rule("k", negate=True, allow_na=True))
+        assert "Union" not in out._jdf.queryExecution().optimizedPlan().toString()
+        assert sorted(r["g"] for r in out.collect()) == ["a", "c", "d", "e"]
+
     def test_check_data_by_per_group(self, spark):
         from dataverifyr_spark import check_data_by, ruleset, unique_rule
 
@@ -614,3 +630,32 @@ class TestLocalResultFrame:
         assert empty.schema == RESULT_SCHEMA and empty.count() == 0
         no_cols = describe(spark.createDataFrame([], T.StructType([])))
         assert no_cols.schema == DESCRIBE_SCHEMA and no_cols.count() == 0
+
+
+class TestAliasCollisions:
+    def test_check_data_unique_rule_with_cnt_column(self, spark):
+        # a dataset with columns literally named __cnt/__isnull must not
+        # break a valid uniqueness rule (AMBIGUOUS_REFERENCE regression)
+        df = spark.createDataFrame(
+            [(1, 9, 9), (2, 9, 9), (2, 9, 9)], ["k", "__cnt", "__isnull"]
+        )
+        row = check_data(df, ruleset(unique_rule("k", name="u"))).collect()[0]
+        assert not row["error"]
+        assert (row["tests"], row["pass"], row["fail"]) == (3, 1, 2)
+
+    def test_check_data_by_unique_rule_with_cnt_column(self, spark):
+        df = spark.createDataFrame(
+            [("a", 1, 0), ("a", 1, 0), ("b", 1, 0)], ["g", "k", "__cnt"]
+        )
+        rows = {
+            r["g"]: (r["tests"], r["pass"], r["fail"])
+            for r in check_data_by(df, ruleset(unique_rule("k", name="u")), by="g").collect()
+        }
+        assert rows == {"a": (2, 0, 2), "b": (1, 1, 0)}
+
+    def test_uniqueness_violations_with_colliding_columns(self, spark):
+        df = spark.createDataFrame(
+            [(1, 0, 0), (2, 0, 0), (2, 0, 0)], ["k", "__cnt", "__bk_k"]
+        )
+        out = uniqueness_violations(df, unique_rule("k")).collect()
+        assert sorted(r["k"] for r in out) == [2, 2]

@@ -401,6 +401,13 @@ class TestExactValueCounts:
         }
         assert got == {"a": ("0 (3)", 3), "b": ("", 1)}
 
+    def test_complex_values_that_render_alike_stay_apart(self, spark):
+        df = spark.createDataFrame(
+            [(["a, b"],), (["a", "b"],), (["a", "b"],)], "arr array<string>"
+        )
+        r = describe(df).collect()[0]
+        assert (r["n_distinct"], r["most_frequent"]) == (2, '["a","b"] (2)')
+
     def test_group_keys_named_like_frame_columns(self, spark):
         from dataverifyr_spark import describe_by
 

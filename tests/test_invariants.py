@@ -149,31 +149,33 @@ class TestUniquenessInvariants:
         rng = _random.Random(seed)
         vals = [rng.choice([None] + list(range(8))) for _ in range(200)]
         df = spark.createDataFrame([(v,) for v in vals], "k int")
-        counts = Counter(vals)
+        # a two-column key: a NULL in either column makes the key NULL
+        pairs = [(rng.choice([None, 0, 1, 2]), rng.choice([None, 0, 1, 2, 3])) for _ in range(60)]
+        df2 = spark.createDataFrame(pairs, "a int, b int")
+        inputs = [(df, ["k"], [(v,) for v in vals]), (df2, ["a", "b"], pairs)]
 
-        def expected(allow_na, negate):
+        def expected(keys, allow_na, negate):
+            counts = Counter(keys)
             p = 0
-            for v in vals:
+            for v in keys:
                 ok = counts[v] == 1
                 if allow_na:
-                    ok = ok or v is None
+                    ok = ok or None in v
                 if negate:
                     ok = not ok
                 p += ok
             return p
 
-        for allow_na in (False, True):
-            for negate in (False, True):
-                row = dv.check_data(
-                    df, dv.ruleset(dv.unique_rule("k", allow_na=allow_na, negate=negate))
-                ).collect()[0]
-                exp = expected(allow_na, negate)
-                assert (row["tests"], row["pass"]) == (200, exp), (allow_na, negate)
-                # violations complement: |violations| == fail
-                viol = dv.uniqueness_violations(
-                    df, dv.unique_rule("k", allow_na=allow_na, negate=negate)
-                ).count()
-                assert viol == row["fail"], (allow_na, negate)
+        for frame, cols, keys in inputs:
+            for allow_na in (False, True):
+                for negate in (False, True):
+                    rule = dv.unique_rule(*cols, allow_na=allow_na, negate=negate)
+                    row = dv.check_data(frame, dv.ruleset(rule)).collect()[0]
+                    exp = (len(keys), expected(keys, allow_na, negate))
+                    assert (row["tests"], row["pass"]) == exp, (cols, allow_na, negate)
+                    # violations complement: |violations| == fail
+                    viol = dv.uniqueness_violations(frame, rule).count()
+                    assert viol == row["fail"], (cols, allow_na, negate)
 
     @pytest.mark.parametrize("seed", [5])
     def test_grouped_sums_to_global_when_key_includes_group(self, spark, seed):

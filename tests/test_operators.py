@@ -1878,3 +1878,35 @@ class TestWinnowing:
             winnow_fingerprints(short).explain(True)
         phys = buf.getvalue().split("== Physical Plan ==")[-1]
         assert "EvalPython" not in phys, phys
+
+
+class TestPipelineStatsThreading:
+    def test_near_dup_groups_stats(self, spark):
+        """r6: end-to-end pipelines surface LSH drop accounting + CC rounds
+        through one stats dict."""
+        from dataverifyr_spark.operators.components import near_dup_groups
+
+        docs = spark.createDataFrame(
+            [(i, f"document number {i} about various topics entirely") for i in range(6)]
+            + [(100 + i, "identical boilerplate text repeated in every copy") for i in range(12)],
+            "doc_id bigint, text string",
+        )
+        stats: dict = {}
+        out = near_dup_groups(docs, num_hashes=16, num_bands=4, max_bucket_size=8, stats=stats)
+        assert out.count() == 18
+        assert stats["n_buckets_dropped"] >= 1  # the 12-copy cluster is over cap
+        assert stats["n_rows_dropped"] >= 12
+        assert stats["rounds"] >= 1 and stats["converged"] is True
+
+    def test_embedding_dedup_groups_stats(self, spark):
+        from dataverifyr_spark.operators.components import embedding_dedup_groups
+
+        rows = [(i, [float(i)] * 8) for i in range(5)] + [
+            (100 + i, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]) for i in range(4)
+        ]
+        df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        stats: dict = {}
+        out = embedding_dedup_groups(df, dim=8, bits=4, bands=2, max_bucket_size=100, stats=stats)
+        assert out.count() == 9
+        assert stats["n_buckets_dropped"] == 0 and stats["n_rows_dropped"] == 0
+        assert stats["converged"] is True

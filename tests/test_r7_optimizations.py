@@ -3,8 +3,7 @@
 
 Each test pins the CONTRACT the optimization must preserve, not the
 implementation: banded-LSH single-materialization, CC fused-init round
-semantics on empty input, reference pre-aggregation count equivalence under
-every flag combination, and the two new guard paths.  (The approx-describe
+semantics on empty input, and the two new guard paths.  (The approx-describe
 split's value parity lives in tests/test_describe.py.)"""
 
 import pytest
@@ -97,58 +96,6 @@ class TestConnectedComponentsR7:
             for r in connected_components(edges, broadcast_labels_max=0).collect()
         }
         assert a == b == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 12}
-
-
-class TestReferencePreAggregation:
-    """The r7 pre-aggregated membership join must count exactly like the r6
-    row-level join under every flag combination, including NULL locals and
-    duplicate values."""
-
-    @pytest.fixture()
-    def data(self, spark):
-        local = spark.createDataFrame(
-            [(1,), (1,), (2,), (None,), (None,), (7,)], "k int"
-        )
-        ref = spark.createDataFrame([(1,), (5,)], "k int")
-        return local, ref
-
-    @pytest.mark.parametrize(
-        "allow_na,negate,expected_pass",
-        [
-            # hits: two 1s. NULL local is never a hit (R %in% semantics).
-            (False, False, 2),
-            # allow_na rescues the two NULLs
-            (True, False, 4),
-            # negate: non-hits pass = 2 (value 2, 7) + 2 NULLs = 4
-            (False, True, 4),
-            # rescue FIRST then negate: ok = hit|isnull -> negate -> pass = 2
-            (True, True, 2),
-        ],
-    )
-    def test_flag_algebra_counts(self, spark, data, allow_na, negate, expected_pass):
-        local, ref = data
-        rs = dv.ruleset(
-            dv.reference_rule("k", "ref", "k", allow_na=allow_na, negate=negate)
-        )
-        rows = dv.check_data({"local": local, "ref": ref}, rs).collect()
-        r = rows[0]
-        assert r["tests"] == 6
-        assert r["pass"] == expected_pass, (allow_na, negate, r)
-
-    def test_check_data_by_grouped_counts(self, spark, data):
-        local, ref = data
-        g = local.withColumn("grp", F.when(F.col("k").isNotNull(), F.col("k") % 2).otherwise(F.lit(9)))
-        from dataverifyr_spark.check import check_data_by
-
-        out = check_data_by(
-            g,
-            dv.ruleset(dv.reference_rule("k", "ref", "k")),
-            by="grp",
-            datasets={"ref": ref},
-        ).collect()
-        got = {r["grp"]: (r["tests"], r["pass"]) for r in out}
-        # grp 1: two 1s (hits) + value 7 (miss); grp 0: value 2; grp 9: NULLs
-        assert got == {1: (3, 2), 0: (1, 0), 9: (2, 0)}
 
 
 class TestAdviceGuards:

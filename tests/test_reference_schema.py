@@ -2,7 +2,9 @@
 tests/testthat/test-features-v1.R:61-155."""
 
 import pytest
+from pyspark.sql import functions as F
 
+import dataverifyr_spark as dv
 from dataverifyr_spark import (
     CheckDataError,
     check_data,
@@ -276,3 +278,55 @@ class TestSampleDataSchemaScenario:
         res_ok = check_data(df, rs_ok, extra_columns="ignore").collect()
         assert {"name", "pass", "fail"} <= set(res_ok[0].asDict())
         assert all(r["fail"] == 0 for r in res_ok if r["check_type"] == "schema")
+
+
+class TestReferencePreAggregation:
+    """The r7 pre-aggregated membership join must count exactly like the r6
+    row-level join under every flag combination, including NULL locals and
+    duplicate values."""
+
+    @pytest.fixture()
+    def data(self, spark):
+        local = spark.createDataFrame(
+            [(1,), (1,), (2,), (None,), (None,), (7,)], "k int"
+        )
+        ref = spark.createDataFrame([(1,), (5,)], "k int")
+        return local, ref
+
+    @pytest.mark.parametrize(
+        "allow_na,negate,expected_pass",
+        [
+            # hits: two 1s. NULL local is never a hit (R %in% semantics).
+            (False, False, 2),
+            # allow_na rescues the two NULLs
+            (True, False, 4),
+            # negate: non-hits pass = 2 (value 2, 7) + 2 NULLs = 4
+            (False, True, 4),
+            # rescue FIRST then negate: ok = hit|isnull -> negate -> pass = 2
+            (True, True, 2),
+        ],
+    )
+    def test_flag_algebra_counts(self, spark, data, allow_na, negate, expected_pass):
+        local, ref = data
+        rs = dv.ruleset(
+            dv.reference_rule("k", "ref", "k", allow_na=allow_na, negate=negate)
+        )
+        rows = dv.check_data({"local": local, "ref": ref}, rs).collect()
+        r = rows[0]
+        assert r["tests"] == 6
+        assert r["pass"] == expected_pass, (allow_na, negate, r)
+
+    def test_check_data_by_grouped_counts(self, spark, data):
+        local, ref = data
+        g = local.withColumn("grp", F.when(F.col("k").isNotNull(), F.col("k") % 2).otherwise(F.lit(9)))
+        from dataverifyr_spark.check import check_data_by
+
+        out = check_data_by(
+            g,
+            dv.ruleset(dv.reference_rule("k", "ref", "k")),
+            by="grp",
+            datasets={"ref": ref},
+        ).collect()
+        got = {r["grp"]: (r["tests"], r["pass"]) for r in out}
+        # grp 1: two 1s (hits) + value 7 (miss); grp 0: value 2; grp 9: NULLs
+        assert got == {1: (3, 2), 0: (1, 0), 9: (2, 0)}

@@ -10,6 +10,7 @@ from dataverifyr_spark import (
     reference_rule,
     rule,
     ruleset,
+    unique_rule,
     write_rules,
 )
 from dataverifyr_spark.rules import Ruleset
@@ -254,3 +255,10 @@ class TestPrintFormats:
         long = rs.show(10)
         assert "  [4] 'hp' matching `hp < 300` (allow_na: FALSE)" in long
         assert "+1 more" not in long
+
+
+class TestCommaUniqueCols:
+    def test_write_rules_rejects_comma_column(self, tmp_path):
+        rs = ruleset(unique_rule("a,b", name="bad"))
+        with pytest.raises(ValueError, match="comma-joined"):
+            write_rules(rs, str(tmp_path / "r.yaml"))

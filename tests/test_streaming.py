@@ -6,7 +6,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from dataverifyr_spark import check_data, rule, ruleset
+from dataverifyr_spark import check_data, rule, ruleset, unique_rule
 from dataverifyr_spark.ledger import ValidationLedger
 from dataverifyr_spark.streaming import check_stream, validate_stream_to_ledger
 
@@ -80,6 +80,70 @@ class TestCheckStream:
         )
         with pytest.raises(ValueError, match="foreachBatch"):
             check_stream(sdf, ruleset(reference_rule("source", "codecs", "codec")), "ts")
+
+    @pytest.mark.parametrize("mode", ["complete", "append"])
+    def test_rows_equal_check_data_by_per_window(self, spark, stream_input, tmp_path, mode):
+        """Each window's rows equal check_data_by over the static input keyed
+        on the same window — per window, not only in total.  Append mode
+        emits a window once the watermark passes its end, so there the last
+        window, still open, is missing."""
+        from dataverifyr_spark.check import check_data_by
+
+        sdf = (
+            spark.readStream.schema("ts timestamp, value double, source string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{stream_input}/f*")
+        )
+        out = check_stream(sdf, RULES, time_col="ts", window="1 minute", watermark="0 seconds")
+        q = (
+            out.writeStream.format("memory")
+            .queryName(f"stream_per_window_{mode}")
+            .outputMode(mode)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        cols = ["window_start", "window_end", "name", "expr", "tests", "pass", "fail"]
+        got = spark.table(f"stream_per_window_{mode}").select(cols).collect()
+        static = spark.read.parquet(f"{stream_input}/f*")
+        static = static.withColumn("w", F.window("ts", "1 minute"))
+        bounds = [F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end")]
+        want = sorted(
+            tuple(r)
+            for r in check_data_by(static, RULES, by="w").select(*bounds, *cols[2:]).collect()
+        )
+        if mode == "append":
+            want = [r for r in want if r[0] < max(r[0] for r in want)]
+        assert sorted(tuple(r) for r in got) == want
+        assert len({r[0] for r in want}) == (3 if mode == "complete" else 2)
+
+    def test_user_column_named_window(self, spark, tmp_path):
+        """The event-time window must not replace an input column named
+        ``window``: a rule over that column still reads the user's values."""
+        base = dt.datetime(2025, 6, 1, 12, 0, 0)
+        rows = [(base + dt.timedelta(seconds=i), "ok" if i % 3 else "bad") for i in range(9)]
+        src = str(tmp_path / "win_in")
+        spark.createDataFrame(rows, "ts timestamp, window string").write.parquet(src)
+        sdf = spark.readStream.schema("ts timestamp, window string").parquet(src)
+        out = check_stream(
+            sdf, ruleset(rule("window == 'ok'", name="w_ok")), "ts", window="1 hour"
+        )
+        assert out.columns[:2] == ["window_start", "window_end"]
+        q = (
+            out.writeStream.format("memory")
+            .queryName("stream_window_col")
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = spark.sql("select * from stream_window_col").collect()
+        assert [(r["name"], r["tests"], r["pass"], r["fail"]) for r in got] == [("w_ok", 9, 6, 3)]
 
 
 class TestStreamToLedger:
@@ -202,7 +266,7 @@ class TestStreamingAudio:
 
 class TestCumulativeState:
     def test_running_totals_across_micro_batches(self, spark, stream_input, tmp_path):
-        """applyInPandasWithState keeps per-key cumulative counters: after all
+        """The streaming aggregation keeps per-key cumulative counters: after all
         3 micro-batches, the LAST update per key must equal the batch engine
         on the full static input; intermediate updates must be monotone."""
         from dataverifyr_spark.streaming import check_stream_cumulative
@@ -313,6 +377,19 @@ class TestCumulativeState:
             assert final[(src, "nonneg")]["pass"] == 80  # all values >= 0
             assert final[(src, "src_ok")]["tests"] == 80
 
+    def test_plan_is_jvm_streaming_aggregation(self, spark, stream_input):
+        """The running counters are a JVM streaming aggregation: no pandas
+        state operator and no Python UDF in the plan."""
+        from dataverifyr_spark.streaming import check_stream_cumulative
+
+        sdf = spark.readStream.schema("ts timestamp, value double, source string").parquet(
+            f"{stream_input}/f*"
+        )
+        plan = check_stream_cumulative(sdf, RULES, by="source")._jdf.queryExecution().analyzed()
+        plan = plan.toString()
+        assert "Aggregate [source" in plan
+        assert "InPandas" not in plan and "PythonUDF" not in plan
+
     def test_reference_rule_rejected(self, spark, stream_input):
         from dataverifyr_spark import reference_rule
         from dataverifyr_spark.streaming import check_stream_cumulative
@@ -340,6 +417,33 @@ class TestCumulativeState:
             check_stream_cumulative(
                 sdf, ruleset(rule("value >= 0"), unique_rule("source")), by="source"
             )
+
+
+class TestDefinitionTimeErrors:
+    """An unparsable rule and a missing column raise ValueError when the
+    query is defined, before ``start()``, on every streaming surface."""
+
+    @pytest.mark.parametrize("expr", ["value >= (", "no_such_col > 0"])
+    @pytest.mark.parametrize("surface", ["check_stream", "cumulative", "windowed_sink"])
+    def test_bad_rule_raises_before_start(self, spark, stream_input, tmp_path, surface, expr):
+        from dataverifyr_spark.streaming import (
+            check_stream_cumulative,
+            validate_stream_windowed_to_sink,
+        )
+
+        sdf = spark.readStream.schema("ts timestamp, value double, source string").parquet(
+            f"{stream_input}/f*"
+        )
+        rules = ruleset(rule("value >= 0", name="ok"), rule(expr, name="bad"))
+        with pytest.raises(ValueError, match="bad"):
+            if surface == "check_stream":
+                check_stream(sdf, rules, "ts")
+            elif surface == "cumulative":
+                check_stream_cumulative(sdf, rules, by="source")
+            else:
+                validate_stream_windowed_to_sink(
+                    sdf, rules, "ts", str(tmp_path / "sink"), str(tmp_path / "ckpt")
+                )
 
 
 class TestLateDataAccounting:
@@ -530,3 +634,49 @@ class TestStreamStaticReference:
                 dv.ruleset(dv.unique_rule("clip_id")),
                 time_col="timestamp",
             )
+
+
+class TestStreamingUniquenessGuard:
+    def test_guard_rejects_uniqueness_rule(self):
+        from dataverifyr_spark.streaming.validate import _guard_rule_kinds
+
+        with pytest.raises(ValueError, match="aggregation rules"):
+            _guard_rule_kinds(ruleset(unique_rule("clip_id", name="pk")))
+
+
+class TestWatermarkStateRecovery:
+    """The narrowed watermark-state except must treat an existing-but-empty
+    state dir (crash mid-first-write) as first batch, while genuine read
+    failures still raise."""
+
+    def test_missing_dir_is_first_batch(self, spark, tmp_path):
+        from dataverifyr_spark.streaming.validate import _read_watermark_state
+
+        assert _read_watermark_state(spark, str(tmp_path / "nope"), 1, 60.0) is None
+
+    def test_empty_temporary_only_dir_is_first_batch(self, spark, tmp_path):
+        from dataverifyr_spark.streaming.validate import _read_watermark_state
+
+        (tmp_path / "sink" / "_watermark" / "b0" / "_temporary").mkdir(parents=True)
+        assert _read_watermark_state(spark, str(tmp_path / "sink"), 1, 60.0) is None
+
+    def test_committed_state_is_read(self, spark, tmp_path):
+        from dataverifyr_spark.streaming.validate import _read_watermark_state
+
+        wm_dir = str(tmp_path / "sink" / "_watermark" / "b0")
+        spark.createDataFrame([(0, 1000.0)], "batch int, max_ts double").write.parquet(wm_dir)
+        wm = _read_watermark_state(spark, str(tmp_path / "sink"), 1, 60.0)
+        assert wm == 940.0
+        # rows of batch >= current are excluded (global watermark = PRIOR batches)
+        assert _read_watermark_state(spark, str(tmp_path / "sink"), 0, 60.0) is None
+
+    def test_corrupt_state_raises(self, spark, tmp_path):
+        from pyspark.errors import AnalysisException
+
+        from dataverifyr_spark.streaming.validate import _read_watermark_state
+
+        wm_dir = tmp_path / "sink" / "_watermark" / "b0"
+        wm_dir.mkdir(parents=True)
+        (wm_dir / "part-00000.parquet").write_bytes(b"this is not parquet at all")
+        with pytest.raises(Exception):  # schema-inference failure must surface
+            _read_watermark_state(spark, str(tmp_path / "sink"), 1, 60.0)
