@@ -3,13 +3,24 @@
 One row per column: ``var, type, n, n_distinct, n_na, most_frequent, min,
 mean, median, max, sd``.  Follows the reference's own batched-collectibles
 strategy (R/describe.R:329-422): every column's statistics come from one
-aggregate with ``stat__col``-aliased outputs, unpivoted in-plan by an
-explode of per-column structs.  ``describe`` is the key-less case of
+aggregate with positionally aliased outputs, unpivoted in-plan by an
+``inline`` of per-column structs.  ``describe`` is the key-less case of
 ``describe_by``: both run :func:`_profile`.  Exact ``n_distinct``, the
-exact ``median`` and ``most_frequent`` all read one value-count frame
-(:func:`_value_counts`: one row per distinct (group, column, value) with its
-count), so the job count does not grow with the column count.  That frame
-is skipped under ``fast=True``, and under ``approx=True`` with ``top_n=0``.
+exact ``median`` and ``most_frequent`` all read one value-count frame (one
+row per distinct (group, column, value) with its count), so the job count
+does not grow with the column count.  That frame is skipped under
+``fast=True``, and under ``approx=True`` with ``top_n=0``.
+
+The plan is written as ONE SQL statement (:func:`_profile_sql`) and
+analyzed by one ``spark.sql`` call.  Built from Column calls, the same plan
+cost one py4j round trip per expression, each wrapped in PySpark's origin
+capture: 3,000-4,200 commands and 0.15-0.23 s of driver CPU per build over
+a 5-column table, against 7 commands and ~1 ms as text (4-core host,
+``local[4]``).  Names reach the text in two forms only: identifiers
+backtick-quoted with embedded backticks doubled, and string values (the
+``var`` column) as hex-encoded UTF-8 literals, so no quote, backslash,
+brace or dot in a name, and no ``escapedStringLiterals`` setting, changes
+the statement.  ``top_n`` and ``digits`` must be integers.
 
 Semantics pinned to the reference:
 - non-numeric columns profile the LENGTH of their string form
@@ -27,8 +38,10 @@ Semantics pinned to the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import operator
+import uuid
+
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 __all__ = ["describe", "describe_by", "DESCRIBE_SCHEMA"]
@@ -71,28 +84,211 @@ def _friendly_type(dt: T.DataType) -> str:
     return dt.simpleString()
 
 
-def _value_expr(name: str, dt: T.DataType) -> Column:
-    """Numeric view of a column: itself, epoch seconds, or string length."""
-    c = F.col(name)
+def _q(name: str) -> str:
+    """A backtick-quoted SQL identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _s(text: str) -> str:
+    """A SQL string literal as hex-encoded UTF-8: a non-NULL constant that
+    ``spark.sql.parser.escapedStringLiterals`` does not change."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
+
+
+def _value_expr(c: str, dt: T.DataType) -> str:
+    """Numeric view of column ``c``: itself, epoch seconds, or string length."""
     if isinstance(dt, (*_NUMERIC, T.BooleanType)):
-        return c.cast("double")
+        return f"CAST({c} AS DOUBLE)"
     if isinstance(dt, _TEMPORAL):
-        return c.cast("timestamp").cast("double")
-    return F.length(c.cast("string")).cast("double")
+        return f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
+    return f"CAST(length(CAST({c} AS STRING)) AS DOUBLE)"
 
 
-def _approx_distinct(f: T.StructField) -> Column:
+def _approx_distinct(c: str, dt: T.DataType) -> str:
     # r6: DataSketches HLL where the type allows (int/long/string/binary) —
     # measured 1.8× faster AND tighter than approx_count_distinct rsd .05
     # (0.47 s vs 0.83 s for 16 columns × 10M rows, −2.2% vs −7.4% bias at 1M
     # distinct); unsupported types (double/bool/timestamp) keep HLL++
-    c = F.col(f.name)
-    if isinstance(f.dataType, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
-        return F.hll_sketch_estimate(F.hll_sketch_agg(c))
-    if isinstance(f.dataType, (T.ShortType, T.ByteType)):
+    if isinstance(dt, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
+        return f"hll_sketch_estimate(hll_sketch_agg({c}))"
+    if isinstance(dt, (T.ShortType, T.ByteType)):
         # integral widening is distinctness-preserving
-        return F.hll_sketch_estimate(F.hll_sketch_agg(c.cast("int")))
-    return F.approx_count_distinct(c)
+        return f"hll_sketch_estimate(hll_sketch_agg(CAST({c} AS INT)))"
+    return f"approx_count_distinct({c})"
+
+
+def _mf_value_str(c: str, dt: T.DataType) -> str:
+    """String view of column ``c`` for value counting: booleans render
+    TRUE/FALSE (the R format, R/describe.R:75-85), arrays, maps and structs
+    render as JSON (a plain cast renders ``["a, b"]`` and ``["a", "b"]``
+    alike), everything else casts; NULL stays NULL (displayed as NA)."""
+    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+        return f"to_json({c})"
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # -0.0 and 0.0 are one value (as Spark grouping, DuckDB and R count
+        # them) but cast to two strings; the zero keeps the column's own
+        # type, since a float cast through double changes its string form
+        c = f"CASE WHEN {c} = 0 THEN CAST(0.0D AS {dt.simpleString()}) ELSE {c} END"
+    if isinstance(dt, T.BooleanType):  # NULL matches neither: stays NULL
+        return f"CASE WHEN {c} THEN 'TRUE' WHEN NOT {c} THEN 'FALSE' END"
+    return f"CAST({c} AS STRING)"
+
+
+def _profile_sql(
+    view: str,
+    by_cols: list[str],
+    fields: list[T.StructField],
+    fast: bool,
+    approx: bool,
+    top_n: int,
+    digits: int,
+    skip_ones: bool,
+) -> str:
+    """The one profile statement behind :func:`describe` (``by_cols=[]``)
+    and :func:`describe_by`, over temp view ``view``: ``by... + var, type,
+    n, n_distinct, n_na, min, mean, median, max, sd`` per (group, column),
+    plus ``most_frequent`` after ``n_na`` when ``top_n > 0`` and not
+    ``fast``.  Its CTEs:
+
+    - ``stats``: the declarative aggregate (count/sum/min/mean/max/stddev),
+      in every mode; ``prof`` unpivots it with one ``inline`` of
+      per-column structs to one row per (group, column);
+    - ``sk`` (approx): a second, sketch-only aggregate (HLL + raw KLL),
+      joined back on the null-safe group key (a 1×1 join without keys).
+      r7: a single aggregate mixing sketches with min/mean/max/sd forces
+      everything through one ObjectHashAggregate — TypedImperativeAggregate
+      buffers disable whole-stage codegen for the whole operator.  Split,
+      the declarative half stays a codegen HashAggregate, the sketch half
+      keeps 2 typed buffer slots per column, and the scheduler runs the two
+      subtrees as independent stages of one job (OPTIMIZATION_r07.md);
+    - ``counts`` (exact, or any top-k): the value-count frame, one row per
+      distinct (group, column, value) with its count ``__c``; ``__v`` is
+      the top-k's string view (:func:`_mf_value_str`), ``__val`` the
+      numeric view (:func:`_value_expr`) that the median and the numeric
+      tie-break read; NULL is one row with both NULL;
+    - ``ex`` (exact): ``count(*)`` and ``percentile(__val, 0.5, __c)`` per
+      (group, column) of ``counts``.  ``count(*)`` counts the NULL value as
+      one more value (R/describe.R:112); the count-weighted percentile
+      equals ``percentile(val, 0.5)`` over the rows but buffers distinct
+      values only.  Its shuffle is the top-k's own, reused when both run;
+    - ``top`` and ``mf`` (``top_n > 0``): window top-n per (group, var),
+      then ``collect_list``/``array_sort``/``filter``/``transform`` build
+      the ``"v (c), v2 (c2)"`` string per slice in-plan.  Booleans render
+      ``TRUE``/``FALSE`` and NULL ``NA``; numbers are rounded to
+      ``digits``, integral results render bare via ``%.0f`` (``5`` for a
+      decimal ``5.00``) and the rest via Spark's double→string cast
+      (``123.4567``, ``NaN``).  Tie-break: count desc, typed value asc
+      (numeric columns numerically), NULL (NA) last;
+    - the final select left-joins ``ex`` and ``mf`` on the null-safe
+      (group, var) key; a slice with ≤1 distinct value shows ``""``.
+
+    ``anynull`` (NA counted as a distinct value) derives from ``__na > 0``.
+    """
+    view, keys = _q(view), [_q(k) for k in by_cols]
+    sel = "".join(f"{k}, " for k in keys)  # the keys, leading a select list
+    group = f"GROUP BY {', '.join(keys)}" if keys else ""
+
+    def on(a: str, b: str, cols: list[str]) -> str:
+        return " AND ".join(f"{a}.{c} <=> {b}.{c}" for c in cols) or "true"
+
+    sketches = approx and not fast
+    decl, sketch, structs, vcs = ["count(1) AS __n"], [], [], []
+    for i, f in enumerate(fields):
+        c, dt = _q(f.name), f.dataType
+        val = _value_expr(c, dt)
+        decl += [
+            # a zero-row global aggregate sums to NULL; n_na stays 0
+            f"coalesce(sum(CAST({c} IS NULL AS BIGINT)), 0) AS __na{i}",
+            f"min({val}) AS __min{i}",
+            f"avg({val}) AS __mean{i}",
+            f"max({val}) AS __max{i}",
+            f"stddev_samp({val}) AS __sd{i}",
+        ]
+        # fast leaves them NULL; exact mode reads them from `ex` instead
+        nd, med = "CAST(NULL AS BIGINT)", "CAST(NULL AS DOUBLE)"
+        if sketches:
+            # r6: KLL quantile sketch (DataSketches, built into Spark 4)
+            # replaced percentile_approx — 3.2× faster on 16 double columns
+            # × 10M rows at ~1% rank error.  KLL ignores NaN updates, so an
+            # all-NULL or all-NaN input leaves an EMPTY buffer that
+            # get_quantile raises on: the non-NaN count guarding it lives in
+            # the codegen aggregate (r7: 37% of the KLL agg when interpreted
+            # inside it) and the quantile is read once per output row.
+            decl.append(f"count(CASE WHEN NOT isnan({val}) THEN {val} END) AS __nnan{i}")
+            sketch += [
+                f"{_approx_distinct(c, dt)} AS __nd{i}",
+                f"kll_sketch_agg_double({val}) AS __kll{i}",
+            ]
+            # R n_distinct counts NA as one distinct value (R/describe.R:112)
+            nd = f"CAST(__nd{i} + CAST(__na{i} > 0 AS BIGINT) AS BIGINT)"
+            kll_median = f"kll_sketch_get_quantile_double(__kll{i}, 0.5D)"
+            med = f"CASE WHEN __nnan{i} > 0 THEN {kll_median} END"
+        structs.append(
+            f"named_struct('var', {_s(f.name)}, 'type', {_s(_friendly_type(dt))}, 'n', __n, "
+            f"'n_na', __na{i}, 'n_distinct', {nd}, 'median', {med}, 'min', __min{i}, "
+            f"'mean', __mean{i}, 'max', __max{i}, 'sd', __sd{i})"
+        )
+        vcs.append(
+            f"named_struct('var', {_s(f.name)}, '__v', {_mf_value_str(c, dt)}, '__val', {val})"
+        )
+    ctes = [f"stats AS (SELECT {sel}{', '.join(decl)} FROM {view} {group})"]
+    source = "stats s"
+    if sketch:
+        ctes.append(f"sk AS (SELECT {sel}{', '.join(sketch)} FROM {view} {group})")
+        source = f"stats s JOIN sk t ON {on('s', 't', keys)}"
+    ctes.append(
+        f"prof AS (SELECT {''.join(f's.{k}, ' for k in keys)}"
+        f"inline(array({', '.join(structs)})) FROM {source})"
+    )
+    exact, most = not fast and not approx, not fast and top_n > 0
+    if exact or most:  # the value-count frame runs only where read
+        ctes.append(
+            f"counts AS (SELECT {sel}var, __v, __val, count(1) AS __c FROM "
+            f"(SELECT {sel}inline(array({', '.join(vcs)})) FROM {view}) p "
+            f"GROUP BY {sel}var, __v, __val)"
+        )
+    joins, n_distinct, median = "", "p.n_distinct", "p.median"
+    if exact:
+        ctes.append(
+            f"ex AS (SELECT {sel}var, count(1) AS n_distinct, "
+            f"percentile(__val, 0.5D, __c) AS median FROM counts GROUP BY {sel}var)"
+        )
+        joins += f" LEFT JOIN ex e ON {on('p', 'e', keys + ['var'])}"
+        # a zero-row describe() has no value rows: 0 distinct values
+        n_distinct, median = "coalesce(e.n_distinct, 0L)", "e.median"
+    cols = [f"p.{k}" for k in keys] + ["p.var", "p.type", "p.n", f"{n_distinct} AS n_distinct"]
+    cols.append("p.n_na")
+    if most:
+        numeric = sorted(_s(f.name) for f in fields if isinstance(f.dataType, _NUMERIC))
+        is_num = f"var IN ({', '.join(numeric)})" if numeric else "false"
+        d = f"round(try_cast(__v AS DOUBLE), {digits})"
+        disp = (
+            f"CASE WHEN __v IS NULL THEN 'NA' ELSE CASE WHEN {is_num} THEN CASE WHEN {d} % 1 = 0 "
+            f"THEN format_string('%.0f', {d}) ELSE CAST({d} AS STRING) END ELSE __v END END"
+        )
+        ctes.append(
+            f"top AS (SELECT {sel}var, named_struct('rn', __rn, 'c', __c, 'disp', {disp}) AS __e "
+            f"FROM (SELECT *, row_number() OVER (PARTITION BY {sel}var ORDER BY __c DESC, "
+            f"CASE WHEN {is_num} THEN __val END ASC NULLS LAST, __v ASC NULLS LAST) AS __rn "
+            f"FROM counts) r WHERE __rn <= {top_n})"
+        )
+        arr = "array_sort(collect_list(__e))"  # sorts by rn (first struct field)
+        if skip_ones:
+            # R semantics (R/describe.R:87-93): rank FIRST, then drop count==1 —
+            # no backfill from below the top-n cut
+            arr = f"filter({arr}, x -> x.c > 1)"
+        ctes.append(
+            f"mf AS (SELECT {sel}var, array_join(transform({arr}, "
+            f"x -> format_string('%s (%d)', x.disp, x.c)), ', ') AS most_frequent "
+            f"FROM top GROUP BY {sel}var)"
+        )
+        joins += f" LEFT JOIN mf m ON {on('p', 'm', keys + ['var'])}"
+        # per-slice suppression: a slice with ≤1 distinct value shows ""
+        cols.append(
+            f"coalesce(CASE WHEN {n_distinct} > 1 THEN m.most_frequent END, '') AS most_frequent"
+        )
+    cols += ["p.min", "p.mean", f"{median} AS median", "p.max", "p.sd"]
+    return f"WITH {', '.join(ctes)} SELECT {', '.join(cols)} FROM prof p{joins}"
 
 
 def _profile(
@@ -105,122 +301,18 @@ def _profile(
     digits: int,
     skip_ones: bool,
 ) -> DataFrame:
-    """The one profile pipeline behind :func:`describe` (``by_cols=[]``) and
-    :func:`describe_by`: ``by... + var, type, n, n_distinct, n_na, min,
-    mean, median, max, sd`` per (group, column), plus ``most_frequent``
-    after ``n_na`` when ``top_n > 0`` and not ``fast``.
-
-    - declarative (count/sum/min/mean/max/stddev): one aggregate in every
-      mode, unpivoted to one row per (group, column);
-    - exact (the default): ``count(*)`` and ``percentile(__val, 0.5, __c)``
-      per (group, column) of the value-count frame (:func:`_value_counts`).
-      ``count(*)`` counts the NULL value as one more value (R/describe.R:112);
-      the count-weighted percentile equals ``percentile(val, 0.5)`` over the
-      rows but buffers distinct values only.  The frame's shuffle is the
-      top-k's own, reused when both run;
-    - approx adds a second, sketch-only aggregate (HLL + raw KLL), joined
-      back on the null-safe group key (a 1×1 cross join without keys).
-      r7: a single aggregate mixing sketches with min/mean/max/sd forces
-      everything through one ObjectHashAggregate — TypedImperativeAggregate
-      buffers disable whole-stage codegen for the whole operator.  Split,
-      the declarative half stays a codegen HashAggregate, the sketch half
-      keeps 2 typed buffer slots per column, and the scheduler runs the two
-      subtrees as independent stages of one job (OPTIMIZATION_r07.md).
-
-    ``anynull`` (NA counted as a distinct value) derives from ``na__ > 0``.
-    """
-    decl: list[Column] = [F.count(F.lit(1)).alias("n__")]
-    sketch: list[Column] = []
-    for f in fields:
-        c, name = F.col(f.name), f.name
-        val = _value_expr(name, f.dataType)
-        decl += [
-            # a zero-row global aggregate sums to NULL; n_na stays 0
-            F.coalesce(F.sum(c.isNull().cast("long")), F.lit(0)).alias(f"na__{name}"),
-            F.min(val).alias(f"min__{name}"),
-            F.mean(val).alias(f"mean__{name}"),
-            F.max(val).alias(f"max__{name}"),
-            F.stddev_samp(val).alias(f"sd__{name}"),
-        ]
-        if approx and not fast:
-            # r6: KLL quantile sketch (DataSketches, built into Spark 4)
-            # replaced percentile_approx — 3.2× faster on 16 double columns
-            # × 10M rows at ~1% rank error.  KLL ignores NaN updates, so an
-            # all-NULL or all-NaN input leaves an EMPTY buffer that
-            # get_quantile raises on: the non-NaN count guarding it lives in
-            # the codegen aggregate (r7: 37% of the KLL agg when interpreted
-            # inside it) and the quantile is read once per output row.
-            decl.append(F.count(F.when(~F.isnan(val), val)).alias(f"nnan__{name}"))
-            sketch += [
-                _approx_distinct(f).alias(f"nd__{name}"),
-                F.kll_sketch_agg_double(val).alias(f"kll__{name}"),
-            ]
-    stats = df.groupBy(*by_cols).agg(*decl)
-    if sketch:
-        stats = _join_on(stats, df.groupBy(*by_cols).agg(*sketch), by_cols, "inner")
-
-    structs: list[Column] = []
-    for f in fields:
-        name = f.name
-        if approx and not fast:
-            # R n_distinct counts NA as one distinct value (R/describe.R:112)
-            nd = (F.col(f"nd__{name}") + (F.col(f"na__{name}") > 0).cast("long")).cast("long")
-            med = F.when(
-                F.col(f"nnan__{name}") > 0,
-                F.kll_sketch_get_quantile_double(F.col(f"kll__{name}"), F.lit(0.5)),
-            )
-        else:  # fast leaves them NULL; exact replaces them below
-            nd, med = F.lit(None).cast("long"), F.lit(None).cast("double")
-        structs.append(
-            F.struct(
-                F.lit(name).alias("var"),
-                F.lit(_friendly_type(f.dataType)).alias("type"),
-                F.col("n__").alias("n"),
-                F.col(f"na__{name}").alias("n_na"),
-                nd.alias("n_distinct"),
-                med.alias("median"),
-                *[F.col(f"{s}__{name}").alias(s) for s in ("min", "mean", "max", "sd")],
-            )
-        )
-    out = stats.select(
-        *[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("__s")
-    ).select(*by_cols, "__s.*")
-    keys = by_cols + ["var"]
-    counts = _value_counts(df, by_cols, fields)  # lazy: runs only where read
-    if not fast and not approx:
-        exact = counts.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.percentile("__val", F.lit(0.5), F.col("__c")).alias("median"),
-        )
-        out = _join_on(out.drop("n_distinct", "median"), exact, keys, "left")
-        # a zero-row describe() has no value rows: 0 distinct values
-        out = out.withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0).cast("long")))
-    if not fast and top_n > 0:
-        mf = _most_frequent_by(counts, by_cols, fields, top_n, digits, skip_ones)
-        # per-slice suppression: a slice with ≤1 distinct value shows ""
-        mf_col = F.coalesce(F.when(F.col("n_distinct") > 1, F.col("most_frequent")), F.lit(""))
-        out = _join_on(out, mf, keys, "left").withColumn("most_frequent", mf_col)
-    return out.select(*by_cols, *[c for c in DESCRIBE_SCHEMA.names if c in out.columns])
-
-
-def _join_on(left: DataFrame, right: DataFrame, keys: list[str], how: str) -> DataFrame:
-    """Null-safe equi-join of two aggregates on ``keys`` (NULL group keys
-    keep their row; no keys is a 1×1 cross join), dropping the right side's
-    keys.  Both sides descend from one frame and share the keys' attribute
-    ids, so the right keys are re-aliased first — dropping them by
-    reference would otherwise be ambiguous.  Each side has at most one row
-    per key, so this is a 1:1 join of two small sides that AQE broadcasts."""
-    alias = {}
-    for k in keys:  # collision-proof internal join-key aliases
-        a = f"__k_{k}"
-        while a in left.columns or a in right.columns:
-            a = "_" + a
-        alias[k] = a
-    right = right.withColumnsRenamed(alias)
-    cond = F.lit(True)
-    for k, a in alias.items():
-        cond = cond & left[k].eqNullSafe(right[a])
-    return left.join(right, cond, how).drop(*alias.values())
+    """:func:`_profile_sql` over ``df``, analyzed by one ``spark.sql`` call.
+    ``df`` is a temp view with a fresh name only while the statement is
+    analyzed (the analyzed plan keeps its own copy of ``df``'s plan); the
+    view is dropped even when analysis fails."""
+    top_n, digits = operator.index(top_n), operator.index(digits)  # both land in the SQL text
+    spark, view = df.sparkSession, f"__describe_{uuid.uuid4().hex}"
+    sql = _profile_sql(view, by_cols, fields, fast, approx, top_n, digits, skip_ones)
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(sql)
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def describe(
@@ -282,15 +374,15 @@ def describe_by(
 ) -> DataFrame:
     """Per-group ``describe`` — the north_rule per-partition shape applied to
     profiling (the check analog is ``check_data_by``).  Grouped aggregates
-    compute every non-key column's statistics for every group, and in-plan
-    explodes unpivot to one row per (group, column) — fully distributed, no
+    compute every non-key column's statistics for every group, and an in-plan
+    ``inline`` unpivots to one row per (group, column) — fully distributed, no
     driver-side loop over groups, so a 10^6-partition profile runs the same
     jobs as a 2-partition one.
 
     Columns: ``by...`` + ``var, type, n, n_distinct, n_na, min, mean,
     median, max, sd``.  With ``top_n > 0`` (and not ``fast``), a
-    ``most_frequent`` column is added after ``n_na`` — the keyed top-k
-    (:func:`_most_frequent_by`) joined back on (by, var).  Slices with ≤1
+    ``most_frequent`` column is added after ``n_na`` — the keyed in-plan
+    top-k joined back on (by, var).  Slices with ≤1
     distinct value are suppressed to ``""`` exactly like :func:`describe`
     (R/describe.R:75-93 applied per slice).  Value semantics and cost are
     those of :func:`describe`, which is this function with no keys (both
@@ -302,98 +394,6 @@ def describe_by(
             raise ValueError(f"by column {c!r} not in DataFrame")
     fields = [f for f in df.schema.fields if f.name not in by_cols]
     return _profile(df, by_cols, fields, fast, approx, top_n, digits, skip_ones)
-
-
-def _value_counts(df: DataFrame, by_cols: list[str], fields: list[T.StructField]) -> DataFrame:
-    """The one value-count frame: ONE explode of per-column structs →
-    ``groupBy(by..., var, __v, __val)`` → ``(by..., var, __v, __val, __c)``,
-    one row per distinct (group, column, value) with its count ``__c``.
-    ``__v`` is the top-k's string view (:func:`_mf_value_str`), ``__val``
-    the numeric view (:func:`_value_expr`) that the median and the numeric
-    tie-break read; NULL is one row with both NULL.  Dunder names keep group
-    keys such as ``v`` or ``c`` from colliding with them."""
-    structs = [
-        F.struct(
-            F.lit(f.name).alias("var"),
-            _mf_value_str(f).alias("__v"),
-            _value_expr(f.name, f.dataType).alias("__val"),
-        )
-        for f in fields
-    ]
-    return (
-        df.select(*[F.col(c) for c in by_cols], F.explode(F.array(*structs)).alias("__p"))
-        .select(*by_cols, "__p.*")
-        .groupBy(*by_cols, "var", "__v", "__val")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-
-
-def _most_frequent_by(
-    counts: DataFrame,
-    by_cols: list[str],
-    fields: list[T.StructField],
-    top_n: int,
-    digits: int,
-    skip_ones: bool,
-) -> DataFrame:
-    """The one top-k, fully IN-PLAN (no collect), over the value-count frame
-    (:func:`_value_counts`): window top-n per (group, var) →
-    ``collect_list``/``array_sort``/``filter``/``transform`` assembles the
-    ``"v (c), v2 (c2)"`` string per slice with pure Catalyst expressions.
-    Returns ``(by..., var, most_frequent)`` — one row per (group, column)
-    whose slice had at least one row; a 10^6-group profile is still one
-    shuffle on (by, var, v) plus one on (by, var).  With ``by_cols=[]`` it
-    is every column's top-k in one pass.
-
-    Formatting: booleans render ``TRUE``/``FALSE`` and NULL ``NA``;
-    numeric values are rounded to ``digits``, integral results render bare
-    via ``%.0f`` (``5`` for a decimal ``5.00``) and the rest via Spark's
-    double→string cast (``123.4567``, ``NaN``).  Tie-break: count desc,
-    typed value asc (numeric columns numerically), NULL (NA) last.
-    """
-    from pyspark.sql.window import Window
-
-    numeric_vars = sorted(f.name for f in fields if isinstance(f.dataType, _NUMERIC))
-    v, c = F.col("__v"), F.col("__c")
-    num_key = F.when(F.col("var").isin(numeric_vars), F.col("__val"))
-    w = Window.partitionBy(*by_cols, "var").orderBy(
-        c.desc(), F.asc_nulls_last(num_key), v.asc_nulls_last()
-    )
-    d = F.round(v.try_cast("double"), digits)
-    disp_num = F.when(d % 1 == 0, F.format_string("%.0f", d)).otherwise(d.cast("string"))
-    disp = F.when(v.isNull(), F.lit("NA")).otherwise(
-        F.when(F.col("var").isin(numeric_vars), disp_num).otherwise(v)
-    )
-    ranked = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
-        .select(*by_cols, "var", F.struct("rn", c.alias("c"), disp.alias("disp")).alias("e"))
-    )
-    arr = F.array_sort(F.collect_list("e"))  # sorts by rn (first struct field)
-    if skip_ones:
-        # R semantics (R/describe.R:87-93): rank FIRST, then drop count==1 —
-        # no backfill from below the top-n cut
-        arr = F.filter(arr, lambda s: s["c"] > F.lit(1))
-    entries = F.transform(arr, lambda s: F.format_string("%s (%d)", s["disp"], s["c"]))
-    return ranked.groupBy(*by_cols, "var").agg(F.array_join(entries, ", ").alias("most_frequent"))
-
-
-def _mf_value_str(f: T.StructField) -> Column:
-    """String view of a column for value counting: booleans render TRUE/FALSE
-    (the R format, R/describe.R:75-85), arrays, maps and structs render as
-    JSON (a plain cast renders ``["a, b"]`` and ``["a", "b"]`` alike),
-    everything else casts; NULL stays NULL (displayed as NA downstream)."""
-    c = F.col(f.name)
-    if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-        return F.to_json(c)
-    if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
-        # -0.0 and 0.0 are one value (as Spark grouping, DuckDB and R count
-        # them) but cast to two strings; the zero keeps the column's own
-        # type, since a float cast through double changes its string form
-        c = F.when(c == 0, F.lit(0.0).cast(f.dataType)).otherwise(c)
-    if isinstance(f.dataType, T.BooleanType):  # NULL matches neither: stays NULL
-        return F.when(c, F.lit("TRUE")).when(~c, F.lit("FALSE"))
-    return c.cast("string")
 
 
 def describe_by_file(

@@ -21,11 +21,10 @@ Compressed video is covered by its own real parsers — ``operators.h264``
 (Annex-B NAL/SPS/slice header walk) and ``operators.mjpeg`` (full pixel
 decode) — and everything here is a complete, round-trippable implementation
 with pinned-byte tests.  Codecs genuinely absent in this environment swap
-in via ``register_decoder`` / ``multimodal.register_feature_extractor``.
+in via ``register_decoder``.
 
-All per-row work runs inside Arrow batches (``mapInPandas`` /
-``extract_media_features``-style plumbing) — numpy slicing per item, no
-Python loops over pixels.
+All per-row work runs inside Arrow batches (``mapInPandas``) — numpy
+slicing per item, no Python loops over pixels.
 """
 
 from __future__ import annotations
@@ -216,7 +215,7 @@ def decode_image(blob: bytes) -> np.ndarray:
     take precedence over the built-in pure-numpy decoders.
 
     Raises ImageError for codec-needing containers (H.264 — see
-    operators.multimodal for the probe-level handling)."""
+    operators.h264 for the container probe)."""
     if blob is None or len(blob) < 2:
         raise ImageError("empty image blob")
     fmt = _sniff_format(blob)

@@ -1,9 +1,9 @@
 """MJPEG — REAL pixel decode for a compressed-video format (pure numpy).
 
-This retires ``multimodal.decode_image_stub``: compressed-video pixel access
-now runs through the in-repo baseline JPEG codec (``operators.jpeg``), so the
-full chain container-walk → frame-seek → entropy/DCT decode → luma stats is
-real.  Two standard MJPEG carriers are supported:
+Compressed-video pixel access runs through the in-repo baseline JPEG codec
+(``operators.jpeg``), so the full chain container-walk → frame-seek →
+entropy/DCT decode → luma stats is real.  Two standard MJPEG carriers are
+supported:
 
 * **AVI/RIFF** (``RIFF..AVI `` with ``LIST movi`` holding ``00dc`` chunks) —
   the canonical MJPEG container.  ``mjpeg_info`` walks RIFF chunk headers

@@ -9,8 +9,9 @@ standard public Spark conf:
   (4.2k → 7.1k clips/s at local[8]); cheap for narrow rows too.
 - AQE on (broadcast decisions for reference-rule joins, skew-join splitting
   for hot clip_id partitions).
-- shuffle.partitions sized to cores by default — summary aggregations are
-  single-row; heavy shuffles (dedup joins) rely on AQE coalescing.
+- ``spark.sql.shuffle.partitions`` is set only when ``shuffle_partitions``
+  is passed; otherwise Spark's default (200) stands and AQE coalesces the
+  small post-shuffle partitions of summary aggregations.
 """
 
 from __future__ import annotations

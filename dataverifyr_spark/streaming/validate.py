@@ -131,6 +131,9 @@ def validate_stream_to_ledger(
     (run_id, batch) so replays after failure are idempotent."""
     from ..ledger import ValidationLedger
 
+    rules = _guard_rule_kinds(rules)
+    check_data_by(sdf, rules, by=part_col)  # a bad rule or column raises now
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return

@@ -78,3 +78,30 @@ def collected_plans(spark, monkeypatch):
 
     monkeypatch.setattr(cls, "collect", recording)
     return plans
+
+
+@pytest.fixture()
+def py4j_commands(spark):
+    """``py4j_commands(fn)``: how many py4j commands ``fn()`` sent to the
+    JVM from the calling thread — every Java call and attribute read.  The
+    object releases py4j's finalizer thread sends are not counted: when
+    they run depends on the garbage collector."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(fn) -> int:
+        sent = 0
+        send, caller = client.send_command, threading.get_ident()
+
+        def counting(*args, **kwargs):
+            nonlocal sent
+            sent += threading.get_ident() == caller
+            return send(*args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(client, "send_command", counting)
+            fn()
+        return sent
+
+    return count

@@ -433,14 +433,12 @@ class TestExactValueCounts:
 
 
 class TestApproxPlanShape:
-    def test_approx_profile_plans_no_expand(self, spark):
-        """approx=True is the at-scale path: HLL distinct + percentile_approx
-        fuse into ONE aggregate with no Expand node (exact mode replicates
-        every scanned row once per distinct aggregate — documented as the
-        small-scale parity path only)."""
-        import contextlib
-        import io
-
+    def test_approx_profile_plans_no_expand(self, spark, collected_plans):
+        """approx=True is the at-scale path: the plan describe runs has no
+        Expand node (exact distinct aggregates replicate every scanned row
+        once per aggregate), and the HLL + KLL sketches of every column sit
+        in ONE ObjectHashAggregate (partial + final), apart from the
+        codegen'd declarative aggregate."""
         from pyspark.sql import functions as F
 
         from dataverifyr_spark.describe import describe
@@ -450,28 +448,15 @@ class TestApproxPlanShape:
             (F.col("id") % 13).cast("double").alias("b"),
             (F.col("id") % 3).cast("string").alias("c"),
         )
-
-        def physical(plan_df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                plan_df.explain(True)
-            return buf.getvalue().split("== Physical Plan ==")[-1]
-
-        # rebuild the approx aggregate exactly as describe() runs it
-        aggs = [
-            F.approx_count_distinct("a"),
-            F.approx_count_distinct("b"),
-            F.approx_count_distinct("c"),
-            F.percentile_approx("a", 0.5, 100),
-            F.percentile_approx("b", 0.5, 100),
-        ]
-        assert "Expand" not in physical(df.agg(*aggs))
-        exact = [F.count_distinct("a"), F.count_distinct("b"), F.count_distinct("c")]
-        assert "Expand" in physical(df.agg(*exact))  # the cost approx avoids
-
-        # and the public surface agrees end-to-end
-        out = describe(df, approx=True)
-        assert out.count() == 3
+        assert describe(df, approx=True).count() == 3
+        (plan,) = collected_plans
+        assert "Expand" not in plan, plan
+        sketch = [ln for ln in plan.split("\n") if "kll_sketch_agg_double" in ln]
+        assert len(sketch) == 2, plan  # partial + final
+        for ln in sketch:
+            assert "ObjectHashAggregate" in ln and ln.count("kll_sketch_agg_double") == 3, ln
+            assert ln.count("hll_sketch_agg") == 2 and ln.count("approx_count_distinct") == 1, ln
+            assert "avg(" not in ln and "stddev_samp(" not in ln, ln
 
 
 class TestMostFrequentByPlanShape:
@@ -614,3 +599,77 @@ class TestKllNanGuards:
         out = {r["g"]: r for r in dv.describe_by(df, by="g", approx=True).filter("var = 'x'").collect()}
         assert out["b"]["median"] is None
         assert out["a"]["median"] is not None
+
+
+class TestPy4jBudget:
+    """Building a profile plan sends one SQL statement to the JVM: the py4j
+    commands it costs do not grow with the column count (a Column-API
+    builder sends thousands, one origin capture per expression)."""
+
+    @pytest.mark.parametrize(
+        "mode", [{}, {"approx": True}, {"approx": True, "top_n": 3}],
+        ids=["exact", "approx", "approx_topk"],
+    )
+    def test_plan_build_commands_constant_in_column_count(self, spark, py4j_commands, mode):
+        from dataverifyr_spark import describe_by
+
+        def frame(k):
+            return spark.range(0, 30).select(
+                (F.col("id") % 3).alias("g"),
+                *[
+                    (F.col("id") % (i + 2)).cast("double" if i % 2 else "string").alias(f"c{i}")
+                    for i in range(k)
+                ],
+            )
+
+        two, eight = frame(2), frame(8)
+        sent = [py4j_commands(lambda d=d: describe_by(d, by="g", **mode)) for d in (two, eight)]
+        assert sent[0] == sent[1] <= 10, sent
+
+
+class TestQuotedNames:
+    """Names reach the SQL text as backtick-quoted identifiers and as
+    hex-encoded literals, so no character in a column or group-key name can
+    change the statement; the temp view it reads is dropped, also when
+    analysis fails."""
+
+    KEY = "k`e'y\\ {g}.é"
+    COL = "v`a'l\\ {x}.ü"
+
+    def test_names_round_trip(self, spark):
+        from pyspark.errors import AnalysisException
+
+        from dataverifyr_spark import describe_by
+
+        df = spark.createDataFrame(
+            [("a", 1.0, "p"), ("a", 1.0, "q"), ("b", 2.0, None)], "k string, v double, s string"
+        ).toDF(self.KEY, self.COL, "s")
+        before = spark.catalog.listTables()
+        for approx in (False, True):
+            got = _by_var(describe(df, approx=approx))
+            assert list(got) == [self.KEY, self.COL, "s"]
+            col = got[self.COL]
+            assert (col["n"], col["n_distinct"], col["min"], col["max"]) == (3, 2, 1.0, 2.0)
+            assert col["most_frequent"] == "1 (2)"
+            out = describe_by(df, by=self.KEY, approx=approx, top_n=2)
+            assert out.columns[:2] == [self.KEY, "var"]
+            rows = {(r[0], r["var"]): r for r in out.collect()}
+            assert set(rows) == {("a", self.COL), ("a", "s"), ("b", self.COL), ("b", "s")}
+            assert (rows[("a", self.COL)]["n"], rows[("a", self.COL)]["mean"]) == (2, 1.0)
+            assert rows[("b", "s")]["n_na"] == 1
+        keyed_by_map = spark.createDataFrame([({"a": 1}, 1)], "m map<string,int>, v int")
+        with pytest.raises(AnalysisException):  # a map is no grouping key
+            describe_by(keyed_by_map, by="m")
+        assert spark.catalog.listTables() == before
+
+    def test_group_keys_named_like_top_k_columns(self, spark):
+        from dataverifyr_spark import describe_by
+
+        d = spark.createDataFrame(
+            [(1, 1, 2.0), (1, 1, 2.0), (1, 1, 3.0), (2, 1, 5.0)], "e int, rn int, x double"
+        )
+        got = {
+            (r["e"], r["rn"]): r["most_frequent"]
+            for r in describe_by(d, by=["e", "rn"], top_n=2).collect()
+        }
+        assert got == {(1, 1): "2 (2)", (2, 1): ""}

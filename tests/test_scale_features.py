@@ -1,5 +1,5 @@
-"""North-rule scale features: drift detection, resumable ledger, multimodal
-plumbing."""
+"""North-rule scale features: drift detection, resumable ledger, freshness,
+skew and schema drift."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from dataverifyr_spark import rule, ruleset
 from dataverifyr_spark.ledger import ValidationLedger
 from dataverifyr_spark.operators.drift import drift_check, histogram, psi
-from dataverifyr_spark.operators.multimodal import extract_media_features
 
 
 class TestDrift:
@@ -159,67 +158,6 @@ class TestLedger:
         row = led.results("rr").collect()[0]
         implied = row["batch_rows_per_s"] * row["batch_wall_s"]
         assert abs(implied - 500) <= 5  # rounding tolerance only
-
-
-class TestMultimodal:
-    def test_feature_extraction_plumbing(self, spark):
-        rows = [("m1", bytes(range(64))), ("m2", b"\x89PNG" + bytes(60)), ("m3", None)]
-        df = spark.createDataFrame(rows, "media_id string, bytes binary")
-        out = {r["media_id"]: r for r in extract_media_features(df, feature_dim=8).collect()}
-        assert out["m1"]["n_bytes"] == 64
-        assert len(out["m1"]["feature"]) == 8
-        assert out["m2"]["format_guess"] == "png"
-        assert out["m3"]["n_bytes"] is None and out["m3"]["feature"] is None
-
-    def test_pluggable_feature_extractor_contract(self, spark):
-        """r6 (VERDICT #5): a registered production extractor (stand-in for
-        an embedding model) must flow through the identical mapInPandas
-        plumbing — same schema, same NULL handling — and the default must
-        restore on deregistration."""
-        from dataverifyr_spark.operators.multimodal import (
-            default_feature_extractor,
-            register_feature_extractor,
-        )
-
-        rows = [("m1", bytes(range(64))), ("m2", None)]
-        df = spark.createDataFrame(rows, "media_id string, bytes binary")
-
-        # locally-defined fns cloudpickle BY VALUE into the closure — the
-        # shape a production model wrapper uses
-        def _unit_feature(blob, fmt, dim):
-            return [1.0] * dim
-
-        def _neg_feature(blob, fmt, dim):
-            return [-1.0] * dim
-
-        register_feature_extractor(_unit_feature)
-        try:
-            out = {r["media_id"]: r for r in extract_media_features(df, feature_dim=4).collect()}
-            assert out["m1"]["feature"] == [1.0, 1.0, 1.0, 1.0]
-            assert out["m2"]["feature"] is None  # NULL blobs bypass the fn
-        finally:
-            register_feature_extractor(None)
-
-        # default restored
-        out2 = {r["media_id"]: r for r in extract_media_features(df, feature_dim=4).collect()}
-        assert out2["m1"]["feature"] == default_feature_extractor(bytes(range(64)), None, 4)
-
-        # explicit per-call fn beats the registry
-        out3 = {
-            r["media_id"]: r
-            for r in extract_media_features(df, feature_dim=4, feature_fn=_neg_feature).collect()
-        }
-        assert out3["m1"]["feature"] == [-1.0, -1.0, -1.0, -1.0]
-
-        with pytest.raises(TypeError):
-            register_feature_extractor(42)
-
-    def test_sniff_detects_annexb(self):
-        from dataverifyr_spark.operators.h264 import make_h264_stream
-        from dataverifyr_spark.operators.multimodal import _sniff
-
-        assert _sniff(make_h264_stream(64, 48, 3)) == "h264-annexb"
-        assert _sniff(b"\x00\x00\x01\x65abc") == "h264-annexb"
 
 
 class TestFreshness:

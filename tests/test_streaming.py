@@ -424,7 +424,9 @@ class TestDefinitionTimeErrors:
     query is defined, before ``start()``, on every streaming surface."""
 
     @pytest.mark.parametrize("expr", ["value >= (", "no_such_col > 0"])
-    @pytest.mark.parametrize("surface", ["check_stream", "cumulative", "windowed_sink"])
+    @pytest.mark.parametrize(
+        "surface", ["check_stream", "cumulative", "windowed_sink", "ledger"]
+    )
     def test_bad_rule_raises_before_start(self, spark, stream_input, tmp_path, surface, expr):
         from dataverifyr_spark.streaming import (
             check_stream_cumulative,
@@ -440,10 +442,29 @@ class TestDefinitionTimeErrors:
                 check_stream(sdf, rules, "ts")
             elif surface == "cumulative":
                 check_stream_cumulative(sdf, rules, by="source")
+            elif surface == "ledger":
+                validate_stream_to_ledger(
+                    sdf, rules, "source", str(tmp_path / "ledger"), str(tmp_path / "ckpt")
+                )
             else:
                 validate_stream_windowed_to_sink(
                     sdf, rules, "ts", str(tmp_path / "sink"), str(tmp_path / "ckpt")
                 )
+
+    def test_ledger_refuses_uniqueness_rule(self, spark, stream_input, tmp_path):
+        """validate_stream_to_ledger runs the rule-kind guard when the query
+        is defined: a uniqueness rule is refused, not run per micro-batch."""
+        sdf = spark.readStream.schema("ts timestamp, value double, source string").parquet(
+            f"{stream_input}/f*"
+        )
+        with pytest.raises(ValueError, match="uniqueness rules are aggregation rules"):
+            validate_stream_to_ledger(
+                sdf,
+                ruleset(rule("value >= 0"), unique_rule("source")),
+                "source",
+                str(tmp_path / "ledger"),
+                str(tmp_path / "ckpt"),
+            )
 
 
 class TestLateDataAccounting:

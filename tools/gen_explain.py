@@ -107,14 +107,14 @@ assert "BroadcastNestedLoopJoin" not in vplan, vplan
 assert "BroadcastHashJoin" in vplan, vplan
 sections.append(("Vs-reference audio (broadcast clip_id join -> ONE dual-decode ArrowEvalPython -> fused agg)", vplan))
 
-# describe_by — a declarative grouped aggregate + in-plan explode unpivot,
+# describe_by — a declarative grouped aggregate + in-plan inline unpivot,
 # with exact n_distinct/median from the value-count frame; a K-group profile
 # must not plan K jobs, a driver loop or a row-replicating Expand
 prof = dv.describe_by(li.select("l_returnflag", "l_quantity", "l_tax"), by="l_returnflag")
 dplan = cap(prof)
 assert "HashAggregate" in dplan and "Generate" in dplan, dplan
 assert "Expand" not in dplan, dplan
-sections.append(("describe_by per-partition profile (groupBy agg + value-count frame for exact n_distinct/median, explode unpivot in-plan — no Expand, no per-group jobs)", dplan))
+sections.append(("describe_by per-partition profile (groupBy agg + value-count frame for exact n_distinct/median, inline unpivot in-plan — no Expand, no per-group jobs)", dplan))
 
 # round 4: H.264 container probe — one ArrowEvalPython (header walk), fused agg
 from dataverifyr_spark.operators.h264 import h264_videos_table
