@@ -7,11 +7,11 @@ capture), :325 (fail = tests - pass); R/data_column.R:204-275 (schema rows),
 
 Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
 
-* All expression rules are fused into ONE ``df.agg`` pass: ``count(*)`` plus
-  one conditional sum per rule (plus coercion-watch sums for warn synthesis).
-  N rules ⇒ 1 job, 1 scan — the reference's own batched-describe path
-  (R/describe.R:329-422) pushed to its logical conclusion.  At 100 TB this is
-  the difference between N full-table scans and one.
+* All expression rules are fused into ONE aggregate pass: ``count(*)`` plus
+  one conditional sum per rule (plus a coercion-watch sum for warn
+  synthesis).  N rules ⇒ 1 job, 1 scan — the reference's own batched-describe
+  path (R/describe.R:329-422) pushed to its logical conclusion.  At 100 TB
+  this is the difference between N full-table scans and one.
 * Before launching anything, each rule is resolved against the schema with a
   zero-row ``df.select`` — analysis errors (missing column, bad call) become
   error rows (pass=0, fail=tests) without aborting the job, matching
@@ -25,16 +25,15 @@ Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
   ``_reference_counts``) — never a collected ``isin`` list, which would cap
   ref size at driver memory.  Uniqueness rules evaluate as one key-only
   groupBy count (``_uniqueness_keys``).
-* ``check_data`` runs ONE Spark action: each reference or uniqueness rule
-  is a one-row subtree cross-joined (1×1, no keys) onto the fused
-  aggregate, so the scheduler runs their stages side by side.  Rules run
-  one by one only when that action raises (see ``check_data``).
-* ``check_data_by(by=[cols])`` returns a distributed per-group summary (one
-  row per group × rule) via the same fused aggregation under ``groupBy`` —
-  the north_rule's "per-partition pass/fail rows" — without collecting.
-  Each rule kind has one evaluator taking the group keys: ``check_data``
-  calls it with none and collects, ``check_data_by`` with the user's keys
-  and unions the results.
+* One builder, ``_summary``, makes every rule's summary rows: the fused
+  aggregate unpivoted to one row per rule, unioned with one frame per
+  reference or uniqueness rule.  ``check_data`` collects it with no group
+  keys, as ONE Spark action whose rule stages the scheduler runs side by
+  side; rules run one by one, through the same builder, only when that
+  action raises (see ``check_data``).
+* ``check_data_by(by=[cols])`` is the same builder under the user's keys: a
+  distributed per-group summary (one row per group × rule) — the
+  north_rule's "per-partition pass/fail rows" — without collecting.
 """
 
 from __future__ import annotations
@@ -94,8 +93,7 @@ class CheckDataError(RuntimeError):
 @dataclass
 class _Compiled:
     rule: Rule
-    pred: Column | None
-    watchers: list[Column]
+    res: CompileResult | None  # expression rules only
     error: str
 
 
@@ -151,15 +149,22 @@ def _analysis_errors(df: DataFrame, cols: Sequence[Column]) -> list[Exception | 
     return errors
 
 
-def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
-    """Compile and analyze every rule now, so a bad rule (unparsable
-    expression, missing column) becomes an error row rather than a failed
-    fused job (R/check_data.R:301-315)."""
-    staged: list[tuple[Rule, Exception | CompileResult]] = []
+def _compile_all(
+    df: DataFrame, rules: list[Rule], datasets: Mapping[str, DataFrame]
+) -> list[_Compiled]:
+    """Compile and analyze every expression rule, and check every counted
+    rule's inputs, now: a bad rule (unparsable expression, missing column or
+    dataset) becomes an error rather than a failed job
+    (R/check_data.R:301-315)."""
+    staged: list[tuple[Rule, Exception | CompileResult | None]] = []
     for r in rules:
         try:
-            staged.append((r, compile_rule_predicate(r)))
-        except Exception as exc:  # ExprError and friends — compile-time
+            if isinstance(r, (ReferenceRule, UniquenessRule)):
+                _check_inputs(df, r, datasets)
+                staged.append((r, None))
+            else:
+                staged.append((r, compile_rule_predicate(r)))
+        except Exception as exc:  # ExprError, ValueError and friends — compile-time
             staged.append((r, exc))
     analysis = iter(
         _analysis_errors(df, [res.column for _, res in staged if isinstance(res, CompileResult)])
@@ -168,15 +173,35 @@ def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
     for r, res in staged:
         err = next(analysis) if isinstance(res, CompileResult) else res
         if err is None:
-            out.append(_Compiled(r, res.column, res.coercion_watchers, ""))
+            out.append(_Compiled(r, res, ""))
         else:
-            out.append(_Compiled(r, None, [], _strip_error(err)))
+            out.append(_Compiled(r, None, _strip_error(err)))
     return out
+
+
+def _q(name: str) -> str:
+    """A backtick-quoted SQL identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _s(text: str) -> str:
+    """A SQL string literal as hex-encoded UTF-8: a non-NULL constant that
+    ``spark.sql.parser.escapedStringLiterals`` does not change."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
 
 
 def _hits(pred: Column, alias: str) -> Column:
     """Sum of rows where ``pred`` is TRUE (NULL counts as not)."""
     return F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(alias)
+
+
+def _reject_key_clash(caller: str, by_cols: Sequence[str], outputs: Sequence[str]) -> None:
+    clash = [c for c in by_cols if c in outputs]
+    if clash:
+        raise ValueError(
+            f"{caller}: group key(s) {clash} collide with the output columns "
+            f"{', '.join(outputs)}; rename them first"
+        )
 
 
 def _safe_alias(columns: Sequence[str], base: str) -> str:
@@ -320,12 +345,7 @@ def _schema_rows(
 # ---------------------------------------------------------------------------
 
 
-def _null_key(cols: Sequence[str]) -> Column:
-    """TRUE when any of ``cols`` is NULL."""
-    return reduce(or_, [F.col(c).isNull() for c in cols])
-
-
-def _sum_counts(counted: DataFrame, by_cols: list[str], ok: Column, cnt: str) -> DataFrame:
+def _sum_counts(counted: DataFrame, ok: Column, cnt: str, by_cols: list[str]) -> DataFrame:
     """``by…, tests, pass`` from a frame of pre-aggregated ``cnt`` counts:
     tests = Σ cnt, pass = Σ cnt where ``ok``, per group of ``by_cols`` (one
     global row when there are none)."""
@@ -333,6 +353,21 @@ def _sum_counts(counted: DataFrame, by_cols: list[str], ok: Column, cnt: str) ->
         F.sum(F.col(cnt)).alias("tests"),
         F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
     )
+
+
+def _check_inputs(df: DataFrame, r: Rule, datasets: Mapping[str, DataFrame]) -> None:
+    """Raise a ValueError when a counted rule names a dataset or column that
+    is not there — before any plan is built, so the message names the rule's
+    own input rather than an analysis error."""
+    if isinstance(r, ReferenceRule):
+        if r.ref_dataset not in datasets:
+            raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
+        if r.ref_col not in datasets[r.ref_dataset].columns:
+            raise ValueError(f"reference column '{r.ref_col}' not in dataset '{r.ref_dataset}'")
+    elif isinstance(r, UniquenessRule):
+        missing = [c for c in r.unique_cols if c not in df.columns]
+        if missing:
+            raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
 
 
 def _reference_counts(
@@ -361,14 +396,9 @@ def _reference_counts(
     groups like any other value (count preserved) and still reads as a
     non-hit.
     """
-    if r.ref_dataset not in datasets:
-        raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
-    ref = datasets[r.ref_dataset]
-    if r.ref_col not in ref.columns:
-        raise ValueError(f"reference column '{r.ref_col}' not in dataset '{r.ref_dataset}'")
     ref_alias = _safe_alias(df.columns, "__dvfy_ref_val")
     cnt = _safe_alias(df.columns, "__cnt")
-    ref_vals = ref.select(F.col(r.ref_col).alias(ref_alias)).distinct()
+    ref_vals = datasets[r.ref_dataset].select(F.col(r.ref_col).alias(ref_alias)).distinct()
     proj = list(dict.fromkeys([*by_cols, r.local_col]))
     local = df.select(*proj).groupBy(*proj).agg(F.count(F.lit(1)).alias(cnt))
     joined = local.join(ref_vals, local[r.local_col] == F.col(ref_alias), "left")
@@ -377,7 +407,7 @@ def _reference_counts(
         ok = ok | F.col(r.local_col).isNull()
     if r.negate:
         ok = ~ok
-    return _sum_counts(joined, by_cols, ok, cnt)
+    return _sum_counts(joined, ok, cnt, by_cols)
 
 
 def _uniqueness_keys(
@@ -385,7 +415,7 @@ def _uniqueness_keys(
 ) -> tuple[DataFrame, Column, str]:
     """``(grouped, ok, cnt)`` for one uniqueness rule: ONE key-only
     ``groupBy(by + keys)`` → ``cnt`` rows per key, and ``ok``, the verdict
-    on every row of a key.  Its counts sum per group in ``_rule_counts``
+    on every row of a key.  Its counts sum per group in ``_summary``
     (tests = Σ key counts, pass = rows of ``ok`` keys, so uniqueness is
     judged WITHIN each group; with no keys a single-row reduce), and
     ``uniqueness_violations`` semi-joins the keys that are not ``ok``.  The
@@ -395,37 +425,69 @@ def _uniqueness_keys(
     its rows' keys, so the NULL-key test reads the group columns.  allow_na
     rescues NULL-key rows FIRST, negate LAST (the reference-rule flag
     order)."""
-    missing = [c for c in r.unique_cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
+    _check_inputs(df, r, {})
     cnt = _safe_alias(df.columns, "__cnt")
     keys = list(dict.fromkeys([*by_cols, *r.unique_cols]))
     grouped = df.select(*keys).groupBy(*keys).agg(F.count(F.lit(1)).alias(cnt))
     ok = F.col(cnt) == 1
     if r.allow_na:
-        ok = ok | _null_key(r.unique_cols)
+        ok = ok | reduce(or_, [F.col(c).isNull() for c in r.unique_cols])
     if r.negate:
         ok = ~ok
     return grouped, ok, cnt
 
 
-def _split_rules(rules: Ruleset) -> tuple[list[Rule], list[Rule]]:
-    """(expression rules, counted rules) — counted rules are the reference
-    rules then the uniqueness rules, each in ruleset order: the order of
-    their summary rows."""
-    expr_rules = [r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))]
-    counted = [r for r in rules if isinstance(r, ReferenceRule)]
-    counted += [r for r in rules if isinstance(r, UniquenessRule)]
-    return expr_rules, counted
+def _in_row_order(rules: Ruleset) -> list[Rule]:
+    """Expression rules, then reference rules, then uniqueness rules, each
+    in ruleset order: the order of their summary rows."""
+    return sorted(
+        rules, key=lambda r: (isinstance(r, UniquenessRule), isinstance(r, ReferenceRule))
+    )
 
 
-def _rule_counts(
-    df: DataFrame, r: Rule, datasets: Mapping[str, DataFrame], by_cols: list[str]
+def _summary(
+    df: DataFrame,
+    compiled: Mapping[int, _Compiled],
+    datasets: Mapping[str, DataFrame],
+    by_cols: list[str],
+    indexed: bool = False,
 ) -> DataFrame:
-    if isinstance(r, ReferenceRule):
-        return _reference_counts(df, r, datasets, by_cols)
-    grouped, ok, cnt = _uniqueness_keys(df, r, by_cols)
-    return _sum_counts(grouped, by_cols, ok, cnt)
+    """``by…, name, expr, tests, pass, fail``: one row per group × rule of
+    ``compiled`` (keyed by summary-row position).  Expression rules share
+    ONE ``groupBy(by).agg``, unpivoted in-plan by an ``inline`` of per-rule
+    structs; each counted rule unions on its own frame.  Projections are SQL
+    text, one py4j call each rather than one per expression.  ``indexed``
+    adds ``__rule``, the key, and ``__warned``, the rows on which a coercion
+    watcher fired; Catalyst does not prune an ``inline``'s outputs, so only
+    the callers that read them build them."""
+
+    def fields(i: int, r: Rule, tests: str, passed: str, warned: str) -> list[str]:
+        out = [f"{_s(r.name)} AS name", f"{_s(r.expr)} AS expr", f"{tests} AS tests"]
+        out += [f"{passed} AS pass", f"{tests} - {passed} AS fail"]
+        return out + [f"{i} AS __rule", f"{warned} AS __warned"] if indexed else out
+
+    keys = [_q(c) for c in by_cols]
+    parts: list[DataFrame] = []
+    aggs, structs = [F.count(F.lit(1)).alias("__tests")], []
+    for i, c in compiled.items():
+        r = c.rule
+        if c.res is not None:  # an expression rule: columns of the shared aggregate
+            aggs.append(_hits(c.res.column, f"__p{i}"))
+            warned = "0L"
+            if indexed and c.res.coercion_watchers:
+                aggs.append(_hits(reduce(or_, c.res.coercion_watchers), f"__w{i}"))
+                warned = f"__w{i}"
+            structs.append(f"struct({', '.join(fields(i, r, '__tests', f'__p{i}', warned))})")
+        else:  # a counted rule: a frame of its own
+            if isinstance(r, ReferenceRule):
+                counts = _reference_counts(df, r, datasets, by_cols)
+            else:
+                counts = _sum_counts(*_uniqueness_keys(df, r, by_cols), by_cols)
+            parts.append(counts.selectExpr(*keys, *fields(i, r, "tests", "pass", "0L")))
+    if structs:
+        grouped = df.groupBy(*by_cols).agg(*aggs)
+        parts.insert(0, grouped.selectExpr(*keys, f"inline(array({', '.join(structs)}))"))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
@@ -529,6 +591,9 @@ def check_data(
     Row-order contract (R/check_data.R:127-144): schema rows first, then
     row_rules in ruleset order, then reference rules, then uniqueness rules.
 
+    Every rule's row comes from one collected union, the keyless
+    ``check_data_by`` frame (``_summary``).
+
     ``timing`` semantics for the ``time`` column: the reference evaluates one
     scan per rule, so its per-rule times are real; this engine evaluates
     every rule in ONE Spark action, so true per-rule cost does not exist.
@@ -582,68 +647,47 @@ def check_data(
         for msg in schema_warns:
             warnings.warn(msg, stacklevel=2)
 
-    expr_rules, counted_rules = _split_rules(rules)
-    compiled = _compile_all(df, expr_rules)
-    # one single-row subtree per rule, keyed by its summary-row position i:
-    # an expression rule's columns of the fused aggregate, a counted rule's
-    # one-row frame, or the error that kept it from being built
-    aggs: dict[int, list[Column]] = {}
-    frames: dict[int, DataFrame] = {}
-    errors: dict[int, str] = {}
-    for i, c in enumerate(compiled):
-        if c.pred is None:
-            errors[i] = c.error
-        else:
-            aggs[i] = [_hits(c.pred, f"__p{i}")]
-            aggs[i] += [_hits(w, f"__w{i}_{j}") for j, w in enumerate(c.watchers)]
-    for i, r in enumerate(counted_rules, len(compiled)):
-        try:
-            frames[i] = _rule_counts(df, r, datasets, []).select(F.col("pass").alias(f"__p{i}"))
-        except Exception as exc:  # missing dataset or column, analysis error
-            errors[i] = _strip_error(exc)
+    # every rule keyed by its summary-row position i
+    compiled = _compile_all(df, _in_row_order(rules), datasets)
+    built = {i: c for i, c in enumerate(compiled) if not c.error}
+    errors = {i: c.error for i, c in enumerate(compiled) if c.error}
 
     # no explicit column-pruning select: Catalyst prunes the scan (parquet
     # ReadSchema / InMemoryTableScan) to the union of referenced columns on
     # its own, and an extra select only adds an analysis pass (measured 1.7x
     # slower — on CACHED inputs, where analysis overhead dominates; on cold
     # parquet the select is merely redundant, Catalyst prunes either way)
-    count = F.count(F.lit(1)).alias("__tests")
-    values: dict[int, dict[str, Any]] = {}
+    values: dict[int, Any] = {}
     times: dict[int, float] = {}
-    tests: int | None = None
     warn_before = udf_warnings.snapshot()
-    if timing == "shared":
-        # ONE action: the counted frames cross-join (1×1, no keys) onto the
-        # fused aggregate, and the scheduler runs their stages side by side
+    if timing == "shared" and built:
+        # ONE action collects every rule's row; the scheduler runs the
+        # counted rules' stages side by side
         t0 = _time.perf_counter()
         try:
-            fused = df.agg(count, *[a for cols in aggs.values() for a in cols])
-            wide = reduce(DataFrame.crossJoin, frames.values(), fused).collect()[0].asDict()
+            rows = _summary(df, built, datasets, [], indexed=True).collect()
         except Exception as exc:  # a rule failed at runtime: each runs alone below
             if _CANCELLED in str(exc):
                 raise
         else:
-            tests = wide["__tests"]
-            values = dict.fromkeys([*aggs, *frames], wide)
-            share = (_time.perf_counter() - t0) / max(len(values), 1)
-            times = dict.fromkeys(values, share)
-    if tests is None:
+            values = {row["__rule"]: row for row in rows}
+            times = dict.fromkeys(values, (_time.perf_counter() - t0) / len(rows))
+    if not values:
         # each rule alone: a runtime failure (ANSI divide by zero, a failed
         # join-key cast) becomes the error row of the rule that raised, and
         # under timing="per_rule" each rule reports its own job's wall time
-        for i in sorted([*aggs, *frames]):
+        for i, c in built.items():
             t1 = _time.perf_counter()
             try:
-                frame = frames[i] if i in frames else df.agg(count, *aggs[i])
-                values[i] = frame.collect()[0].asDict()
-                tests = values[i].get("__tests") if tests is None else tests
+                values[i] = _summary(df, {i: c}, datasets, [], indexed=True).collect()[0]
             except Exception as exc:
                 if _CANCELLED in str(exc):
                     raise
                 errors[i] = _strip_error(exc)
             times[i] = _time.perf_counter() - t1
-        if tests is None:
-            tests = df.count()  # no rule read the source: a failing source raises here
+    # a counted rule's sums are NULL over no rows; when no rule read the
+    # source, a failing source raises in df.count()
+    tests = (next(iter(values.values()))["tests"] or 0) if values else df.count()
 
     # executor-side warnings raised inside UDF batches during these jobs,
     # attributed to the rules whose expressions call the warning function
@@ -653,26 +697,21 @@ def check_data(
         fn_warns.setdefault(fn, []).append(msg)
 
     rule_rows: list[dict[str, Any]] = []
-    for i, r in enumerate([*expr_rules, *counted_rules]):
+    for i, c in enumerate(compiled):
+        r = c.rule
         if i in errors:
             # error row: pass=0, fail=tests (R/check_data.R:301-315)
             rule_rows.append(_result_row(r, tests, 0, error=errors[i], elapsed=times.get(i, 0.0)))
             continue
         row = values[i]
-        warns: list[str] = []
-        if any(v for k, v in row.items() if k.startswith(f"__w{i}_")):
-            warns.append(_COERCION_WARN)
-        if fn_warns and i in aggs:
-            try:
-                called = get_called_functions(r.expr)
-            except ExprError:
-                called = []
-            for fn in called:
+        warns = [_COERCION_WARN] if row["__warned"] else []
+        if fn_warns and c.res is not None:  # compiled, so it parses
+            for fn in get_called_functions(r.expr):
                 warns.extend(m for m in fn_warns.get(fn, ()) if m not in warns)
         # unique messages joined with ", " exactly like the reference's
         # get_warnings (R/check_data.R: paste(unique(out), collapse = ", "))
         rule_rows.append(
-            _result_row(r, tests, row[f"__p{i}"] or 0, warn=", ".join(warns), elapsed=times[i])
+            _result_row(r, tests, row["pass"] or 0, warn=", ".join(warns), elapsed=times[i])
         )
 
     all_rows = schema_rows + rule_rows
@@ -740,8 +779,10 @@ def check_data_by(
 ) -> DataFrame:
     """Per-group pass/fail summary — stays distributed (no collect).
 
-    Every rule kind is evaluated by the same function as in ``check_data``,
-    here with ``by`` as the group keys (``check_data`` is the no-key case).
+    The summary frame comes from the builder ``check_data`` collects
+    (``_summary``), here with ``by`` as the group keys (``check_data`` is
+    the no-key case).  A key named like an output column (``name``,
+    ``expr``, ``tests``, ``pass``, ``fail``) raises a ValueError.
     Reference (FK) rules are supported when ``datasets`` supplies the lookup
     tables: each becomes ONE key-only projection → distinct-ref left join →
     the same groupBy aggregation (payload bytes never join), and its rows
@@ -769,9 +810,12 @@ def check_data_by(
     if isinstance(rules, Rule):
         rules = ruleset(rules)
     by_cols = [by] if isinstance(by, str) else list(by)
+    _reject_key_clash("check_data_by", by_cols, ["name", "expr", "tests", "pass", "fail"])
 
-    expr_rules, counted_rules = _split_rules(rules)
-    if datasets is None and any(isinstance(r, ReferenceRule) for r in counted_rules):
+    ordered = _in_row_order(rules)
+    if not ordered:
+        raise ValueError("no rules for check_data_by")
+    if datasets is None and any(isinstance(r, ReferenceRule) for r in ordered):
         raise ValueError(
             "ruleset contains reference rules; pass datasets={'name': ref_df, ...} "
             "to check_data_by (they would otherwise be silently dropped)"
@@ -779,43 +823,11 @@ def check_data_by(
 
     # a bad rule raises (unparsable expression, missing dataset or column):
     # the _by contract has no error-row channel
-    parts: list[DataFrame] = []
-    if expr_rules:
-        compiled = _compile_all(df, expr_rules)
-        bad = [f"'{c.rule.name}' ({c.rule.expr}): {c.error}" for c in compiled if c.pred is None]
-        if bad:
-            raise ValueError("check_data_by: bad rule(s) " + "; ".join(bad))
-        grouped = df.groupBy(*by_cols).agg(
-            F.count(F.lit(1)).alias("__tests"),
-            *[_hits(c.pred, f"__p{i}") for i, c in enumerate(compiled)],
-        )
-        structs = [
-            F.struct(
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                F.col("__tests").alias("tests"),
-                F.col(f"__p{i}").alias("pass"),
-                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-            )
-            for i, r in enumerate(expr_rules)
-        ]
-        parts.append(grouped.select(*by_cols, F.inline(F.array(*structs))))
-
-    for r in counted_rules:
-        parts.append(
-            _rule_counts(df, r, datasets or {}, by_cols).select(
-                *by_cols,
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                "tests",
-                "pass",
-                (F.col("tests") - F.col("pass")).alias("fail"),
-            )
-        )
-
-    if not parts:
-        raise ValueError("no rules for check_data_by")
-    return reduce(DataFrame.unionByName, parts)
+    compiled = _compile_all(df, ordered, datasets or {})
+    bad = [f"'{c.rule.name}' ({c.rule.expr}): {c.error}" for c in compiled if c.error]
+    if bad:
+        raise ValueError("check_data_by: bad rule(s) " + "; ".join(bad))
+    return _summary(df, dict(enumerate(compiled)), datasets or {}, by_cols)
 
 
 def check_data_by_file(
@@ -910,10 +922,8 @@ def reference_violations(
                          NULL local never matches, so it passes)
     negate + allow_na:   ok = !(in_set | is_na) → violators = set hits ∪ NULLs
     """
-    if r.ref_dataset not in datasets:
-        raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
-    ref = datasets[r.ref_dataset]
-    ref_vals = ref.select(F.col(r.ref_col).alias(r.local_col)).distinct()
+    _check_inputs(df, r, datasets)
+    ref_vals = datasets[r.ref_dataset].select(F.col(r.ref_col).alias(r.local_col)).distinct()
     if r.negate:
         out = df.join(ref_vals, on=r.local_col, how="left_semi")
         if r.allow_na:

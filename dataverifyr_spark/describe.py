@@ -44,6 +44,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .check import _local_result_df, _q, _reject_key_clash, _s, stamp_file_col
+
 __all__ = ["describe", "describe_by", "DESCRIBE_SCHEMA"]
 
 DESCRIBE_SCHEMA = T.StructType(
@@ -82,17 +84,6 @@ def _friendly_type(dt: T.DataType) -> str:
     if isinstance(dt, T.StringType):
         return "character"
     return dt.simpleString()
-
-
-def _q(name: str) -> str:
-    """A backtick-quoted SQL identifier (embedded backticks doubled)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _s(text: str) -> str:
-    """A SQL string literal as hex-encoded UTF-8: a non-NULL constant that
-    ``spark.sql.parser.escapedStringLiterals`` does not change."""
-    return f"CAST(X'{text.encode().hex()}' AS STRING)"
 
 
 def _value_expr(c: str, dt: T.DataType) -> str:
@@ -358,8 +349,6 @@ def describe(
         rows.append(tuple(r[c] for c in DESCRIBE_SCHEMA.names))
     # one-partition LocalRelation: collecting or writing the profile starts
     # no Python worker (see check._local_result_df)
-    from .check import _local_result_df
-
     return _local_result_df(df.sparkSession, rows, DESCRIBE_SCHEMA)
 
 
@@ -392,6 +381,7 @@ def describe_by(
     for c in by_cols:
         if c not in df.columns:
             raise ValueError(f"by column {c!r} not in DataFrame")
+    _reject_key_clash("describe_by", by_cols, DESCRIBE_SCHEMA.names)
     fields = [f for f in df.schema.fields if f.name not in by_cols]
     return _profile(df, by_cols, fields, fast, approx, top_n, digits, skip_ones)
 
@@ -417,8 +407,6 @@ def describe_by_file(
     distribution went sideways" without a per-file driver loop.  Use
     ``approx=True`` at corpus scale (KLL median + HLL distinct, same
     sketches as :func:`describe`)."""
-    from .check import stamp_file_col
-
     stamped = stamp_file_col(df, file_col, basename, caller="describe_by_file")
     return describe_by(
         stamped,

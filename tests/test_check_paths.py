@@ -128,7 +128,7 @@ class TestJobBudget:
     races the join's shuffle stages — the same check_data_by plan ran 5 or
     6 jobs — so the budget is counted with that conversion off."""
 
-    CHECK_DATA_JOBS = 9
+    CHECK_DATA_JOBS = 8
     CHECK_DATA_BY_JOBS = 8
 
     def test_check_data(self, job_ids, frames, no_runtime_broadcast):
@@ -152,6 +152,25 @@ class TestJobBudget:
             for _ in range(2)
         ]
         assert counts == [self.CHECK_DATA_BY_JOBS] * 2
+
+
+def test_check_data_plan_is_one_union(frames, collected_plans):
+    """check_data collects one union of the rules' summary frames: no
+    one-row frame is cross-joined onto another."""
+    df, ref = frames
+    check_data({"main": df, "c": ref}, _rules(False, False))
+    (plan,) = collected_plans
+    assert "Union" in plan
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("key", ["name", "expr", "tests", "pass", "fail"])
+def test_group_key_colliding_with_output_raises(spark, key):
+    """A group key named like one of check_data_by's own columns would give
+    the result two columns of that name."""
+    df = spark.createDataFrame([(1, 2)], f"`{key}` int, v int")
+    with pytest.raises(ValueError, match=rf"group key\(s\) \['{key}'\] collide"):
+        check_data_by(df, ruleset(rule("v > 0")), by=key)
 
 
 def test_jobs_keep_callers_group_and_tags(spark, job_ids, frames):

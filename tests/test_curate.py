@@ -81,6 +81,14 @@ class TestCurate:
         out2 = curate_clips(clips_table(spark, 30))
         assert [c for c in out2.columns] == list(clips_table(spark, 1).columns)
 
+    def test_curate_rejects_falsy_invalid_dedup_mode(self, spark):
+        from dataverifyr_spark.audio import clips_table, curate_clips
+
+        clips = clips_table(spark, 8)
+        for bad in ("", 0, 1, "fuzzy"):
+            with pytest.raises(ValueError, match="dedup_captions"):
+                curate_clips(clips, dedup_captions=bad)
+
 
 class TestVsProbeQualityParity:
     def test_quality_trio_equal_on_both_probe_paths(self, spark):

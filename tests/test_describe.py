@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 import dataverifyr_spark as dv
 from dataverifyr_spark import describe
+from dataverifyr_spark.describe import DESCRIBE_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -335,6 +336,16 @@ class TestDescribeBy:
         assert {r["n"] for r in res} == {2, 3}
         with pytest.raises(ValueError, match="not in DataFrame"):
             describe_by(df, by="nope")
+
+    @pytest.mark.parametrize("key", DESCRIBE_SCHEMA.names)
+    def test_group_key_colliding_with_output_raises(self, spark, key):
+        """A group key named like one of describe's own columns would give
+        the result two columns of that name."""
+        from dataverifyr_spark import describe_by
+
+        d = spark.createDataFrame([(1, 2.0)], f"`{key}` int, v double")
+        with pytest.raises(ValueError, match=rf"group key\(s\) \['{key}'\] collide"):
+            describe_by(d, by=key)
 
 
 def _stats_frame(spark):

@@ -2,6 +2,7 @@
 
 import pytest
 
+import dataverifyr_spark as dv
 from dataverifyr_spark import check_data, filter_fails, rule, ruleset
 from dataverifyr_spark.fixtures import cars
 
@@ -234,3 +235,8 @@ class TestViolationExamples:
         with contextlib.redirect_stdout(buf):
             ex.explain(True)
         assert "WindowGroupLimit" in buf.getvalue()
+
+    def test_violation_examples_rejects_column_collision(self, spark):
+        df = spark.createDataFrame([(0, 1)], "v int, example_rank int")
+        with pytest.raises(ValueError, match="example_rank"):
+            dv.violation_examples(dv.ruleset(dv.rule("v > 0")), df)

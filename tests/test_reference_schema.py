@@ -200,6 +200,25 @@ class TestReferenceViolations:
         )
         assert [r["carrier"] for r in out.collect()] == ["AA"]
 
+    @pytest.mark.parametrize(
+        "dataset,col,msg",
+        [
+            ("nope", "carrier_id", "reference dataset 'nope' not provided"),
+            ("carriers", "nope", "reference column 'nope' not in dataset 'carriers'"),
+        ],
+    )
+    def test_missing_dataset_or_column(self, spark, dataset, col, msg):
+        """reference_violations checks its inputs as check_data does: the
+        same message, raised instead of reported as an error row."""
+        from dataverifyr_spark.check import reference_violations
+        from dataverifyr_spark import reference_rule as rr
+
+        r = rr("carrier", dataset, col)
+        datasets = {"flights": flights(spark), "carriers": carriers(spark)}
+        with pytest.raises(ValueError, match=msg):
+            reference_violations(datasets["flights"], r, datasets)
+        assert check_data(datasets, ruleset(r)).collect()[0]["error"] == msg
+
     def test_counts_match_check_data(self, spark):
         from dataverifyr_spark.check import reference_violations
         from dataverifyr_spark import reference_rule as rr

@@ -4,6 +4,7 @@ skew and schema drift."""
 import pytest
 from pyspark.sql import functions as F
 
+import dataverifyr_spark as dv
 from dataverifyr_spark import rule, ruleset
 from dataverifyr_spark.ledger import ValidationLedger
 from dataverifyr_spark.operators.drift import drift_check, histogram, psi
@@ -394,3 +395,16 @@ class TestLedgerIncremental:
         led = ValidationLedger(spark, "/tmp/never-written-ledger")
         with _pytest.raises(ValueError, match="file-based"):
             led.run_incremental(df, dv.ruleset(dv.rule("x >= 0")), run_id="r")
+
+    def test_run_incremental_uses_guarded_stamp(self, tmp_path, spark):
+        """run_incremental must route through stamp_file_col (raising on a
+        file_col collision like every *_by_file path) instead of a bare
+        input_file_name() withColumn."""
+        from dataverifyr_spark.ledger import ValidationLedger
+
+        src = str(tmp_path / "src")
+        spark.range(10).withColumn("v", F.lit(1)).write.parquet(src)
+        df = spark.read.parquet(src)
+        led = ValidationLedger(spark, str(tmp_path / "ledger"))
+        with pytest.raises(ValueError, match="collides"):
+            led.run_incremental(df, dv.ruleset(dv.rule("v > 0")), run_id="r", file_col="v")
